@@ -61,22 +61,21 @@ object SparkEntry {
           pmod(col("_pri"), lit(8)).as("severity"))
         .filter(col("facility").isNotNull)
         .orderBy("conv_id", "turn_idx")),
-    "q04_kv_probe" -> ((s, dir) => {
-      val (sy, _) = Pipeline.bases(s, dir)
-      sy.select(col("conv_id"), col("turn_idx"),
-        kvv("date_time").as("date_time"),
-        kvv("dos_attack_event").as("dos_attack_event"),
-        kvv("severity").as("severity_kv"),
-        kvv("hostname").as("hostname_kv"))
-        .orderBy("conv_id", "turn_idx")
-    }),
+    "q04_kv_probe" -> ((s, dir) =>
+      Pipeline.parsedBase(Pipeline.transcriptsClean(s, dir), Transcripts.utcOffsets(s))
+        .filter(col("fmt") === "Syslog")
+        .select(col("conv_id"), col("turn_idx"),
+          kvv("date_time").as("date_time"),
+          kvv("dos_attack_event").as("dos_attack_event"),
+          kvv("severity").as("severity_kv"),
+          kvv("hostname").as("hostname_kv"))
+        .orderBy("conv_id", "turn_idx")),
     "q05_attacks" -> ((s, dir) =>
       Pipeline.attacksCorrelated(s, dir).orderBy("conv_id", "turn_idx")),
     "q06_stats" -> ((s, dir) =>
       Pipeline.statsRecords(s, dir).orderBy("conv_id", "turn_idx")),
-    // unified family-pruned path: explodedAll(families=traffic) renders
-    // ONLY the traffic branch per row (identical plan cost to the old
-    // dedicated bases() select, same oracle)
+    // family-pruned path: explodedAll(families=traffic) renders ONLY the
+    // traffic branch per row
     "q07_traffic" -> ((s, dir) =>
       Pipeline.trafficRecords(s, dir).orderBy("conv_id", "turn_idx")),
     "q08_sink_counts" -> ((s, dir) =>

@@ -27,8 +27,6 @@ object Lineage {
   final case class Entry(partition: String, rows: Long, watermark: String, committed: Boolean)
   final case class Manifest(snapshotId: String, source: String, entries: Seq[Entry])
 
-  val Partitions: Seq[String] = Seq("attacks", "attack_mitigation_stats", "traffic_stats")
-
   /** Deterministic snapshot identity for an input table state (the stand-in
     * for an Iceberg snapshot id): digest of the source path, amplification
     * and row count.
@@ -78,11 +76,11 @@ object Lineage {
                               lifeAgg: DataFrame, outRoot: String,
                               partition: String): Entry = {
     import graft.operators.Pipeline
-    val part0 = back.filter(col("record_type") === partition).drop("record_type")
+    val part0 = back.filter(col("record_type") === partition)
     val part =
-      if (partition == Pipeline.Attacks) Pipeline.applyLifecycleToAttacks(part0, lifeAgg)
+      if (partition == Pipeline.Attacks) Pipeline.applyLifecycle(part0, lifeAgg)
       else part0
-    part.write.mode("overwrite").parquet(s"$outRoot/record_type=$partition")
+    part.drop("record_type").write.mode("overwrite").parquet(s"$outRoot/record_type=$partition")
     val agg = spark.read.parquet(s"$outRoot/record_type=$partition")
       .agg(count("*"), max("ts")).collect().head
     Entry(partition, agg.getLong(0), Option(agg.get(1)).map(_.toString).getOrElse(""),
@@ -112,7 +110,7 @@ object Lineage {
       .map(_.entries.filter(_.committed).map(e => e.partition -> e).toMap)
       .getOrElse(Map.empty)
     var entries = prior
-    val todo = Partitions.filter(p => limitTo.forall(_.contains(p)) && !prior.contains(p))
+    val todo = Router.FinalPartitions.filter(p => limitTo.forall(_.contains(p)) && !prior.contains(p))
     if (todo.nonEmpty) {
       val staged = s"$outRoot/_staged"
       val t = Pipeline.healthFilter(store.table(spark, dir, rep),
@@ -124,11 +122,11 @@ object Lineage {
       todo.foreach { p =>
         entries = entries + (p -> commitPartition(spark, back, lifeAgg, outRoot, p))
         writeManifest(outRoot, Manifest(snap, s"$dir x$rep",
-          Partitions.flatMap(entries.get)))
+          Router.FinalPartitions.flatMap(entries.get)))
       }
       Router.rmrf(java.nio.file.Paths.get(staged))
     }
-    Manifest(snap, s"$dir x$rep", Partitions.flatMap(entries.get))
+    Manifest(snap, s"$dir x$rep", Router.FinalPartitions.flatMap(entries.get))
   }
 
   /** Resume a killed run: recompute ONLY partitions without a committed
@@ -136,10 +134,4 @@ object Lineage {
     */
   def resume(spark: SparkSession, dir: String, outRoot: String, rep: Int = 1): Manifest =
     route(spark, dir, outRoot, rep)
-
-  /** Read back the routed sinks (all partitions). */
-  def readRouted(spark: SparkSession, outRoot: String): DataFrame =
-    Partitions.map(p => spark.read.parquet(s"$outRoot/record_type=$p")
-        .withColumn("record_type", lit(p)))
-      .reduce(_.unionByName(_))
 }

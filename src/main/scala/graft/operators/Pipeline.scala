@@ -14,13 +14,14 @@ import graft.sources.Transcripts
   * (P3/P4) -> per-family normalize (P6-P12, D1-D7) -> explode (E1) -> route
   * by record_type (S5) -> stateful attack-lifecycle correlate (W3).
   *
-  * Each record family's normalization is a (column-name -> expression) list
-  * shared by two consumers: the per-family DataFrames (one filtered select
-  * each — what the Verify queries use) and the single-pass `records()`
-  * assembly, which evaluates ONE table scan, builds one struct per matched
-  * branch, explodes (the E1 generator), and resolves the W3 lifecycle with
-  * a single window shuffle on attack_id. At 100 TB that shape is one narrow
-  * pass over the data plus exactly one exchange before the sinks.
+  * There is ONE parse path, as in the reference (each wire format is parsed
+  * once, then branched on its event): `parsedBase` dispatches the format
+  * and runs the KV scan once per row, and `explodedAll` renders one struct
+  * per matched branch of the requested families and explodes them (E1).
+  * Each family's normalization is a (column-name -> expression) list that
+  * its branch struct renders. records(), Router, Lineage, streaming and the
+  * family queries all read these rows, and `applyLifecycle` is the one W3
+  * join: the per-episode lifecycle aggregate, broadcast onto the records.
   */
 object Pipeline {
 
@@ -64,52 +65,6 @@ object Pipeline {
 
   private def kvv(key: String): Column = element_at(col("kv"), key)
   private def dyn(key: String): Column = element_at(col("dyn"), key)
-
-  /** Shared syslog base: quote-strip (P1), one-pass KV scan (P3), PRI
-    * decomposition, J1 offset enrichment via broadcast join on the embedded
-    * device IP (the transcript-world analog of the socket peer host).
-    */
-  def syslogBase(transcripts: DataFrame, offsets: DataFrame): DataFrame = {
-    val msg = stripQuotes(col("text"))
-    transcripts
-      .filter(remoteLogFormat(col("text")) === "Syslog")
-      .withColumn("msg", msg)
-      .withColumn("kv", kvSyslog(col("msg")))
-      .withColumn("_pri", pri(col("text")))
-      .withColumn("facility", (col("_pri") / lit(8)).cast("int"))
-      .withColumn("severity", pmod(col("_pri"), lit(8)))
-      .withColumn("host", kvv("bigip_mgmt_ip"))
-      .join(broadcast(offsets), Seq("host"), "left")
-      .withColumn("offh", coalesce(col("utc_offset_h"), lit(0)))
-      .withColumn("evt", kvv("dos_attack_event"))
-      .withColumn("sy_utc", toUtcOrEmpty(kvv("date_time"), col("offh")))
-  }
-
-  /** CEF base: header split (P5), arity guard (F5), one-pass extension KV
-    * scan (P4), dynamic-label pairing (P7), ASM attack-type guard (F4),
-    * offset join on `dvc`.
-    */
-  def cefBase(transcripts: DataFrame, offsets: DataFrame): DataFrame = {
-    val spl = split(col("text"), "\\|")
-    transcripts
-      .filter(remoteLogFormat(col("text")) === "CEF")
-      .withColumn("spl", spl)
-      .filter(size(col("spl")) === 8) // bbn_cef.rb:28-62
-      .filter( // module dispatch + ASM attack-type guard (bbn_cef.rb:36-53)
-        element_at(col("spl"), 3) === "Advanced Firewall Module" ||
-          (element_at(col("spl"), 3) === "ASM" && element_at(col("spl"), 5) === "DOS L7 attack"))
-      .withColumn("kv", kvCef(element_at(col("spl"), 8)))
-      .withColumn("dyn", pairedLabels(col("kv")))
-      .withColumn("facility", lit(null).cast("int"))
-      .withColumn("severity", lit(null).cast("int"))
-      .withColumn("host", kvv("dvc"))
-      .join(broadcast(offsets), Seq("host"), "left")
-      .withColumn("offh", coalesce(col("utc_offset_h"), lit(0)))
-      .withColumn("astat", dyn("attack_status"))
-      .withColumn("cef_utc", toUtcOrEmpty(kvv("rt"), col("offh")))
-      .withColumn("cef_vn", dyn("virtual_name"))
-      .withColumn("cef_vs", dyn("Virtual Server"))
-  }
 
   // ---------------------------------------------------------------------
   // Family normalizations as shared (name -> column) lists
@@ -371,7 +326,7 @@ object Pipeline {
   // Branch conditions (format dispatch + per-family guards)
   // ---------------------------------------------------------------------
 
-  // `evt` is hoisted to a base column (syslogBase / parsedBase) so the five
+  // `evt` is hoisted to a parsedBase column so the five
   // branch dispatch probes share ONE map lookup per row instead of five
   // linear scans of the kv map (guide §4: eliminate duplicated expression
   // work in the hot path).
@@ -386,106 +341,6 @@ object Pipeline {
         "Cryptographic SYN Cookie", "Reaped Flow", "Active Flow", "Missed Flow")
   private def isAfm: Column = element_at(col("spl"), 3) === "Advanced Firewall Module"
   private def isAsm: Column = element_at(col("spl"), 3) === "ASM"
-
-  // ---------------------------------------------------------------------
-  // Per-family DataFrames (used by the Verify queries)
-  // ---------------------------------------------------------------------
-
-  private def famSelect(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
-    val keyed = Seq("conv_id" -> col("conv_id"), "turn_idx" -> col("turn_idx"), "ts" -> col("ts"))
-    val tail = Seq("facility" -> col("facility"), "severity" -> col("severity"))
-    df.select((keyed ++ cols ++ tail).map { case (n, c) => c.as(n) }: _*)
-  }
-
-  def syslogAttackStarts(syBase: DataFrame): DataFrame =
-    famSelect(syBase.filter(condSyStart), colsSyslogStart)
-
-  def syslogSyncookies(syBase: DataFrame): DataFrame =
-    famSelect(syBase.filter(condSySync), colsSyslogSync)
-
-  def cefAttackStarts(cef: DataFrame): DataFrame =
-    famSelect(cef.filter(isAfm && dyn("attack_status") === "Attack Started"), colsCefStart(afm = true))
-      .unionByName(
-        famSelect(cef.filter(isAsm && dyn("attack_status") === "Attack started"), colsCefStart(afm = false)))
-
-  def syslogSamples(syBase: DataFrame): DataFrame =
-    famSelect(syBase.filter(condSySample), colsSyslogSample)
-
-  def cefAfmSamples(cef: DataFrame): DataFrame =
-    famSelect(cef.filter(isAfm && dyn("attack_status") === "Attack Sampled"), colsCefAfmSample)
-
-  def cefAsmStats(cef: DataFrame): DataFrame =
-    famSelect(cef.filter(isAsm && dyn("attack_status")
-      .isin("Attack started", "Mitigation stats", "Mitigation changed")), colsCefAsmStats)
-
-  def syslogTrafficStats(syBase: DataFrame): DataFrame =
-    famSelect(syBase.filter(condTraffic), colsTraffic)
-
-  // ---------------------------------------------------------------------
-  // W3: attack-lifecycle correlation
-  // ---------------------------------------------------------------------
-
-  /** Stop/end events (zero-emission in the reference; they only mutate ES).
-    * Three producers: syslog Attack Stopped (bbn_syslog.rb:242-324), CEF/AFM
-    * Attack Stopped — which rescans the raw message with the SYSLOG regex
-    * (bbn_cef.rb:530-614, the latent format mismatch replicated verbatim) —
-    * and CEF/ASM Attack ended (bbn_cef.rb:915-993). attack_id 0 rows are
-    * dropped (the `!= 0` guard before the ES round-trip).
-    */
-  def attackStops(syBase: DataFrame, cef: DataFrame): DataFrame = {
-    val syStops = syBase
-      .filter(condSyStop)
-      .select(
-        coalesce(kvv("dos_attack_id").cast("long"), lit(0L)).as("attack_id"),
-        toUtcOrEmpty(kvv("date_time"), col("offh")).as("stop_utc"),
-        col("ts"))
-    val afmStops = cef
-      .filter(isAfm && dyn("attack_status") === "Attack Stopped")
-      .withColumn("sykv", kvSyslog(col("text")))
-      .select(
-        coalesce(element_at(col("sykv"), "dos_attack_id").cast("long"), lit(0L)).as("attack_id"),
-        toUtcOrEmpty(element_at(col("sykv"), "date_time"), col("offh")).as("stop_utc"),
-        col("ts"))
-    val asmStops = cef
-      .filter(isAsm && dyn("attack_status") === "Attack ended")
-      .select(
-        coalesce(dyn("attack_id").cast("long"), lit(0L)).as("attack_id"),
-        toUtcOrEmpty(kvv("rt"), col("offh")).as("stop_utc"),
-        col("ts"))
-    syStops.unionByName(afmStops).unionByName(asmStops)
-      .filter(col("attack_id") =!= 0L)
-  }
-
-  /** Batch MERGE replacement for the reference's per-stop synchronous ES
-    * search+update: a stop closes its attack iff exactly ONE attacks row
-    * carries that attack_id (hits.total==1 guard, bbn_syslog.rb:283-307);
-    * orphan stops and ambiguous ids are log-only no-ops. The last stop in
-    * stream order wins, matching sequential re-updates.
-    */
-  def correlate(attacks: DataFrame, stops: DataFrame): DataFrame = {
-    val counts = attacks.groupBy("attack_id").agg(count("*").as("n_same_id"))
-    val lastStop = stops.groupBy("attack_id")
-      .agg(expr("max_by(stop_utc, ts)").as("stop_utc"))
-    attacks
-      .join(counts, Seq("attack_id"), "left")
-      .join(lastStop, Seq("attack_id"), "left")
-      .withColumn("closed", col("n_same_id") === 1 && col("stop_utc").isNotNull)
-      .withColumn("attack_ongoing",
-        when(col("closed"), 0).otherwise(col("attack_ongoing")))
-      .withColumn("attack_end_date",
-        when(col("closed"), col("stop_utc")).otherwise(col("attack_end_date")))
-      .drop("n_same_id", "stop_utc", "closed")
-  }
-
-  def attacksAll(syBase: DataFrame, cef: DataFrame): DataFrame =
-    syslogAttackStarts(syBase)
-      .unionByName(syslogSyncookies(syBase))
-      .unionByName(cefAttackStarts(cef))
-
-  def statsAll(syBase: DataFrame, cef: DataFrame): DataFrame =
-    syslogSamples(syBase)
-      .unionByName(cefAfmSamples(cef))
-      .unionByName(cefAsmStats(cef))
 
   // ---------------------------------------------------------------------
   // Single-pass assembly: E1 explode + S5 routing + W3 in one scan
@@ -592,12 +447,14 @@ object Pipeline {
     else ex
   }
 
-  /** The shared parse base: format dispatch, quote strip, one-pass KV scan,
-    * dynamic-label pairing, PRI decomposition, offset enrichment. Every
-    * withColumn here is a lazy projection — consumers that never reference
-    * `dyn` or `facility` pay nothing for them (column pruning).
+  /** The one parse base over (health-filtered) transcripts: format
+    * dispatch (`fmt`; Unknown rows dropped), quote strip, one-pass KV scan,
+    * CEF arity/module guard (`cef_ok`), dynamic-label pairing, PRI
+    * decomposition, offset enrichment. Every withColumn here is a lazy
+    * projection — consumers that never reference `dyn` or `facility` pay
+    * nothing for them (column pruning).
     */
-  private def parsedBase(t: DataFrame, offsets: DataFrame): DataFrame = {
+  def parsedBase(t: DataFrame, offsets: DataFrame): DataFrame = {
     val fmt = remoteLogFormat(col("text"))
     val isSy = col("fmt") === "Syslog"
     // `spl` is CEF-only work: guard it so syslog rows (the majority) never
@@ -737,24 +594,29 @@ object Pipeline {
       when(col("cef_ok") && isAsm && afmStatus === "Attack ended",
         fact(dyn("attack_id"), isAtk = false, col("cef_utc"))))
     // Every fact branch requires the event/status value to be one of four
-    // literal phrases, and each of those phrases appears VERBATIM in the raw
-    // text of any row whose parsed kv/dyn value equals it (the KV scan only
-    // extracts substrings of the message; the quote strip removes characters
-    // around, never inside, these tokens — see Payloads' L(...) literals).
+    // literal phrases, and each of those phrases appears VERBATIM in the
+    // quote-stripped text of any row whose parsed kv/dyn value equals it:
+    // both KV scans only extract substrings of what they scan (the syslog
+    // scan reads the quote-stripped msg, the CEF scan the raw text), and
+    // deleting quotes keeps every quote-free substring of the raw text
+    // contiguous. Matching the raw text instead would miss a syslog value
+    // with a quote inside it (`Attack" Started` parses to Attack Started).
     // `contains` is therefore a sound SUPERSET prefilter: it can keep extra
     // rows (harmless — their branch conditions still fail) but can never
     // drop a fact row. It turns the second full-corpus KV parse into a
     // cheap substring scan plus a KV parse of only the start/stop rows
     // (guide §2.3: cut the expensive work before it runs, not after).
     val needles = Seq("Attack Started", "Attack Stopped", "Attack started", "Attack ended")
-    val pre = t.filter(needles.map(col("text").contains(_)).reduce(_ || _))
+    val stripped = stripQuotes(col("text"))
+    val pre = t.filter(needles.map(stripped.contains(_)).reduce(_ || _))
     parsedBase(pre, offsets)
       .select(col("ts"), explode(filter(facts, b => b.isNotNull)).as("f"))
       .select(col("f.attack_id"), col("f.is_atk"), col("ts"), col("f.device_utc_time"))
   }
 
-  /** Same facts, extracted from a staged routed read-back (Router/Lineage
-    * phase 2): a column-pruned columnar read instead of a re-parse.
+  /** Same facts, extracted from exploded rows that still carry their
+    * `_stop` rows — Router/Lineage's staged read-back (a column-pruned
+    * columnar read instead of a re-parse) or a streamed micro-batch.
     */
   def lifeFactsFromStaged(back: DataFrame): DataFrame =
     back.filter(col("record_type").isin(Attacks, Stop) && col("attack_id") =!= 0L)
@@ -772,63 +634,24 @@ object Pipeline {
         max(when(!col("is_atk"), struct(col("ts"), col("device_utc_time"))))
           .getField("device_utc_time").as("_stop_utc"))
 
-  /** The lifecycle aggregate is per-EPISODE (one row per attack_id), orders
-    * of magnitude smaller than the per-turn records side, so it is joined as
-    * an explicit broadcast: the statically planned shape was a SortMergeJoin
-    * whose Exchange carried all ~57 wide record columns (AQE could only
-    * downgrade it to a local shuffle read AFTER paying the map-side shuffle
-    * write of the wide rows). Broadcasting plans zero exchanges on the wide
-    * side (guide §3.1). Scale knob: `spark.graft.lifecycle.broadcast`
-    * (default true). On a cluster where distinct attack episodes outgrow a
-    * broadcast relation (~10^8+ episodes / the 8 GB broadcast cap), set it
-    * to false to fall back to the shuffled join — the cutover is episode
-    * count, not corpus bytes, so 100 TB of turns with bounded episodes
-    * stays on the broadcast path.
-    */
-  private def maybeBroadcast(lifeAgg: DataFrame): DataFrame =
-    if (lifeAgg.sparkSession.conf.get("spark.graft.lifecycle.broadcast", "true").toBoolean)
-      broadcast(lifeAgg)
-    else lifeAgg
-
-  /** Join the lifecycle aggregate back onto mixed-family records: a stop
-    * closes its attack iff exactly ONE attacks row carries that attack_id
-    * (hits.total==1, bbn_syslog.rb:283-307).
+  /** The W3 lifecycle join, the one place a stop closes its attack: an
+    * attacks row closes iff exactly ONE attacks row carries its attack_id
+    * and a stop for that id exists (hits.total==1, bbn_syslog.rb:283-307).
+    * Rows of other families that share the id are left alone (the
+    * `record_type` guard), so attacks-only callers (Router, Lineage,
+    * streaming) keep or restore `record_type` and drop it afterwards.
     *
-    * Join shape: shuffled-HASH with the per-episode aggregate as the build
-    * side (hint) instead of the old sort-merge — the ~57-column records side
-    * still exchanges once but no longer SORTS (guide §3.1: prefer hash when
-    * one side is small per partition; the build side is episodes, not
-    * turns). The exchange is kept deliberately even though a broadcast
-    * would be cheaper here: the declared q05/q11 queries end in a global
-    * orderBy, and a range sort over an UNSTAGED map-only child evaluates
-    * the whole parse twice (range-bound sampling pass + shuffle pass) — the
-    * exchange is the materialization barrier that keeps the parse at one
-    * pass. Router/Lineage/Streaming, which never global-sort above the
-    * join, take the broadcast path (applyLifecycleToAttacks).
+    * The aggregate is per-EPISODE (one row per attack_id), orders of
+    * magnitude smaller than the per-turn records, so it is always
+    * broadcast: the wide records side (~57 columns) never shuffles, where
+    * the statically planned SortMergeJoin exchanged and sorted it (guide
+    * §3.1). Broadcast size grows with distinct episodes, not corpus bytes.
     */
   def applyLifecycle(records: DataFrame, lifeAgg: DataFrame): DataFrame = {
     val closed = col("record_type") === Attacks &&
       col("_n_starts") === 1 && col("_stop_utc").isNotNull
-    val aggSide =
-      if (records.sparkSession.conf
-          .get("spark.graft.lifecycle.records.join", "broadcast") == "shuffle_hash")
-        lifeAgg.hint("shuffle_hash")
-      else maybeBroadcast(lifeAgg)
     records
-      .join(aggSide, Seq("attack_id"), "left")
-      .withColumn("attack_ongoing", when(closed, 0).otherwise(col("attack_ongoing")))
-      .withColumn("attack_end_date",
-        when(closed, col("_stop_utc")).otherwise(col("attack_end_date")))
-      .drop("_n_starts", "_stop_utc")
-  }
-
-  /** applyLifecycle for an attacks-only frame (no record_type column —
-    * Router/Lineage commit paths, where the family is the partition dir).
-    */
-  def applyLifecycleToAttacks(atk: DataFrame, lifeAgg: DataFrame): DataFrame = {
-    val closed = col("_n_starts") === 1 && col("_stop_utc").isNotNull
-    atk
-      .join(maybeBroadcast(lifeAgg), Seq("attack_id"), "left")
+      .join(broadcast(lifeAgg), Seq("attack_id"), "left")
       .withColumn("attack_ongoing", when(closed, 0).otherwise(col("attack_ongoing")))
       .withColumn("attack_end_date",
         when(closed, col("_stop_utc")).otherwise(col("attack_end_date")))
@@ -869,21 +692,11 @@ object Pipeline {
       .sortWithinPartitions("conv_id", "turn_idx")
   }
 
-  /** (syslog base, CEF base) pair over the cleaned transcripts. */
-  def bases(spark: SparkSession, dir: String, rep: Int = 1,
-            store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): (DataFrame, DataFrame) = {
-    val t = transcriptsClean(spark, dir, rep, store)
-    val offsets = Transcripts.utcOffsets(spark)
-    (syslogBase(t, offsets), cefBase(t, offsets))
-  }
-
   /** Correlated attacks via the family-pruned records() path: one scan of
     * transcripts renders ONLY the four attack branches (F5Parse structs for
     * stats/traffic are never built), the narrow lifeFacts scan resolves W3,
-    * and this projects the attacks family's exact column set back out.
-    * Identical rows to the per-branch correlate(attacksAll, attackStops)
-    * shape (same family column lists feed recStruct and famSelect), pinned
-    * by the q05/q11 oracle.
+    * and this projects the attacks family's exact column set back out,
+    * pinned by the q05/q11 oracle.
     */
   def attacksCorrelated(spark: SparkSession, dir: String, rep: Int = 1,
                         store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame =
@@ -896,9 +709,7 @@ object Pipeline {
   /** Stats / traffic families off the family-pruned explode in ONE pass:
     * these families never receive the W3 lifecycle rewrite, so they skip
     * both the lifecycle join and every other family's branch structs.
-    * Identical rows to the per-branch statsAll/syslogTrafficStats unions
-    * (the same column lists feed recStruct and famSelect), pinned by the
-    * q06/q07 oracles.
+    * Pinned by the q06/q07 oracles.
     */
   def statsRecords(spark: SparkSession, dir: String, rep: Int = 1,
                    store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame =

@@ -71,8 +71,8 @@ object Router {
     // phase 2: lifecycle facts from a narrow read-back of the staged sinks
     val back = spark.read.parquet(staged)
     val lifeAgg = Pipeline.lifeAggOf(Pipeline.lifeFactsFromStaged(back))
-    Pipeline.applyLifecycleToAttacks(
-        back.filter(col("record_type") === Pipeline.Attacks).drop("record_type"), lifeAgg)
+    Pipeline.applyLifecycle(back.filter(col("record_type") === Pipeline.Attacks), lifeAgg)
+      .drop("record_type")
       .write.mode("overwrite").partitionBy("tool", "attack_severity")
       .parquet(s"$outRoot/record_type=attacks")
     phase("lifecycle rewrite")

@@ -340,16 +340,6 @@ object StreamingPipeline {
     batch.write.mode("overwrite").partitionBy("record_type")
       .parquet(s"$outRoot/batch_id=$batchId")
 
-  /** Narrow W3 lifecycle facts of one micro-batch — same extraction as
-    * Router.route's phase-2 staged read-back (Pipeline.lifeFactsFromStaged),
-    * applied to the in-flight batch before its `_stop` rows are dropped.
-    */
-  def batchLifeFacts(batch: DataFrame): DataFrame =
-    batch.filter(col("record_type").isin(Pipeline.Attacks, Pipeline.Stop) &&
-        col("attack_id") =!= 0L)
-      .select(col("attack_id"), (col("record_type") === Pipeline.Attacks).as("is_atk"),
-        col("ts"), col("device_utc_time"))
-
   /** Bucket count for the attack-keyed streamed sidecars. At 100 TB this is
     * sized so one bucket's attacks fit a target file size (Iceberg would
     * make it the table's bucket transform); here it only needs to exceed
@@ -395,7 +385,8 @@ object StreamingPipeline {
       .filter(col("abucket").isin(touched: _*))
       .withColumnRenamed("abucket", "rbucket")
       .drop("batch_id")
-    Pipeline.applyLifecycleToAttacks(attacks, Pipeline.lifeAggOf(facts))
+      .withColumn("record_type", lit(Pipeline.Attacks))
+    Pipeline.applyLifecycle(attacks, Pipeline.lifeAggOf(facts)).drop("record_type")
   }
 
   /** The streamed MERGE, incremental: rewrite ONLY the resolved-sink buckets
@@ -452,7 +443,9 @@ object StreamingPipeline {
         .withColumn("abucket", pmod(col("attack_id"), lit(buckets)).cast("int"))
         .write.mode("overwrite").partitionBy("abucket")
         .parquet(s"$outRoot/_attacks/batch_id=$batchId")
-      batchLifeFacts(b)
+      // the batch's narrow lifecycle facts, taken before its `_stop` rows
+      // are dropped (the same extraction as Router's staged read-back)
+      Pipeline.lifeFactsFromStaged(b)
         .withColumn("fbucket", pmod(col("attack_id"), lit(buckets)).cast("int"))
         .write.mode("overwrite").partitionBy("fbucket")
         .parquet(s"$outRoot/_lifefacts/batch_id=$batchId")

@@ -11,9 +11,12 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed attack_id join plans without an exchange on the bucketed sides") {
     val dir = "/root/testdata/sf0.001"
-    val (sy, cef) = Pipeline.bases(spark, dir)
-    val attacks = Pipeline.attacksAll(sy, cef).filter(col("attack_id") =!= 0L)
-    val stats = Pipeline.statsAll(sy, cef).filter(col("attack_id") =!= 0L)
+    val t = Pipeline.transcriptsClean(spark, dir)
+    val offsets = graft.sources.Transcripts.utcOffsets(spark)
+    def family(f: String) =
+      Pipeline.explodedAll(t, offsets, Set(f)).filter(col("attack_id") =!= 0L)
+    val attacks = family(Pipeline.Attacks)
+    val stats = family(Pipeline.Stats)
     Bucketing.persistBucketed(spark, attacks, stats)
 
     val rollup = Bucketing.bucketedRollup(spark)

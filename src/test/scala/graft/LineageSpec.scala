@@ -42,7 +42,7 @@ class LineageSpec extends SparkSpec {
       == attacksMtimes)
 
     // routed-row-count + per-turn payload equality vs a fresh one-shot run
-    val routed = Lineage.readRouted(spark, out)
+    val routed = graft.operators.Router.readRouted(spark, out)
     val oneShot = graft.operators.Pipeline.records(spark, dir)
     assert(routed.count() == oneShot.count())
     val key = Seq("record_type", "conv_id", "turn_idx", "remote_log_payload")

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, Intermediates, SimilarityOps}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.operators.{DedupOps, Intermediates, Pipeline, SimilarityOps}
 
 /** Focused pins for the round-6 optimization rewrites: each test checks the
   * NEW shape produces exactly the OLD shape's rows, on inputs built to
@@ -106,5 +108,39 @@ class OptimizationR06Spec extends SparkSpec {
     assert(facts.length == 2)
     assert(facts.forall(_.getLong(0) == 77L))
     assert(facts.map(_.getBoolean(1)).sorted.toSeq == Seq(false, true))
+  }
+
+  test("lifeFacts prefilter keeps start/stop facts whose phrase carries a quote") {
+    // the syslog KV scan reads the quote-stripped message, so a quote
+    // inside `Attack Started` still parses to the phrase: the prefilter
+    // must test the same stripped text, or the fact silently drops
+    val offsets = graft.sources.Transcripts.utcOffsets(spark)
+    def payload(aid: Int, evt: String, sec: Int) =
+      "<134>x b info tmm1: [hostname=b.lab bigip_mgmt_ip=172.16.21.41 " +
+        f"date_time=2015-03-22 10:00:$sec%02d dos_attack_id=$aid dos_attack_event=$evt " +
+        "severity=1 errdefs_msg_name=Network DoS Event]"
+    // 1-3 quotes at random positions after the `<134>` header (which the
+    // format dispatch reads before any strip)
+    def quoted(text: String): Gen[String] = for {
+      k <- Gen.choose(1, 3)
+      at <- Gen.listOfN(k, Gen.choose(5, text.length))
+    } yield at.sorted.reverse.foldLeft(text)((acc, i) => acc.patch(i, "\"", 0))
+    // n episodes, each one start and one stop, so a dropped fact of either
+    // kind changes that episode's aggregate row
+    val episodes: Gen[List[String]] = Gen.choose(3, 6).flatMap { n =>
+      Gen.sequence[List[String], String]((1 to n).flatMap(a => Seq(
+        payload(a, "Attack Started", a), payload(a, "Attack Stopped", 30 + a))).map(quoted))
+    }
+    (0 until 12).foreach { i =>
+      val seed = 7000L + i
+      val texts = episodes.pureApply(Gen.Parameters.default, Seed(seed))
+      val t = transcriptsOf(texts)
+      val viaScan = Pipeline.lifeAggOf(Pipeline.lifeFacts(t, offsets)).collect().toSet
+      val viaLive = Pipeline.lifeAggOf(
+        Pipeline.lifeFactsFromStaged(Pipeline.explodedAll(t, offsets))).collect().toSet
+      assert(viaScan == viaLive,
+        s"seed $seed: lifeFacts aggregate $viaScan != live-path aggregate $viaLive\n" +
+          texts.mkString("\n"))
+    }
   }
 }

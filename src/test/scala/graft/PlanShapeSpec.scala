@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.CreateArray
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.operators.Pipeline
 
 /** Plan-shape pins for the parse pipeline: the scan count and the explode
@@ -10,7 +13,7 @@ import graft.operators.Pipeline
   * (family pruning + narrow lifecycle facts), so regressions must fail a
   * spec, not wait for a bench run.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -57,16 +60,35 @@ class PlanShapeSpec extends SparkSpec {
 
   test("lifecycle join resolves as broadcast: the wide records never shuffle") {
     // the per-attack lifecycle aggregate is tiny (episodes, not turns) —
-    // AQE must land it as a broadcast join; a conf drift that turned this
-    // into a SortMergeJoin would shuffle the full-width records (the r2
-    // q11 regression class). Execute so the adaptive plan is FINAL.
-    val df = Pipeline.attacksCorrelated(spark, dir)
-    df.write.mode("overwrite").format("noop").save()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"lifecycle join is not broadcast:\n${plan.take(3000)}")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"wide records are being shuffled for a join:\n${plan.take(3000)}")
+    // it must land as a broadcast join; a change that turned this into a
+    // SortMergeJoin would shuffle the full-width records (the r2 q11
+    // regression class). Execute so the adaptive plan is FINAL.
+    def assertBroadcast(df: DataFrame): Unit = {
+      df.write.mode("overwrite").format("noop").save()
+      val finalPlan = df.queryExecution.executedPlan
+      val plan = finalPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"lifecycle join is not broadcast:\n${plan.take(3000)}")
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+        s"wide records are being shuffled for a join:\n${plan.take(3000)}")
+      // the streamed (records) side of every broadcast join reads its rows
+      // without a hash exchange; only the aggregate's build side may shuffle
+      val streamed = collect(finalPlan) {
+        case j: BroadcastHashJoinExec => if (j.buildSide == BuildRight) j.left else j.right
+      }
+      assert(streamed.nonEmpty)
+      streamed.foreach(s => assert(!s.toString.contains("Exchange hashpartitioning"),
+        s"hash exchange on the streamed side of a broadcast join:\n${s.toString.take(3000)}"))
+    }
+    // batch: the records() path behind q05/q11
+    assertBroadcast(Pipeline.attacksCorrelated(spark, dir))
+    // streaming: the incremental resolve over a small attacks sidecar
+    import graft.streaming.StreamingPipeline
+    val outPath = java.nio.file.Files.createTempDirectory("graft-resolve-join").toString
+    StreamingPipeline.writeRoutedBatch(outPath)(StreamingPipeline.streamRecordsAll(spark,
+      graft.sources.TranscriptStore.table(spark, dir)), 0L)
+    assertBroadcast(StreamingPipeline.incrementalResolveFrame(spark, outPath, 0 until 16, 16))
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   test("ivfTopK probe scan is partition-pruned to the probed buckets") {

@@ -17,13 +17,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
   }
 
-  def syBaseOf(texts: Seq[String]): DataFrame =
-    graft.operators.Pipeline.syslogBase(transcriptsOf(texts),
-      graft.sources.Transcripts.utcOffsets(spark))
-
-  def cefBaseOf(texts: Seq[String]): DataFrame =
-    graft.operators.Pipeline.cefBase(transcriptsOf(texts),
-      graft.sources.Transcripts.utcOffsets(spark))
+  /** One record family's rows from the live parse path (parsedBase ->
+    * explodedAll, what Router and streaming route) over raw payload texts.
+    */
+  def familyOf(family: String, texts: Seq[String]): DataFrame =
+    graft.operators.Pipeline.explodedAll(transcriptsOf(texts),
+      graft.sources.Transcripts.utcOffsets(spark), Set(family))
 
   def firstRow(df: DataFrame): Map[String, Any] = {
     val row = df.collect().head
