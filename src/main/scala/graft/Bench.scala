@@ -45,19 +45,7 @@ object Bench {
     Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR",
       Paths.get(sys.props("user.dir"), "BENCH").toString))
 
-  private def build(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    operators.Pipeline.configure(s)
-    s
-  }
+  private def build(cpus: Int): SparkSession = LocalSession(cpus, s"graft-bench-$cpus")
 
   private def time[T](f: => T): Double = {
     val t0 = System.nanoTime()

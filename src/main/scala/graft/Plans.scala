@@ -1,51 +1,55 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Diagnostic main: dump formatted physical plans for the load-bearing
-  * queries so plan regressions (lost pushdown, surprise shuffles, dropped
-  * broadcasts, codegen breaks) are visible at a glance.
+/** Diagnostic main: formatted physical plans, so plan regressions (lost
+  * pushdown, surprise shuffles, dropped broadcasts, codegen breaks) are
+  * visible without running the queries.
+  *
+  * Usage: runMain graft.Plans <sfDir>
+  *          prints the load-bearing queries' plans to stdout;
+  *        runMain graft.Plans <sfDir> <outDir> <tag> [query ...]
+  *          writes <outDir>/<query>_<tag>.txt for the given declared
+  *          queries (default: all), e.g. before/after plan pairs.
+  * Env: SPARK_GRAFT_CPUS (default 8) — master local[N], shuffle.partitions=N.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    operators.Pipeline.configure(spark)
+    def query(q: String): () => DataFrame = () => SparkEntry.queries(q)(spark, dir)
+    def plan(df: DataFrame): String = df.queryExecution.explainString(FormattedMode)
 
-    def show(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      println(s"\n========== $name ==========")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    if (args.length >= 3) {
+      val (outDir, tag, wanted) = (args(1), args(2), args.drop(3))
+      Files.createDirectories(Paths.get(outDir))
+      SparkEntry.queries.keys.toSeq.sorted.filter(n => wanted.isEmpty || wanted.contains(n))
+        .foreach { n =>
+          Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan(query(n)()))
+          println(s"wrote $outDir/${n}_$tag.txt")
+        }
+    } else {
+      val curated: Seq[(String, () => DataFrame)] = Seq(
+        "records (single-pass parse->route)" -> (() => operators.Pipeline.records(spark, dir)),
+        "attacksCorrelated (pruned branches + narrow facts scan)" ->
+          (() => operators.Pipeline.attacksCorrelated(spark, dir)),
+        "q15 attackRollup (one scan, window aggregates)" ->
+          (() => operators.Pipeline.attackRollup(spark, dir))) ++ Seq(
+        "q08_sink_counts" -> "", "q09_agg_facility" -> "", "q26_minhash_lsh" -> "",
+        "q27_ann_brute" -> "", "q45_ivf_ann" -> " (frozen quantizer serving path)",
+        "q71_dup_spans" -> " (positional index + island merge)",
+        "q72_strip_spans" -> " (span-removal rebuild)",
+        "q73_lm_score" -> " (stupid-backoff joins + ordered fold)",
+        "q77_dsir_weights" -> " (broadcast count vectors)",
+        "q79_curriculum" -> " (two-level rank)").map { case (q, note) => (q + note) -> query(q) }
+      curated.foreach { case (name, df) =>
+        println(s"\n========== $name ==========")
+        println(plan(df()))
+      }
     }
-
-    show("records (single-pass parse->route)", operators.Pipeline.records(spark, dir))
-    show("attacksCorrelated (pruned branches + narrow facts scan)",
-      operators.Pipeline.attacksCorrelated(spark, dir))
-    show("q15 attackRollup (one scan, window aggregates)",
-      operators.Pipeline.attackRollup(spark, dir))
-    show("q08_sink_counts", SparkEntry.queries("q08_sink_counts")(spark, dir))
-    show("q09_agg_facility", SparkEntry.queries("q09_agg_facility")(spark, dir))
-    show("q26_minhash_lsh", SparkEntry.queries("q26_minhash_lsh")(spark, dir))
-    show("q27_ann_brute", SparkEntry.queries("q27_ann_brute")(spark, dir))
-    show("q45_ivf_ann (frozen quantizer serving path)",
-      SparkEntry.queries("q45_ivf_ann")(spark, dir))
-    show("q71_dup_spans (positional index + island merge)",
-      SparkEntry.queries("q71_dup_spans")(spark, dir))
-    show("q72_strip_spans (span-removal rebuild)",
-      SparkEntry.queries("q72_strip_spans")(spark, dir))
-    show("q73_lm_score (stupid-backoff joins + ordered fold)",
-      SparkEntry.queries("q73_lm_score")(spark, dir))
-    show("q77_dsir_weights (broadcast count vectors)",
-      SparkEntry.queries("q77_dsir_weights")(spark, dir))
-    show("q79_curriculum (two-level rank)",
-      SparkEntry.queries("q79_curriculum")(spark, dir))
     spark.stop()
   }
 }

@@ -1,18 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch timing probe for individual queries. Not part of the contract. */
-object Dev {
+/** Offline training of the frozen ANN models: prints the trained
+  * centroids as Scala literals to paste into IvfModel / PqModel (the
+  * DuckDB oracle replays the same literals).
+  *
+  * Usage: runMain graft.TrainModels <sfDir> --train-pq | --train-ivf
+  */
+object TrainModels {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(32, "graft-train-models")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     if (args.lift(1).contains("--train-pq")) {
       // one-off: train the per-subspace product-quantizer codebooks and
@@ -33,7 +29,6 @@ object Dev {
         println("    ),")
       }
       println("  )")
-      spark.stop(); return
     }
     if (args.lift(1).contains("--train-ivf")) {
       // one-off: train the coarse quantizer and print it as Scala literals
@@ -47,30 +42,6 @@ object Dev {
           .mkString("    Array(", ",\n      ", "),"))
       }
       println("  )")
-      spark.stop(); return
-    }
-    args.drop(1).foreach { q =>
-      (1 to 2).foreach { r =>
-        // codegen compile-time deltas adjudicate whether a slow first run
-        // is janino/JIT compilation (one-time) or engine steady-state
-        import org.apache.spark.metrics.source.CodegenMetrics._
-        def cg(): (Long, Double) =
-          (METRIC_COMPILATION_TIME.getCount,
-           METRIC_COMPILATION_TIME.getSnapshot.getMean * METRIC_COMPILATION_TIME.getCount)
-        val (c0, m0) = cg()
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(q)(spark, dir).count()
-        val tc = (System.nanoTime() - t0) / 1e9
-        val (c1, m1) = cg()
-        spark.catalog.clearCache()
-        val t1 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
-        val te = (System.nanoTime() - t1) / 1e9
-        val (c2, m2) = cg()
-        spark.catalog.clearCache()
-        println(f"[time] $q run$r: count ${tc}%.1f s (rows=$n, ${c1 - c0} compiles ~${(m1 - m0) / 1000}%.1f s), " +
-          f"exec ${te}%.1f s (${c2 - c1} compiles ~${(m2 - m1) / 1000}%.1f s)")
-      }
     }
     spark.stop()
   }

@@ -22,10 +22,7 @@ object Bucketing {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = java.nio.file.Paths.get(
         spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(loc))
-        java.nio.file.Files.walk(loc)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
+      Router.rmrf(loc)
     }
     attacks.write.mode("overwrite")
       .bucketBy(buckets, "attack_id").sortBy("attack_id")

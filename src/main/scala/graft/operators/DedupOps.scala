@@ -741,8 +741,11 @@ object DedupOps {
     */
   def clustersFromEdgesStar(docs: DataFrame, cand: DataFrame,
                             maxIter: Int = 25): DataFrame = {
-    // undirected edge set, kept canonical (src < dst) between rounds;
-    // localCheckpoint per round truncates the iterative lineage (see
+    // undirected edge set, canonical (src < dst) from ingestion on: the
+    // round-0 star-forest test below is only sound for src < dst edges (a
+    // lone (5, 3) would pass it and label doc 3 with 5, not the component
+    // min), and candidate generators owe no orientation. localCheckpoint
+    // per round truncates the iterative lineage (see
     // clustersFromEdges). No input distinct: both in-repo candidate
     // generators already emit distinct pairs, and the rounds tolerate
     // duplicate input edges anyway (a duplicate cannot change a window
@@ -750,7 +753,8 @@ object DedupOps {
     // effect of dup input would be one extra confirming round — not a
     // wrong fixpoint. Dropping it saves a full exchange of the edge list
     // before round 1.
-    var edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    var edges = cand.select(least(col("doc_a"), col("doc_b")).as("src"),
+        greatest(col("doc_a"), col("doc_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .localCheckpoint(true)
 

@@ -201,7 +201,7 @@ object SimilarityOps {
       }.toDF("cid", "d2", "v")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // scalar assignment cost under the CURRENT centroids (driver fetch of
-      // a 1-row aggregate, same pattern as Lineage.commitPartition)
+      // a 1-row aggregate, same pattern as Lineage.route's per-partition read-back)
       costs += assigned.agg(sum("d2")).head().getDouble(0)
       // new centroid = per-(cell, dim) mean; the collect is k x dim rows —
       // the model, not data

@@ -17,9 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                     metadata — no data scan
   *
   * and the Lineage manifest's commit/resume contract maps onto Iceberg
-  * snapshot commits. Consumers that need resumability (Lineage.route,
-  * Router.route) take a TranscriptTable parameter defaulting to the
-  * parquet store, so the swap is a constructor argument, not a rewrite.
+  * snapshot commits. Router.route and Lineage.route take a TranscriptTable
+  * parameter defaulting to the parquet store, so the swap is a constructor
+  * argument, not a rewrite; Lineage.route keys its manifest on the given
+  * table's snapshotId, so a run resumes only against the table it started
+  * on.
   */
 trait TranscriptTable {
 

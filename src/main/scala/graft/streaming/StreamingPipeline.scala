@@ -4,16 +4,19 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import graft.operators.Pipeline
+import graft.operators.{Pipeline, Router}
 import graft.sources.Transcripts
 
 /** Structured Streaming variant of the pipeline (SURVEY.md §2.9).
   *
   * The stateless parse/normalize/explode is the SAME code as batch
   * (Pipeline.explodedAll — readStream swaps in transparently because the
-  * plan is narrow); what changes is the lifecycle resolution: batch uses a
-  * window over attack_id, streaming holds per-attack state in
-  * flatMapGroupsWithState (W3) and aggregates with watermarked windows (W1).
+  * plan is narrow); what changes is the lifecycle resolution: batch
+  * broadcasts the per-episode aggregate (Pipeline.lifeAggOf) into a join
+  * with the attacks rows, streaming holds per-attack state in
+  * flatMapGroupsWithState (W3) or merges each micro-batch's facts into
+  * bucketed sidecars (routeStream), and aggregates with watermarked
+  * windows (W1).
   */
 object StreamingPipeline {
 
@@ -123,7 +126,7 @@ object StreamingPipeline {
     spark.read.parquet(dirs.map(_.toString): _*)
       .distinct()
       .write.mode("overwrite").parquet(s"$stateDir/batch_id=compact-${epoch}g$gen")
-    dirs.foreach(d => graft.operators.Router.rmrf(d))
+    dirs.foreach(d => Router.rmrf(d))
   }
 
   // ---- W3 streaming lifecycle: flatMapGroupsWithState ----
@@ -348,28 +351,6 @@ object StreamingPipeline {
     */
   val DefaultAttackBuckets = 16
 
-  /** True iff `path` contains at least one parquet data file — the guard
-    * that keeps schema inference from throwing on a sink directory whose
-    * batches were all empty (e.g. only `_stop` rows routed so far).
-    */
-  private def hasParquet(path: String): Boolean = {
-    val root = java.nio.file.Paths.get(path)
-    java.nio.file.Files.exists(root) && {
-      val walk = java.nio.file.Files.walk(root)
-      // skip underscore-prefixed subtrees, mirroring Spark's hidden-path
-      // rule: a data file inside `_attacks`/`_resolved` must not make the
-      // MAIN `outRoot` read look non-empty
-      try walk.anyMatch { f =>
-        f.getFileName.toString.endsWith(".parquet") && {
-          val rel = root.relativize(f)
-          (0 until rel.getNameCount - 1)
-            .forall(i => !rel.getName(i).toString.startsWith("_"))
-        }
-      }
-      finally walk.close()
-    }
-  }
-
   /** The INCREMENTAL resolve frame: attacks and accumulated lifecycle facts
     * restricted (by PARTITION FILTER on their bucket dirs — plan-pinned in
     * PlanShapeSpec) to the buckets a micro-batch touched, joined through the
@@ -408,8 +389,8 @@ object StreamingPipeline {
     */
   def resolveAttacks(spark: SparkSession, outRoot: String,
                      touched: Seq[Int], buckets: Int = DefaultAttackBuckets): Unit = {
-    if (touched.isEmpty || !hasParquet(s"$outRoot/_attacks")) return
-    if (!hasParquet(s"$outRoot/_lifefacts")) return
+    if (touched.isEmpty || !Router.hasParquet(s"$outRoot/_attacks")) return
+    if (!Router.hasParquet(s"$outRoot/_lifefacts")) return
     incrementalResolveFrame(spark, outRoot, touched, buckets)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -450,7 +431,7 @@ object StreamingPipeline {
         .write.mode("overwrite").partitionBy("fbucket")
         .parquet(s"$outRoot/_lifefacts/batch_id=$batchId")
       // the touched-bucket set: a scalar probe over the batch (<= `buckets`
-      // distinct ints on the driver, the Lineage.commitPartition pattern)
+      // distinct ints on the driver, the pattern of Lineage.route's read-back)
       val touched = b
         .filter(col("record_type") === Pipeline.Attacks ||
           (col("record_type") === Pipeline.Stop && col("attack_id") =!= 0L))
@@ -469,12 +450,12 @@ object StreamingPipeline {
   def readRoutedStream(spark: SparkSession, outRoot: String): DataFrame = {
     val resolvedPath = s"$outRoot/_resolved/record_type=attacks"
     val rest =
-      if (hasParquet(outRoot)) Some(spark.read.parquet(outRoot)
+      if (Router.hasParquet(outRoot)) Some(spark.read.parquet(outRoot)
         .filter(col("record_type") =!= Pipeline.Attacks)
         .drop("batch_id"))
       else None
     val resolved =
-      if (hasParquet(resolvedPath)) Some(spark.read.parquet(resolvedPath)
+      if (Router.hasParquet(resolvedPath)) Some(spark.read.parquet(resolvedPath)
         .drop("rbucket")
         .withColumn("record_type", lit(Pipeline.Attacks)))
       else None

@@ -215,6 +215,32 @@ class DedupSpec extends SparkSpec {
     assert(prop == ss)
   }
 
+  test("star contraction labels match label propagation for edges in either orientation") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // sparse graphs on few nodes, each edge in a random orientation: mostly
+    // isolated edges and small trees, the inputs that look like a finished
+    // star forest before round 1 when an edge points from larger to smaller
+    val n = 10
+    val graph: Gen[List[(Long, Long)]] = Gen.choose(1, 5).flatMap(m =>
+      Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n - 1L)
+        b <- Gen.choose(0L, n - 1L).suchThat(_ != a)
+      } yield (a, b)))
+    val docs = (0L until n.toLong).map(i => (i, s"x $i")).toDF("doc_id", "text")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (0 until 12).foreach { i =>
+      val seed = 8000L + i
+      val es = graph.pureApply(Gen.Parameters.default, Seed(seed))
+      val edges = es.toDF("doc_a", "doc_b")
+      val star = labels(DedupOps.clustersFromEdgesStar(docs, edges))
+      // label propagation reads both directions of every edge: the reference
+      val prop = labels(DedupOps.clustersFromEdges(docs, edges))
+      assert(star == prop, s"seed $seed, edges $es")
+    }
+  }
+
   test("decontaminate flags docs overlapping the benchmark set; short docs never flag") {
     val docs = Seq(
       (0L, "alpha beta gamma delta epsilon"),     // benchmark (0 % 50 == 0)
