@@ -87,6 +87,71 @@ object DedupOps {
       .select(col("doc_id"), explode_outer(col("_codes")).as("shingle"))
       .filter(col("shingle").isNotNull)
 
+  /** Drops the rows of `idx` whose `keys` value occurs in more than `cap`
+    * rows: the stop-key preconditioning every candidate generator runs
+    * before pairing. A key held by f rows emits f^2/2 pairs, so one
+    * uncapped hot key is the thing that dies at 100 TB; the cap bounds
+    * every key's fan-out. Hot keys are few by definition, so the census is
+    * one narrow aggregate and the drop a broadcast anti-join: the index
+    * itself never shuffles for it.
+    *
+    * `cap == Int.MaxValue` (the exact contracts) returns `idx` unchanged:
+    * no census pass, since it could never drop anything. The census and
+    * the anti-join probe both read `idx`; `persist` caches it first, for a
+    * caller whose `idx` is an expensive subtree not already persisted.
+    */
+  private[operators] def dropHotKeys(idx: DataFrame, keys: Seq[String], cap: Int,
+                                     persist: Boolean = false): DataFrame =
+    if (cap == Int.MaxValue) idx
+    else {
+      val src = if (persist) Intermediates.persist(idx) else idx
+      val hot = src.groupBy(keys.map(col): _*).agg(count("*").as("_df"))
+        .filter(col("_df") > cap).select(keys.map(col): _*)
+      src.join(broadcast(hot), keys, "left_anti")
+    }
+
+  /** Every pair of `idx` rows that share their `keys` value, as columns
+    * `as._1` and `as._2` with the smaller `id` first. With no `carry` each
+    * side is the bare `id`; otherwise it is a struct of `id` and the
+    * `carry` columns, which ride through the pair (cosine scoring needs
+    * both embeddings).
+    *
+    * Two shapes, one pair multiset:
+    *   - `bounded` (a finite dropHotKeys cap, or groups small by
+    *     construction): one groupBy of the index, then the sorted id array
+    *     of each key expands into its a < b combinations. One exchange
+    *     instead of the self-join's two, with each group's array bounded.
+    *   - unbounded (the exact contracts): the streaming self-join. A hot
+    *     key in f rows would otherwise materialize an f^2-struct array as
+    *     ONE value (measured 2x slower at f <= 236, OPTIMIZATION_r06.md);
+    *     the join streams those pairs row by row.
+    *
+    * Precondition: `(keys, id)` rows are distinct. A repeated id within a
+    * key expands to an (x, x) pair and to repeated pairs that the strict
+    * `<` of the self-join never emits. Every caller's index guarantees it:
+    * shingle, fingerprint and band indexes are distinct per document,
+    * sourceOverlap takes `.distinct()`, and a vector has one sign bucket.
+    */
+  private[operators] def pairsSharingKey(idx: DataFrame, keys: Seq[String], id: String,
+                                         bounded: Boolean, as: (String, String),
+                                         carry: Seq[String] = Nil): DataFrame = {
+    val (a, b) = as
+    def side(c: String => Column): Column =
+      if (carry.isEmpty) c(id) else struct((id +: carry).map(c): _*)
+    if (bounded)
+      idx.groupBy(keys.map(col): _*)
+        .agg(sort_array(collect_list(side(col))).as("_ds"))
+        .select(explode(flatten(transform(col("_ds"), (x, i) =>
+          transform(slice(col("_ds"), i + lit(2), size(col("_ds"))),
+            y => struct(x.as(a), y.as(b)))))).as("_p"))
+        .select(col(s"_p.$a").as(a), col(s"_p.$b").as(b))
+    else
+      idx.as("x").join(idx.as("y"),
+          keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+            col(s"x.$id") < col(s"y.$id"))
+        .select(side(c => col(s"x.$c")).as(a), side(c => col(s"y.$c")).as(b))
+  }
+
   /** n-gram Jaccard near-dup pairs above `threshold`, via a frequency-capped
     * inverted shingle index:
     *
@@ -97,11 +162,8 @@ object DedupOps {
     *      At 100 TB this is the standard materialized shingle-index
     *      artifact (persist -> a parquet/Iceberg intermediate table).
     *   2. shingles with doc-frequency > `maxShingleDocFreq` are DROPPED
-    *      before the self-join (standard stop-shingle preconditioning): a
-    *      stop-shingle in f docs emits f^2 join rows, so one uncapped hot
-    *      shingle is the thing that dies at 100 TB; the cap bounds every
-    *      shingle's fan-out to maxShingleDocFreq^2. Hot shingles are few by
-    *      definition -> broadcast anti-join, no extra shuffle of the index.
+    *      before pairing (dropHotKeys: standard stop-shingle
+    *      preconditioning).
     *   3. sizes and intersections are both computed over the CAPPED shingle
     *      space, so the emitted jaccard is the similarity over
     *      discriminative shingles. Tradeoff (documented, standard): when
@@ -116,43 +178,13 @@ object DedupOps {
     */
   def jaccardPairs(docs: DataFrame, threshold: Double,
                    maxShingleDocFreq: Int = 500): DataFrame = {
-    val idx = Intermediates.persist(shingleIndex(docs))
-    // cap disabled (exact-Jaccard contract) -> no census pass at all: the
-    // frequency census + anti-join would be a full extra aggregate over the
-    // index that can never drop anything
-    val capped =
-      if (maxShingleDocFreq == Int.MaxValue) idx
-      else {
-        val hot = idx.groupBy("shingle").agg(count("*").as("_df"))
-          .filter(col("_df") > maxShingleDocFreq).select("shingle")
-        idx.join(broadcast(hot), Seq("shingle"), "left_anti")
-      }
-    val sizes = capped.groupBy("doc_id").agg(count("*").as("n_shingles"))
-    // Pair generation, shaped by whether the cap bounds per-shingle
-    // fan-out (measured A/B at sf0.1, see OPTIMIZATION_r06.md):
-    //   - CAPPED (the scale path): one groupBy of the index + sorted-array
-    //     combination expansion — one exchange instead of the self-join's
-    //     two (guide §2.4), with per-group arrays bounded by the cap.
-    //   - UNCAPPED (the q25 exact contract): keep the streaming self-join.
-    //     A hot shingle in f docs would materialize an f^2-struct array as
-    //     ONE value under the expansion (measured 2x slower at f<=236);
-    //     the join streams those pairs row-by-row through codegen.
-    // Both produce the identical candidate-pair multiset.
-    val inter = (
-      if (maxShingleDocFreq == Int.MaxValue)
-        capped.as("a").join(capped.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      else
-        capped.groupBy("shingle")
-          .agg(sort_array(collect_list(col("doc_id"))).as("_ds"))
-          .select(explode(flatten(transform(col("_ds"), (x, i) =>
-            transform(slice(col("_ds"), i + lit(2), size(col("_ds"))),
-              y => struct(x.as("doc_a"), y.as("doc_b")))))).as("_p"))
-          .select(col("_p.doc_a").as("doc_a"), col("_p.doc_b").as("doc_b"))
-      ).groupBy("doc_a", "doc_b")
+    val idx = dropHotKeys(Intermediates.persist(shingleIndex(docs)), Seq("shingle"),
+      maxShingleDocFreq)
+    val sizes = idx.groupBy("doc_id").agg(count("*").as("n_shingles"))
+    pairsSharingKey(idx, Seq("shingle"), "doc_id",
+        bounded = maxShingleDocFreq < Int.MaxValue, ("doc_a", "doc_b"))
+      .groupBy("doc_a", "doc_b")
       .agg(count("*").as("n_inter"))
-    inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "n_b"), "doc_b")
       .withColumn("jaccard",
@@ -318,51 +350,34 @@ object DedupOps {
     *
     * Scale shape: identical skeleton to jaccardPairs — the fingerprint
     * index is computed once and persisted, hot fingerprints (doc frequency
-    * > `maxFpDocFreq`, boilerplate by definition) are dropped by broadcast
-    * anti-join BEFORE the self-join so per-fingerprint fan-out is bounded
-    * by maxFpDocFreq^2, sizes are a narrow agg, and only (long, long) id
-    * pairs ever shuffle. The winnowed index is ~2/(w+1) the size of the
-    * full shingle index, so the whole candidate stage is proportionally
-    * cheaper than q25's at the same corpus.
+    * > `maxFpDocFreq`, boilerplate by definition) are dropped by
+    * dropHotKeys before pairing, sizes are a narrow agg, and only
+    * (long, long) id pairs ever shuffle. The winnowed index is ~2/(w+1)
+    * the size of the full shingle index, so the whole candidate stage is
+    * proportionally cheaper than q25's at the same corpus.
     *
     * Emits BOTH directions when both clear the threshold (a in b, b in a
     * — i.e. near-identical docs), which is exactly the degenerate case
     * symmetric dedup already catches; the asymmetric hits are the new
-    * information.
+    * information. The shared-fingerprint count is symmetric, so it is
+    * aggregated once per unordered pair and the two orientations (n_a and
+    * n_b swapped) are emitted after the aggregate.
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.8, w: Int = 4,
                        maxFpDocFreq: Int = 500): DataFrame = {
-    val idx = Intermediates.persist(winnowFingerprints(docs, w))
-    val capped =
-      if (maxFpDocFreq == Int.MaxValue) idx
-      else {
-        val hot = idx.groupBy("fp").agg(count("*").as("_df"))
-          .filter(col("_df") > maxFpDocFreq).select("fp")
-        idx.join(broadcast(hot), Seq("fp"), "left_anti")
-      }
-    val sizes = capped.groupBy("doc_id").agg(count("*").as("n_fp"))
-    // Pair generation split exactly as in jaccardPairs (capped -> single-
-    // exchange expansion, uncapped q62 contract -> streaming self-join),
-    // here emitting BOTH directions per combination (containment is
-    // asymmetric) — the same doc_a =!= doc_b row multiset either way.
-    val inter = (
-      if (maxFpDocFreq == Int.MaxValue)
-        capped.as("a").join(capped.as("b"),
-            col("a.fp") === col("b.fp") && col("a.doc_id") =!= col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      else
-        capped.groupBy("fp")
-          .agg(sort_array(collect_list(col("doc_id"))).as("_ds"))
-          .select(explode(flatten(flatten(transform(col("_ds"), (x, i) =>
-            transform(slice(col("_ds"), i + lit(2), size(col("_ds"))),
-              y => array(struct(x.as("doc_a"), y.as("doc_b")),
-                struct(y.as("doc_a"), x.as("doc_b")))))))).as("_p"))
-          .select(col("_p.doc_a").as("doc_a"), col("_p.doc_b").as("doc_b"))
-      ).groupBy("doc_a", "doc_b")
+    val idx = dropHotKeys(Intermediates.persist(winnowFingerprints(docs, w)), Seq("fp"),
+      maxFpDocFreq)
+    val sizes = idx.groupBy("doc_id").agg(count("*").as("n_fp"))
+    pairsSharingKey(idx, Seq("fp"), "doc_id",
+        bounded = maxFpDocFreq < Int.MaxValue, ("doc_a", "doc_b"))
+      .groupBy("doc_a", "doc_b")
       .agg(count("*").as("n_inter"))
-    inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_fp", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_fp", "n_b"), "doc_b")
+      .select(col("n_inter"), inline(array(
+        struct(col("doc_a"), col("doc_b"), col("n_a"), col("n_b")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"),
+          col("n_b").as("n_a"), col("n_a").as("n_b")))))
       .withColumn("containment",
         col("n_inter").cast("double") / col("n_a").cast("double"))
       .filter(col("containment") >= threshold)
@@ -465,14 +480,11 @@ object DedupOps {
     * instead of (df_delta + df_corpus)^2, and corpus-internal pairs (the
     * quadratic bulk, already resolved in previous rounds) are never
     * generated. With the corpus side bucketed by shingle, only the delta
-    * index shuffles. The same `maxShingleDocFreq` stop-shingle cap applies
-    * before the join (jaccardPairs' preconditioning; sizes are computed
-    * over the capped space on both sides so the ratio is consistent).
+    * index shuffles.
     */
   def incrementalDedup(docs: DataFrame,
                        corpusPred: Column = pmod(col("doc_id"), lit(10)) =!= 0,
-                       threshold: Double = 0.12,
-                       maxShingleDocFreq: Int = Int.MaxValue): DataFrame = {
+                       threshold: Double = 0.12): DataFrame = {
     val digest = coalesce(md5(col("text").cast("binary")), lit("NULL"))
     val corpusDig = docs.filter(corpusPred)
       .select(digest.as("_digest"), col("doc_id"))
@@ -481,14 +493,7 @@ object DedupOps {
     val exact = deltaDig.join(corpusDig, Seq("_digest"), "left")
       .select("doc_id", "exact_keeper")
 
-    val idx0 = Intermediates.persist(shingleIndex(docs))
-    val idx =
-      if (maxShingleDocFreq == Int.MaxValue) idx0
-      else {
-        val hot = idx0.groupBy("shingle").agg(count("*").as("_df"))
-          .filter(col("_df") > maxShingleDocFreq).select("shingle")
-        idx0.join(broadcast(hot), Seq("shingle"), "left_anti")
-      }
+    val idx = Intermediates.persist(shingleIndex(docs))
     val corpusIdx = idx.filter(corpusPred)
     val deltaIdx = idx.filter(!corpusPred)
     val sizes = idx.groupBy("doc_id").agg(count("*").as("n_sh"))
@@ -560,11 +565,11 @@ object DedupOps {
     *
     * Scale shape: the per-source DISTINCT index aggregates shingles down
     * to one row per (source, shingle) — the only pass over full text. The
-    * self-join fan-out per shingle is bounded by the number of SOURCES
+    * pair fan-out per shingle is bounded by the number of SOURCES
     * containing it (sources are few — shards/crawls — where documents are
     * billions), so the pair table is at most S^2 per shingle and the
     * result is S^2 rows. Size dims broadcast. The index persists for its
-    * three consumers (both join sides + sizes).
+    * two consumers (pairing + sizes).
     */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     val idx = Intermediates.persist(withShingles(docs)
@@ -572,16 +577,9 @@ object DedupOps {
       .filter(col("shingle").isNotNull)
       .distinct())
     val sizes = idx.groupBy("source").agg(count("*").as("n"))
-    // Single-exchange pair expansion (see jaccardPairs): sources per
-    // shingle are DISTINCT and few, so each shingle's sorted source list
-    // expands to the same source_a < source_b rows the former self-join
-    // produced with two exchanges of the index.
-    idx.groupBy("shingle")
-      .agg(sort_array(collect_list(col("source"))).as("_ss"))
-      .select(explode(flatten(transform(col("_ss"), (x, i) =>
-        transform(slice(col("_ss"), i + lit(2), size(col("_ss"))),
-          y => struct(x.as("sa"), y.as("sb")))))).as("_p"))
-      .groupBy(col("_p.sa").as("source_a"), col("_p.sb").as("source_b"))
+    // sources per shingle are DISTINCT and few: bounded groups
+    pairsSharingKey(idx, Seq("shingle"), "source", bounded = true, ("source_a", "source_b"))
+      .groupBy("source_a", "source_b")
       .agg(count("*").as("n_shared"))
       .join(broadcast(sizes.select(col("source").as("source_a"), col("n").as("n_a"))), "source_a")
       .join(broadcast(sizes.select(col("source").as("source_b"), col("n").as("n_b"))), "source_b")
@@ -906,15 +904,14 @@ object DedupOps {
     * near-identical documents (boilerplate pages, license headers) is the
     * thing that dies at 10^12 docs, where even uniform occupancy N/2^bits
     * grows linearly with the corpus. Buckets over the cap are DROPPED
-    * before the self-join: a bucket that collides half the corpus carries
-    * no similarity evidence worth f^2 candidate pairs (its TRUE near-dup
-    * pairs almost surely co-occur in a discriminative bucket of another
-    * band; a pair similar enough to share only over-full buckets is
-    * template mass near-dup clustering deliberately ignores — same
-    * recall trade as q51, documented there). Hot buckets are few by
-    * definition -> broadcast anti-join, no extra shuffle of the bands.
-    * The capped configuration has its own oracle row (q56, cap active at
-    * sf0.01); the uncapped contract stays q26.
+    * before pairing (dropHotKeys): a bucket that collides half the corpus
+    * carries no similarity evidence worth f^2 candidate pairs (its TRUE
+    * near-dup pairs almost surely co-occur in a discriminative bucket of
+    * another band; a pair similar enough to share only over-full buckets
+    * is template mass near-dup clustering deliberately ignores — same
+    * recall trade as q51, documented there). The capped configuration has
+    * its own oracle row (q56, cap active at sf0.01); the uncapped contract
+    * stays q26.
     */
   def lshCandidates(docs: DataFrame, k: Int = 16, r: Int = 4,
                     maxBucketSize: Int = 1000): DataFrame = {
@@ -933,8 +930,8 @@ object DedupOps {
     // so they would otherwise all collide on the empty bucket — and diverge
     // from SQL engines where || propagates NULL). They get a UNIQUE
     // per-doc solo bucket instead ("solo:" cannot collide with the numeric
-    // ":"-joined real buckets), which by construction never yields a pair
-    // in the self-join — same output as dropping them, nothing to push.
+    // ":"-joined real buckets), which by construction never yields a pair:
+    // same output as dropping them, nothing to push.
     val bands0 = sigs
       .select(col("doc_id"), col("minhash"),
         explode(sequence(lit(0), lit(k / r - 1))).as("band"))
@@ -945,38 +942,11 @@ object DedupOps {
             x => x.cast("string"))))
           .otherwise(concat(lit("solo:"), col("doc_id")))
           .as("bucket"))
-    // cap disabled (exact-banding contract, q26): no census pass at all —
-    // same reasoning as jaccardPairs' uncapped branch
-    val bands =
-      if (maxBucketSize == Int.MaxValue) bands0
-      else {
-        // the minhash subtree is the expensive part and the capped plan
-        // references the bands THREE times (census + both join sides):
-        // persist once, registered on the release ledger
-        val b = Intermediates.persist(bands0)
-        val hot = b.groupBy("band", "bucket").agg(count("*").as("_occ"))
-          .filter(col("_occ") > maxBucketSize).select("band", "bucket")
-        b.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-      }
-    // Pair generation split as in jaccardPairs: when the occupancy cap
-    // bounds bucket size, one groupBy of the bands + combination expansion
-    // replaces the self-join's two exchanges+sorts of the same persisted
-    // frame (solo buckets expand to zero pairs exactly as the self-join
-    // emitted none); the uncapped q26 contract keeps the streaming
-    // self-join, whose hot buckets would otherwise materialize f^2-struct
-    // arrays as single values.
-    (if (maxBucketSize == Int.MaxValue)
-      bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    else
-      bands.groupBy("band", "bucket")
-        .agg(sort_array(collect_list(col("doc_id"))).as("_ds"))
-        .select(explode(flatten(transform(col("_ds"), (x, i) =>
-          transform(slice(col("_ds"), i + lit(2), size(col("_ds"))),
-            y => struct(x.as("doc_a"), y.as("doc_b")))))).as("_p"))
-        .select(col("_p.doc_a").as("doc_a"), col("_p.doc_b").as("doc_b"))
-    ).distinct()
+    // the minhash subtree is the expensive part and the census reads the
+    // bands a second time: persisted whenever the census runs
+    val bands = dropHotKeys(bands0, Seq("band", "bucket"), maxBucketSize, persist = true)
+    pairsSharingKey(bands, Seq("band", "bucket"), "doc_id",
+        bounded = maxBucketSize < Int.MaxValue, ("doc_a", "doc_b"))
+      .distinct()
   }
 }

@@ -600,46 +600,23 @@ object SimilarityOps {
     * self-join emits ~N^2/2^bits pairs. A bucket over the cap carries no
     * discriminative evidence (it collides a corpus-scale slice of vectors,
     * dominated by the embedding-space mean direction) and is DROPPED before
-    * the self-join; its true near-dup mass is template similarity the
-    * dedup deliberately ignores, the same recall trade as the shingle cap.
-    * Production tuning raises `bits` so expected occupancy stays under the
-    * cap and the cap only guards the skewed tail. Hot buckets are few ->
-    * broadcast anti-join, no extra shuffle. The capped configuration has
-    * its own oracle row (q57, cap ACTIVE at sf0.01 where max occupancy is
-    * 6); the uncapped contract stays q29.
+    * pairing (DedupOps.dropHotKeys); its true near-dup mass is template
+    * similarity the dedup deliberately ignores, the same recall trade as
+    * the shingle cap. Production tuning raises `bits` so expected occupancy
+    * stays under the cap and the cap only guards the skewed tail. The
+    * embeddings ride through DedupOps.pairsSharingKey for the cosine. The
+    * capped configuration has its own oracle row (q57, cap ACTIVE at sf0.01
+    * where max occupancy is 6); the uncapped contract stays q29.
     */
   def cosineDupPairs(emb: DataFrame, threshold: Double, bits: Int = 8,
                      maxBucketSize: Int = 1000): DataFrame = {
-    val bucketed0 = emb.select(col("vec_id"), col("embedding"),
-      signBucket(col("embedding"), bits).as("bucket"))
-    val bucketed =
-      if (maxBucketSize == Int.MaxValue) bucketed0
-      else {
-        val hot = bucketed0.groupBy("bucket").agg(count("*").as("_occ"))
-          .filter(col("_occ") > maxBucketSize).select("bucket")
-        bucketed0.join(broadcast(hot), Seq("bucket"), "left_anti")
-      }
-    // Pair generation split as in DedupOps.jaccardPairs: the CAPPED scale
-    // path groups each bucket's (vec_id, embedding) rows once and expands
-    // the vec_a < vec_b combinations with array lambdas — one exchange of
-    // the vectors instead of the self-join's two, with per-group memory
-    // bounded by maxBucketSize vectors; the uncapped q29 contract keeps
-    // the streaming self-join (an over-full bucket would materialize an
-    // occupancy^2 pair array as one value). Cosine arithmetic unchanged.
-    (if (maxBucketSize == Int.MaxValue)
-      bucketed.as("x").join(bucketed.as("y"),
-          col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-          cosine(col("x.embedding"), col("y.embedding")).as("cos"))
-    else
-      bucketed.groupBy("bucket")
-        .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding")))).as("_vs"))
-        .select(explode(flatten(transform(col("_vs"), (x, i) =>
-          transform(slice(col("_vs"), i + lit(2), size(col("_vs"))),
-            y => struct(x.as("a"), y.as("b")))))).as("_p"))
-        .select(col("_p.a.vec_id").as("vec_a"), col("_p.b.vec_id").as("vec_b"),
-          cosine(col("_p.a.embedding"), col("_p.b.embedding")).as("cos"))
-    ).filter(col("cos") >= threshold)
+    val bucketed = DedupOps.dropHotKeys(emb.select(col("vec_id"), col("embedding"),
+      signBucket(col("embedding"), bits).as("bucket")), Seq("bucket"), maxBucketSize)
+    DedupOps.pairsSharingKey(bucketed, Seq("bucket"), "vec_id",
+        bounded = maxBucketSize < Int.MaxValue, ("a", "b"), carry = Seq("embedding"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+        cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+      .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
   }
 }

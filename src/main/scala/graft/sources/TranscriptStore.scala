@@ -29,8 +29,12 @@ object TranscriptStore extends TranscriptTable {
     digest.take(4).map("%02x".format(_)).mkString
   }
 
-  private def storePath(dir: String, rep: Int): String = {
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_") +
+  /** The store directory for (dir, rep). The key drops the leading `_`/`.`
+    * that an absolute `dir` maps to: Spark treats such a name as hidden and
+    * warns that all paths were ignored on every read of the store.
+    */
+  private[graft] def storePath(dir: String, rep: Int): String = {
+    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_").replaceAll("^[_.]+", "") +
       (if (rep > 1) s"_x$rep" else "") + s"_v$templateVersion"
     s"/root/repo/target/transcripts/$key"
   }

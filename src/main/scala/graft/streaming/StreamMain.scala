@@ -26,14 +26,8 @@ object StreamMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: StreamMain <sourceDir> <outRoot> [--drain]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      "graft-stream")
     try run(spark, args(0), args(1), drain = args.contains("--drain"))
     finally spark.stop()
   }

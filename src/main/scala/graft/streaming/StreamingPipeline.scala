@@ -205,34 +205,6 @@ object StreamingPipeline {
     }
   }
 
-  /** Keyed lifecycle over the exploded record stream (starts + `_stop`s).
-    * `stateTtlMs` switches to the TTL-bounded state machine (event-time
-    * timeout keyed to the watermark).
-    */
-  def lifecycle(spark: SparkSession, exploded: DataFrame,
-                stateTtlMs: Option[Long] = None): Dataset[LifeUpdate] = {
-    import spark.implicits._
-    val events = exploded
-      .filter(col("record_type").isin("attacks", "_stop") && col("attack_id") =!= 0L)
-      .select(col("attack_id"),
-        (col("record_type") === "_stop").as("is_stop"),
-        coalesce(
-          when(col("record_type") === "_stop", col("device_utc_time"))
-            .otherwise(col("attack_start_date")), lit("")).as("event_utc"),
-        col("ts"))
-      .as[LifeEvent]
-    stateTtlMs match {
-      case Some(ttl) =>
-        events.withWatermark("ts", "0 seconds")
-          .groupByKey(_.attack_id)
-          .flatMapGroupsWithState(OutputMode.Update(),
-            GroupStateTimeout.EventTimeTimeout())(lifecycleFnTtl(ttl))
-      case None =>
-        events.groupByKey(_.attack_id)
-          .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(lifecycleFn)
-    }
-  }
-
   // ---- streaming sessionization (parity with ConversationOps.sessionize) ----
 
   case class SessTurn(conv_id: String, turn_idx: Int, ts: java.sql.Timestamp)
@@ -349,7 +321,7 @@ object StreamingPipeline {
     * the typical per-batch touched-attack spread so a micro-batch rewrites
     * a strict subset of the resolved sink.
     */
-  val DefaultAttackBuckets = 16
+  val AttackBuckets = 16
 
   /** The INCREMENTAL resolve frame: attacks and accumulated lifecycle facts
     * restricted (by PARTITION FILTER on their bucket dirs — plan-pinned in
@@ -358,7 +330,7 @@ object StreamingPipeline {
     * from the write so specs can pin the pruned plan shape.
     */
   def incrementalResolveFrame(spark: SparkSession, outRoot: String,
-                              touched: Seq[Int], buckets: Int): DataFrame = {
+                              touched: Seq[Int]): DataFrame = {
     val facts = spark.read.parquet(s"$outRoot/_lifefacts")
       .filter(col("fbucket").isin(touched: _*))
       .select("attack_id", "is_atk", "ts", "device_utc_time")
@@ -387,11 +359,10 @@ object StreamingPipeline {
     * first, so the accumulated state it resolves from is unchanged and the
     * touched buckets rewrite to identical contents.
     */
-  def resolveAttacks(spark: SparkSession, outRoot: String,
-                     touched: Seq[Int], buckets: Int = DefaultAttackBuckets): Unit = {
+  def resolveAttacks(spark: SparkSession, outRoot: String, touched: Seq[Int]): Unit = {
     if (touched.isEmpty || !Router.hasParquet(s"$outRoot/_attacks")) return
     if (!Router.hasParquet(s"$outRoot/_lifefacts")) return
-    incrementalResolveFrame(spark, outRoot, touched, buckets)
+    incrementalResolveFrame(spark, outRoot, touched)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("rbucket")
@@ -403,41 +374,39 @@ object StreamingPipeline {
     *    directory partitioned by record_type (idempotent overwrite — see
     *    writeBatch for the exactly-once contract);
     * 2. the batch's attacks rows land under `_attacks/batch_id=<id>`
-    *    partitioned by `abucket = pmod(attack_id, buckets)`, and its narrow
-    *    lifecycle facts under `_lifefacts/batch_id=<id>` partitioned by
-    *    `fbucket` — same batch-id-keyed idempotence; the underscore prefix
+    *    partitioned by `abucket = pmod(attack_id, AttackBuckets)`, and its
+    *    narrow lifecycle facts under `_lifefacts/batch_id=<id>` partitioned
+    *    by `fbucket` — same batch-id-keyed idempotence; the underscore prefix
     *    keeps all sidecars invisible to partition discovery over `outRoot`;
     * 3. resolveAttacks rewrites ONLY the touched resolved buckets so the
     *    routed output CONVERGES to the batch Router.route result as the
     *    stream drains — a stop in batch N closes an attack routed in batch
     *    N-k, exactly as the reference's ES update side-channel did.
     */
-  def writeRoutedBatch(outRoot: String, buckets: Int = DefaultAttackBuckets)(
-      batch: DataFrame, batchId: Long): Unit = {
+  def writeRoutedBatch(outRoot: String)(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.persist()
     try {
-      b.filter(!col("record_type").isin(Pipeline.Stop, Pipeline.Attacks))
-        .write.mode("overwrite").partitionBy("record_type")
-        .parquet(s"$outRoot/batch_id=$batchId")
+      writeBatch(outRoot)(b.filter(!col("record_type").isin(Pipeline.Stop, Pipeline.Attacks)),
+        batchId)
       b.filter(col("record_type") === Pipeline.Attacks)
         .drop("record_type")
-        .withColumn("abucket", pmod(col("attack_id"), lit(buckets)).cast("int"))
+        .withColumn("abucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
         .write.mode("overwrite").partitionBy("abucket")
         .parquet(s"$outRoot/_attacks/batch_id=$batchId")
       // the batch's narrow lifecycle facts, taken before its `_stop` rows
       // are dropped (the same extraction as Router's staged read-back)
       Pipeline.lifeFactsFromStaged(b)
-        .withColumn("fbucket", pmod(col("attack_id"), lit(buckets)).cast("int"))
+        .withColumn("fbucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
         .write.mode("overwrite").partitionBy("fbucket")
         .parquet(s"$outRoot/_lifefacts/batch_id=$batchId")
-      // the touched-bucket set: a scalar probe over the batch (<= `buckets`
+      // the touched-bucket set: a scalar probe over the batch (<= AttackBuckets
       // distinct ints on the driver, the pattern of Lineage.route's read-back)
       val touched = b
         .filter(col("record_type") === Pipeline.Attacks ||
           (col("record_type") === Pipeline.Stop && col("attack_id") =!= 0L))
-        .select(pmod(col("attack_id"), lit(buckets)).cast("int").as("bk"))
+        .select(pmod(col("attack_id"), lit(AttackBuckets)).cast("int").as("bk"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      resolveAttacks(b.sparkSession, outRoot, touched, buckets)
+      resolveAttacks(b.sparkSession, outRoot, touched)
     } finally b.unpersist()
   }
 

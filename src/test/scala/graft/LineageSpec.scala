@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Arbitrary, Gen}
@@ -175,5 +176,13 @@ class LineageSpec extends SparkSpec {
       val m = manifest.pureApply(Gen.Parameters.default, Seed(seed))
       assert(Lineage.parse(Lineage.render(m)) == m, s"seed $seed: source ${m.source.toSeq.map(_.toInt)}")
     }
+  }
+
+  test("transcript store path has no hidden segment, so its reads see the data files") {
+    val path = TranscriptStore.storePath(dir, 1)
+    val hidden = Paths.get(path).iterator().asScala.map(_.toString)
+      .filter(seg => seg.startsWith("_") || seg.startsWith(".")).toSeq
+    assert(hidden.isEmpty, s"$path has hidden segments $hidden")
+    assert(TranscriptStore.table(spark, dir).inputFiles.nonEmpty)
   }
 }

@@ -87,7 +87,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val outPath = java.nio.file.Files.createTempDirectory("graft-resolve-join").toString
     StreamingPipeline.writeRoutedBatch(outPath)(StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir)), 0L)
-    assertBroadcast(StreamingPipeline.incrementalResolveFrame(spark, outPath, 0 until 16, 16))
+    assertBroadcast(StreamingPipeline.incrementalResolveFrame(spark, outPath, 0 until 16))
     graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
@@ -142,7 +142,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
     StreamingPipeline.writeRoutedBatch(outPath)(exploded, 0L)
-    val df = StreamingPipeline.incrementalResolveFrame(spark, outPath, Seq(1, 2), 16)
+    val df = StreamingPipeline.incrementalResolveFrame(spark, outPath, Seq(1, 2))
     val plan = df.queryExecution.executedPlan.toString
     // the attacks and facts scans must carry PARTITION filters on their
     // bucket dirs — an unpruned resolve re-reads the whole accumulated

@@ -31,13 +31,13 @@ class RouterSpec extends SparkSpec {
 
     // per-severity directories exist under every attacks tool sink
     import scala.jdk.CollectionConverters._
-    val toolDirs = java.nio.file.Files.list(
-      java.nio.file.Paths.get(out, "record_type=attacks")).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("tool=")).toSeq
+    def names(p: java.nio.file.Path): Seq[String] =
+      scala.util.Using.resource(java.nio.file.Files.list(p))(
+        _.iterator().asScala.map(_.getFileName.toString).toList)
+    val attacksDir = java.nio.file.Paths.get(out, "record_type=attacks")
+    val toolDirs = names(attacksDir).filter(_.startsWith("tool=")).map(attacksDir.resolve)
     assert(toolDirs.nonEmpty)
-    val sevDirs = toolDirs.flatMap(t =>
-      java.nio.file.Files.list(t).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("attack_severity=")))
+    val sevDirs = toolDirs.flatMap(t => names(t).filter(_.startsWith("attack_severity=")))
     assert(sevDirs.nonEmpty, "no attack_severity= partition dirs under attacks sinks")
 
     // a severity predicate on the attacks family prunes PARTITIONS
