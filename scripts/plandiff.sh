@@ -1,0 +1,38 @@
+#!/usr/bin/env bash
+# Diff two `graft.Plans` output directories query by query, ignoring the
+# per-run noise in Spark's plan text: expression ids (`#123`, `#123L`) and
+# lambda variable suffixes (`x_12`).
+#
+# Usage: scripts/plandiff.sh <dirA> <dirB>
+#   Files are paired by query name: the tag of `<query>_<tag>.txt`, which
+#   must not contain `_`, is ignored, so dumps of two commits made with
+#   different tags compare directly.
+#   Prints a unified diff per differing query and a one-line summary.
+#   Exit status: 0 when every query's plan matches, 1 on any difference or
+#   on a query present in only one directory, 2 on bad usage.
+set -euo pipefail
+if [ $# -ne 2 ] || [ ! -d "$1" ] || [ ! -d "$2" ]; then
+  echo "usage: $0 <dirA> <dirB>" >&2
+  exit 2
+fi
+a=$1 b=$2
+norm() { sed -E -e 's/#[0-9]+L?/#/g' -e 's/\b([a-z]{1,3})_[0-9]+\b/\1_/g' "$1"; }
+# query name of a dump file: strip the directory and the trailing _<tag>.txt
+query() { local f=${1##*/}; f=${f%.txt}; echo "${f%_*}"; }
+declare -A fa fb
+for f in "$a"/*.txt; do [ -e "$f" ] && fa[$(query "$f")]=$f; done
+for f in "$b"/*.txt; do [ -e "$f" ] && fb[$(query "$f")]=$f; done
+status=0 same=0 differ=0
+for q in $(printf '%s\n' "${!fa[@]}" "${!fb[@]}" | sort -u); do
+  if [ -z "${fa[$q]:-}" ] || [ -z "${fb[$q]:-}" ]; then
+    echo "== $q: only in ${fa[$q]:+$a}${fb[$q]:+$b}"
+    status=1 differ=$((differ + 1))
+  elif diff -u --label "$q ($a)" --label "$q ($b)" \
+      <(norm "${fa[$q]}") <(norm "${fb[$q]}"); then
+    same=$((same + 1))
+  else
+    status=1 differ=$((differ + 1))
+  fi
+done
+echo "plandiff: $same identical, $differ different"
+exit $status

@@ -19,6 +19,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    // print every field of the ~50-field branch structs: at the default (25)
+    // the rest prints as `... N more fields` and an A/B diff cannot see it
+    spark.conf.set("spark.sql.debug.maxToStringFields", 100000)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     def query(q: String): () => DataFrame = () => SparkEntry.queries(q)(spark, dir)
     def plan(df: DataFrame): String = df.queryExecution.explainString(FormattedMode)

@@ -22,6 +22,11 @@ import graft.sources.Transcripts
   * its branch struct renders. records(), Router, Lineage, streaming and the
   * family queries all read these rows, and `applyLifecycle` is the one W3
   * join: the per-episode lifecycle aggregate, broadcast onto the records.
+  *
+  * Which event phrase, under which format and module guard, becomes which
+  * record is declared once, in the event table (`branches`): explodedAll,
+  * lifeFacts (arms and prefilter needles) and rejects (its known sets) all
+  * derive from it, so none of them can drift from the others.
   */
 object Pipeline {
 
@@ -70,22 +75,34 @@ object Pipeline {
   // Family normalizations as shared (name -> column) lists
   // ---------------------------------------------------------------------
 
-  private def common(fmt: String, payload: Column): Seq[(String, Column)] = Seq(
-    "customer_id" -> lit(0),
-    "record_type" -> lit("attacks"),
-    "remote_log_format" -> lit(fmt),
-    "remote_log_payload" -> payload,
-    "device_utc_offset" -> col("offh"))
+  /** The leading fields of every family's render; traffic stats carry no
+    * customer_id (bbn_syslog.rb:420-662).
+    */
+  private def common(family: String, fmt: String): Seq[(String, Column)] =
+    (if (family == Traffic) Nil else Seq("customer_id" -> lit(0))) ++ Seq(
+      "record_type" -> lit(family),
+      "remote_log_format" -> lit(fmt),
+      "remote_log_payload" -> (if (fmt == "Syslog") col("msg") else col("text")),
+      "device_utc_offset" -> col("offh"))
+
+  /** The syslog device block shared by the attacks and traffic renders. */
+  private def syslogDevice: Seq[(String, Column)] =
+    Seq("vendor" -> "device_vendor", "module" -> "device_product",
+      "version" -> "device_version", "hostname" -> "hostname", "ip" -> "bigip_mgmt_ip")
+      .map { case (field, key) => s"device_$field" -> coalesce(kvv(key), lit("")) }
+
+  /** The attack id a record carries: 0 when absent or not a number. */
+  private def attackId(aid: Column): Column = coalesce(aid.cast("long"), lit(0L))
+
+  /** The one `aid != 0` guard: a zero id neither stops nor starts an
+    * episode (the hits==1 guard's precondition, bbn_syslog.rb:283-307).
+    */
+  private def hasId(aid: Column): Column = attackId(aid) =!= 0L
 
   /** syslog Attack Started -> attacks (bbn_syslog.rb:158-239). */
-  private def colsSyslogStart: Seq[(String, Column)] = {
+  private def colsSyslogStart(aid: Column): Seq[(String, Column)] = {
     val utc = col("sy_utc")
-    common("Syslog", col("msg")) ++ Seq(
-      "device_vendor" -> coalesce(kvv("device_vendor"), lit("")),
-      "device_module" -> coalesce(kvv("device_product"), lit("")),
-      "device_version" -> coalesce(kvv("device_version"), lit("")),
-      "device_hostname" -> coalesce(kvv("hostname"), lit("")),
-      "device_ip" -> coalesce(kvv("bigip_mgmt_ip"), lit("")),
+    common(Attacks, "Syslog") ++ syslogDevice ++ Seq(
       "device_utc_time" -> utc,
       "policy_name" -> lit(null).cast("string"),
       "virtual_context" -> coalesce(kvv("context_name"), lit("")),
@@ -94,7 +111,7 @@ object Pipeline {
       "flow_table_id" -> flowTableId(kvv("flow_id")),
       "attack_mlp" -> lit(0),
       "attack_name" -> coalesce(kvv("dos_attack_name"), lit("")),
-      "attack_id" -> coalesce(kvv("dos_attack_id").cast("long"), lit(0L)),
+      "attack_id" -> attackId(aid),
       "attack_type" -> lit(1),
       "attack_status" -> coalesce(kvv("dos_attack_event"), lit("")),
       "attack_severity" -> coalesce(kvv("severity").cast("int"), lit(0)),
@@ -108,52 +125,37 @@ object Pipeline {
       "unknown_key_value_pair" -> lit(""))
   }
 
-  /** syslog TCP Syncookie -> attacks (bbn_syslog.rb:327-411). Quirks
-    * replicated: no dos_attack_id arm (attack_id stays 0), no all-zero
-    * sentinel on flow_id, attack_status becomes the original action,
-    * start==end date, ongoing=0.
+  /** syslog TCP Syncookie -> attacks (bbn_syslog.rb:327-411): the start
+    * render with ten quirk fields replaced. No dos_attack_id arm (attack_id
+    * stays 0), no all-zero sentinel on flow_id, attack_status becomes the
+    * original action, start==end date, ongoing=0.
     */
   private def colsSyslogSync: Seq[(String, Column)] = {
-    val utc = col("sy_utc")
-    common("Syslog", col("msg")) ++ Seq(
-      "device_vendor" -> coalesce(kvv("device_vendor"), lit("")),
-      "device_module" -> coalesce(kvv("device_product"), lit("")),
-      "device_version" -> coalesce(kvv("device_version"), lit("")),
-      "device_hostname" -> coalesce(kvv("hostname"), lit("")),
-      "device_ip" -> coalesce(kvv("bigip_mgmt_ip"), lit("")),
-      "device_utc_time" -> utc,
+    val quirks = Map[String, Column](
       "policy_name" -> lit(""),
-      "virtual_context" -> coalesce(kvv("context_name"), lit("")),
-      "virtual_routing_table" -> coalesce(kvv("route_domain"), lit("")),
-      "administration_partition" -> coalesce(kvv("partition_name"), lit("")),
       "flow_table_id" -> coalesce(kvv("flow_id"), lit("")),
-      "attack_mlp" -> lit(0),
       "attack_name" -> lit("TCP SYN flood"),
       "attack_id" -> lit(0L),
-      "attack_type" -> lit(1),
       "attack_status" -> coalesce(kvv("action"), lit("")),
-      "attack_severity" -> coalesce(kvv("severity").cast("int"), lit(0)),
-      "attack_category" -> coalesce(kvv("errdefs_msg_name"), lit("")),
       "attack_event_counter" -> lit(0),
       "attack_ongoing" -> lit(0),
       "attack_mitigation_method" -> lit("Per Virtual Server SYN Cookie"),
-      "attack_mitigation_action" -> lit("Cryptographic SYN Cookie"),
-      "attack_start_date" -> utc,
-      "attack_end_date" -> utc,
-      "unknown_key_value_pair" -> lit(""))
+      "attack_mitigation_action" -> lit(SynCookie),
+      "attack_end_date" -> col("sy_utc"))
+    colsSyslogStart(kvv("dos_attack_id")).map { case (n, c) => n -> quirks.getOrElse(n, c) }
   }
 
   /** CEF attacks: AFM Attack Started (bbn_cef.rb:282-366) / ASM Attack
     * started (bbn_cef.rb:662-785); `afm` switches the module-dependent arms.
     */
-  private def colsCefStart(afm: Boolean): Seq[(String, Column)] = {
+  private def colsCefStart(afm: Boolean, aid: Column): Seq[(String, Column)] = {
     val utc = col("cef_utc")
     val asmName = when(dyn("detection_mode") === "TPS Increased", "HTTP Flood")
       .when(dyn("detection_mode") === "Latency Increased", "HTTP Server Response Latency")
       .otherwise("")
     val vcSrc = if (afm) col("cef_vn") else col("cef_vs")
     val vc = coalesce(when(vcSrc =!= "", vcSrc), lit(""))
-    common("CEF", col("text")) ++ Seq(
+    common(Attacks, "CEF") ++ Seq(
       "device_vendor" -> coalesce(element_at(col("spl"), 2), lit("")),
       "device_module" -> coalesce(element_at(col("spl"), 3), lit("")),
       "device_version" -> coalesce(element_at(col("spl"), 4), lit("")),
@@ -167,7 +169,7 @@ object Pipeline {
       "flow_table_id" -> (if (afm) flowTableId(kvv("F5FlowID")) else lit("")),
       "attack_mlp" -> lit(0),
       "attack_name" -> (if (afm) element_at(col("spl"), 6) else asmName),
-      "attack_id" -> coalesce(dyn("attack_id").cast("long"), lit(0L)),
+      "attack_id" -> attackId(aid),
       "attack_type" -> lit(1),
       "attack_status" -> coalesce(dyn("attack_status"), lit("")),
       "attack_severity" ->
@@ -189,12 +191,9 @@ object Pipeline {
   private def colsSyslogSample: Seq[(String, Column)] = {
     val hasCtx = kvv("context_name").isNotNull
     val cat = kvv("errdefs_msg_name")
-    common("Syslog", col("msg")).map {
-      case ("record_type", _) => "record_type" -> lit("attack_mitigation_stats")
-      case other => other
-    } ++ Seq(
+    common(Stats, "Syslog") ++ Seq(
       "device_utc_time" -> col("sy_utc"),
-      "attack_id" -> coalesce(kvv("dos_attack_id").cast("long"), lit(0L)),
+      "attack_id" -> attackId(kvv("dos_attack_id")),
       "attack_type" -> lit(1),
       "attack_severity" -> lit(null).cast("int"),
       "attack_status" -> coalesce(kvv("dos_attack_event"), lit("")),
@@ -230,15 +229,12 @@ object Pipeline {
     val cat = when(isDns, "DNS Event").otherwise("Network DoS Event")
     val vcRaw = when(dyn("virtual_name") =!= "", dyn("virtual_name"))
     val hasCtx = vcRaw.isNotNull
-    common("CEF", col("text")).map {
-      case ("record_type", _) => "record_type" -> lit("attack_mitigation_stats")
-      case other => other
-    } ++ Seq(
+    common(Stats, "CEF") ++ Seq(
       "device_utc_time" -> utc,
-      "attack_id" -> coalesce(dyn("attack_id").cast("long"), lit(0L)),
+      "attack_id" -> attackId(dyn("attack_id")),
       "attack_type" -> lit(1),
       "attack_severity" -> lit(0), // AFM never fills it; hash default 0
-      "attack_status" -> lit("Attack Sampled"),
+      "attack_status" -> lit(AttackSampled),
       "attack_detection_rate" -> coalesce(dyn("dos_packets_received").cast("int"), lit(0)),
       "attack_detection_matrix" -> rateMatrix(hasCtx, cat, "PPS"),
       "attack_detection_method" -> lit(null).cast("string"),
@@ -265,18 +261,15 @@ object Pipeline {
     */
   private def colsCefAsmStats: Seq[(String, Column)] = {
     val status = col("astat")
-    val fromStart = status === "Attack started"
+    val fromStart = status === AsmStarted
     val utc = col("cef_utc")
-    common("CEF", col("text")).map {
-      case ("record_type", _) => "record_type" -> lit("attack_mitigation_stats")
-      case other => other
-    } ++ Seq(
+    common(Stats, "CEF") ++ Seq(
       "device_utc_time" -> utc,
-      "attack_id" -> coalesce(dyn("attack_id").cast("long"), lit(0L)),
+      "attack_id" -> attackId(dyn("attack_id")),
       "attack_type" -> lit(1),
       "attack_severity" -> when(fromStart, 0)
         .otherwise(coalesce(element_at(col("spl"), 7).cast("int"), lit(0))),
-      "attack_status" -> when(fromStart, "Mitigation stats").otherwise(coalesce(status, lit(""))),
+      "attack_status" -> when(fromStart, MitigationStats).otherwise(coalesce(status, lit(""))),
       "attack_detection_rate" -> coalesce(dyn("detection_average").cast("int"), lit(0)),
       "attack_detection_matrix" -> lit("TPS"),
       "attack_detection_method" -> coalesce(dyn("detection_mode"), lit("")),
@@ -299,18 +292,8 @@ object Pipeline {
   /** syslog Traffic Statistics x 4 stat types (bbn_syslog.rb:420-662). */
   private def colsTraffic: Seq[(String, Column)] = {
     val statType = kvv("traffic_stat_type")
-    val isCookie = statType === "Cryptographic SYN Cookie"
-    Seq(
-      "record_type" -> lit("traffic_stats"),
-      "remote_log_format" -> lit("Syslog"),
-      "remote_log_payload" -> col("msg"),
-      "device_utc_offset" -> col("offh"),
-      "device_utc_time" -> col("sy_utc"),
-      "device_vendor" -> coalesce(kvv("device_vendor"), lit("")),
-      "device_module" -> coalesce(kvv("device_product"), lit("")),
-      "device_version" -> coalesce(kvv("device_version"), lit("")),
-      "device_hostname" -> coalesce(kvv("hostname"), lit("")),
-      "device_ip" -> coalesce(kvv("bigip_mgmt_ip"), lit("")),
+    val isCookie = statType === SynCookie
+    common(Traffic, "Syslog") ++ Seq("device_utc_time" -> col("sy_utc")) ++ syslogDevice ++ Seq(
       "virtual_context" -> coalesce(kvv("context_name"), lit("")),
       "administration_partition" -> coalesce(kvv("partition_name"), lit("")),
       "traffic_stat_type" -> coalesce(statType, lit("")),
@@ -323,24 +306,88 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------------------
-  // Branch conditions (format dispatch + per-family guards)
+  // The F5 event table: which phrase, under which format and module guard,
+  // becomes which record (the reference's elsif chains, bbn_syslog.rb /
+  // bbn_cef.rb). explodedAll, lifeFacts and rejects all read it.
   // ---------------------------------------------------------------------
 
-  // `evt` is hoisted to a parsedBase column so the five
-  // branch dispatch probes share ONE map lookup per row instead of five
-  // linear scans of the kv map (guide §4: eliminate duplicated expression
-  // work in the hot path).
-  private def evt: Column = col("evt")
-  private def condSyStart: Column = evt === "Attack Started"
-  private def condSySync: Column = evt === "TCP Syncookie"
-  private def condSySample: Column = evt === "Attack Sampled"
-  private def condSyStop: Column = evt === "Attack Stopped"
-  private def condTraffic: Column =
-    evt.isNull && kvv("errdefs_msg_name") === "Traffic Statistics" &&
-      kvv("traffic_stat_type").isin(
-        "Cryptographic SYN Cookie", "Reaped Flow", "Active Flow", "Missed Flow")
-  private def isAfm: Column = element_at(col("spl"), 3) === "Advanced Firewall Module"
-  private def isAsm: Column = element_at(col("spl"), 3) === "ASM"
+  // Phrases and guard values the table shares with the renders, the CEF
+  // guard in parsedBase and rejects.
+  private val AttackStarted = "Attack Started"
+  private val AttackStopped = "Attack Stopped"
+  private val AttackSampled = "Attack Sampled"
+  private val AsmStarted = "Attack started"
+  private val MitigationStats = "Mitigation stats"
+  private val TrafficStatistics = "Traffic Statistics"
+  private val SynCookie = "Cryptographic SYN Cookie"
+  private val Afm = "Advanced Firewall Module"
+  private val Asm = "ASM"
+  private val AsmAttackType = "DOS L7 attack"
+
+  private def isModule(module: String): Column = element_at(col("spl"), 3) === module
+
+  /** A start or stop branch's lifecycle fact: the attack id it carries and
+    * the UTC time it closes its episode at (a typed null for a start).
+    */
+  private final case class Fact(aid: Column, utc: Column)
+
+  /** One branch. `module` is None for syslog (guard: the Syslog format) and
+    * the CEF header's module otherwise (guard: `cef_ok` and that module).
+    * The branch fires when its guard holds, `pre` holds, and `on`, the
+    * probed event/status value, is one of `phrases`.
+    */
+  private final case class Branch(family: String, module: Option[String], on: Column,
+      phrases: Seq[String], cols: Seq[(String, Column)], fact: Option[Fact] = None,
+      pre: Option[Column] = None) {
+    def cond: Column = {
+      val guard = module.fold(col("fmt") === "Syslog")(m => col("cef_ok") && isModule(m))
+      val hit = if (phrases.size == 1) on === phrases.head else on.isin(phrases: _*)
+      guard && pre.fold(hit)(_ && hit)
+    }
+    /** The record struct; a stop with a zero id renders nothing. */
+    def render: Column =
+      if (family == Stop) when(hasId(fact.get.aid), recStruct(cols)) else recStruct(cols)
+  }
+
+  /** The 11 E1 branches in the reference's emission order. Order is
+    * load-bearing for the dual-emit turns (ASM Attack started emits its
+    * start struct before its piggy-backed stats struct, matching
+    * bbn_cef.rb:662-913's sequential pushes).
+    */
+  private def branches: Seq[Branch] = {
+    val evt = col("evt")
+    val astat = col("astat")
+    val syId = kvv("dos_attack_id")
+    val cefId = dyn("attack_id")
+    def start(module: Option[String], on: Column, phrase: String,
+              cols: Column => Seq[(String, Column)], aid: Column): Branch =
+      Branch(Attacks, module, on, Seq(phrase), cols(aid), Some(Fact(aid, lit(null).cast("string"))))
+    // Internal stop pseudo-records for the W3 resolution (record_type
+    // `_stop`, filtered out after correlation).
+    def stop(module: Option[String], on: Column, phrase: String, aid: Column, utc: Column): Branch =
+      Branch(Stop, module, on, Seq(phrase),
+        Seq("record_type" -> lit(Stop), "attack_id" -> attackId(aid), "device_utc_time" -> utc),
+        Some(Fact(aid, utc)))
+    // CEF/AFM stop keys come from the SYSLOG-regex rescan of the raw
+    // message (bbn_cef.rb:541), the guarded `stop_sykv` base column.
+    val afmStopKv = col("stop_sykv")
+    Seq(
+      start(None, evt, AttackStarted, colsSyslogStart, syId),
+      Branch(Attacks, None, evt, Seq("TCP Syncookie"), colsSyslogSync),
+      Branch(Stats, None, evt, Seq(AttackSampled), colsSyslogSample),
+      Branch(Traffic, None, kvv("traffic_stat_type"),
+        Seq(SynCookie, "Reaped Flow", "Active Flow", "Missed Flow"), colsTraffic,
+        pre = Some(evt.isNull && kvv("errdefs_msg_name") === TrafficStatistics)),
+      stop(None, evt, AttackStopped, syId, col("sy_utc")),
+      start(Some(Afm), astat, AttackStarted, colsCefStart(afm = true, _), cefId),
+      Branch(Stats, Some(Afm), astat, Seq(AttackSampled), colsCefAfmSample),
+      stop(Some(Afm), astat, AttackStopped, element_at(afmStopKv, "dos_attack_id"),
+        toUtcOrEmpty(element_at(afmStopKv, "date_time"), col("offh"))),
+      start(Some(Asm), astat, AsmStarted, colsCefStart(afm = false, _), cefId),
+      Branch(Stats, Some(Asm), astat, Seq(AsmStarted, MitigationStats, "Mitigation changed"),
+        colsCefAsmStats),
+      stop(Some(Asm), astat, "Attack ended", cefId, col("cef_utc")))
+  }
 
   // ---------------------------------------------------------------------
   // Single-pass assembly: E1 explode + S5 routing + W3 in one scan
@@ -414,17 +461,6 @@ object Pipeline {
     }: _*).cast(recStructType)
   }
 
-  /** Internal stop pseudo-records for the single-pass W3 resolution
-    * (record_type `_stop`, filtered out after correlation).
-    */
-  private def stopStruct(aid: Column, stopUtc: Column): Column = {
-    val cols = Seq[(String, Column)](
-      "record_type" -> lit("_stop"),
-      "attack_id" -> coalesce(aid.cast("long"), lit(0L)),
-      "device_utc_time" -> stopUtc)
-    when(coalesce(aid.cast("long"), lit(0L)) =!= 0L, recStruct(cols))
-  }
-
   /** Single-pass records: ONE scan of transcripts, conditional parse into a
     * format-appropriate kv map, one struct per matched branch (only the
     * REQUESTED families' branches are built — nested-field pruning cannot
@@ -463,7 +499,7 @@ object Pipeline {
     // 1-element split of a syslog line.
     val spl = when(col("fmt") === "CEF", split(col("text"), "\\|"))
     val cefOk = col("fmt") === "CEF" && size(col("spl")) === 8 &&
-      (isAfm || (isAsm && element_at(col("spl"), 5) === "DOS L7 attack"))
+      (isModule(Afm) || (isModule(Asm) && element_at(col("spl"), 5) === AsmAttackType))
     // Stages are batched with withColumns (one analysis pass per stage
     // instead of one per column): every Dataset transformation eagerly
     // re-analyzes the whole accumulated tree, and with the ~3000-node
@@ -505,43 +541,12 @@ object Pipeline {
         "cef_vn" -> dyn("virtual_name"),
         "cef_vs" -> dyn("Virtual Server")))
       // The CEF/AFM stop quirk's syslog-regex rescan of the raw message
-      // (bbn_cef.rb:541) is guarded to exactly the rows that need it and
+      // (bbn_cef.rb:541) is guarded to exactly the rows of that branch and
       // computed once, not once per probed key.
-      .withColumn("stop_sykv",
-        when(col("cef_ok") && isAfm && col("astat") === "Attack Stopped",
-          kvSyslog(col("text"))))
+      .withColumn("stop_sykv", when(afmStop.cond, kvSyslog(col("text"))))
   }
 
-  /** The 11 E1 branches in the reference's emission order, tagged by family
-    * so consumers can prune. Order is load-bearing for the dual-emit turns
-    * (ASM Attack started emits its start struct before its piggy-backed
-    * stats struct, matching bbn_cef.rb:662-913's sequential pushes).
-    */
-  private def branchSpecs: Seq[(String, Column)] = {
-    val isSy = col("fmt") === "Syslog"
-    val afmStatus = col("astat")
-    // CEF/AFM stop keys come from the SYSLOG-regex rescan of the raw message
-    // (bbn_cef.rb:541), hoisted to the guarded `stop_sykv` base column so it
-    // is computed once per matching row, not once per probed key.
-    val afmStopKv = col("stop_sykv")
-    Seq(
-      Attacks -> when(isSy && condSyStart, recStruct(colsSyslogStart)),
-      Attacks -> when(isSy && condSySync, recStruct(colsSyslogSync)),
-      Stats -> when(isSy && condSySample, recStruct(colsSyslogSample)),
-      Traffic -> when(isSy && condTraffic, recStruct(colsTraffic)),
-      Stop -> when(isSy && condSyStop,
-        stopStruct(kvv("dos_attack_id"), col("sy_utc"))),
-      Attacks -> when(col("cef_ok") && isAfm && afmStatus === "Attack Started", recStruct(colsCefStart(afm = true))),
-      Stats -> when(col("cef_ok") && isAfm && afmStatus === "Attack Sampled", recStruct(colsCefAfmSample)),
-      Stop -> when(col("cef_ok") && isAfm && afmStatus === "Attack Stopped",
-        stopStruct(element_at(afmStopKv, "dos_attack_id"),
-          toUtcOrEmpty(element_at(afmStopKv, "date_time"), col("offh")))),
-      Attacks -> when(col("cef_ok") && isAsm && afmStatus === "Attack started", recStruct(colsCefStart(afm = false))),
-      Stats -> when(col("cef_ok") && isAsm && afmStatus.isin("Attack started", "Mitigation stats", "Mitigation changed"),
-        recStruct(colsCefAsmStats)),
-      Stop -> when(col("cef_ok") && isAsm && afmStatus === "Attack ended",
-        stopStruct(dyn("attack_id"), col("cef_utc"))))
-  }
+  private def afmStop: Branch = branches.find(b => b.family == Stop && b.module.contains(Afm)).get
 
   /** The stateless single-pass parse+explode over (health-filtered)
     * transcripts. `families` prunes the branch array to the requested
@@ -553,11 +558,11 @@ object Pipeline {
     */
   def explodedAll(t: DataFrame, offsets: DataFrame,
                   families: Set[String] = AllFamilies): DataFrame = {
-    val branches = array(branchSpecs.collect { case (f, c) if families(f) => c }: _*)
+    val recs = array(branches.collect { case b if families(b.family) => when(b.cond, b.render) }: _*)
     parsedBase(t, offsets)
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
         col("facility"), col("severity"),
-        explode(filter(branches, b => b.isNotNull)).as("rec"))
+        explode(filter(recs, b => b.isNotNull)).as("rec"))
       .select(col("conv_id"), col("turn_idx"), col("role"), col("tool"), col("ts"),
         col("facility"), col("severity"), col("rec.*"))
   }
@@ -572,30 +577,16 @@ object Pipeline {
     * hits==1 guard's `!= 0` precondition, bbn_syslog.rb:283-307).
     */
   def lifeFacts(t: DataFrame, offsets: DataFrame): DataFrame = {
-    val isSy = col("fmt") === "Syslog"
-    val afmStatus = col("astat")
-    val afmStopKv = col("stop_sykv")
-    def fact(aid: Column, isAtk: Boolean, utc: Column): Column =
-      when(coalesce(aid.cast("long"), lit(0L)) =!= 0L,
-        struct(aid.cast("long").as("attack_id"), lit(isAtk).as("is_atk"),
-          utc.as("device_utc_time")))
-    val noUtc = lit(null).cast("string")
-    val facts = array(
-      when(isSy && condSyStart, fact(kvv("dos_attack_id"), isAtk = true, noUtc)),
-      when(isSy && condSyStop,
-        fact(kvv("dos_attack_id"), isAtk = false, col("sy_utc"))),
-      when(col("cef_ok") && isAfm && afmStatus === "Attack Started",
-        fact(dyn("attack_id"), isAtk = true, noUtc)),
-      when(col("cef_ok") && isAfm && afmStatus === "Attack Stopped",
-        fact(element_at(afmStopKv, "dos_attack_id"), isAtk = false,
-          toUtcOrEmpty(element_at(afmStopKv, "date_time"), col("offh")))),
-      when(col("cef_ok") && isAsm && afmStatus === "Attack started",
-        fact(dyn("attack_id"), isAtk = true, noUtc)),
-      when(col("cef_ok") && isAsm && afmStatus === "Attack ended",
-        fact(dyn("attack_id"), isAtk = false, col("cef_utc"))))
-    // Every fact branch requires the event/status value to be one of four
-    // literal phrases, and each of those phrases appears VERBATIM in the
-    // quote-stripped text of any row whose parsed kv/dyn value equals it:
+    val bearing = branches.filter(_.fact.isDefined)
+    val facts = array(bearing.map { b =>
+      val f = b.fact.get
+      when(b.cond, when(hasId(f.aid),
+        struct(f.aid.cast("long").as("attack_id"), lit(b.family == Attacks).as("is_atk"),
+          f.utc.as("device_utc_time"))))
+    }: _*)
+    // The needles are the phrases of the fact arms' own table branches, and
+    // each arm fires only when its KV-scanned value (evt/astat) equals one
+    // of them. Such a phrase appears VERBATIM in the quote-stripped text:
     // both KV scans only extract substrings of what they scan (the syslog
     // scan reads the quote-stripped msg, the CEF scan the raw text), and
     // deleting quotes keeps every quote-free substring of the raw text
@@ -606,9 +597,8 @@ object Pipeline {
     // drop a fact row. It turns the second full-corpus KV parse into a
     // cheap substring scan plus a KV parse of only the start/stop rows
     // (guide §2.3: cut the expensive work before it runs, not after).
-    val needles = Seq("Attack Started", "Attack Stopped", "Attack started", "Attack ended")
     val stripped = stripQuotes(col("text"))
-    val pre = t.filter(needles.map(stripped.contains(_)).reduce(_ || _))
+    val pre = t.filter(bearing.flatMap(_.phrases).distinct.map(stripped.contains(_)).reduce(_ || _))
     parsedBase(pre, offsets)
       .select(col("ts"), explode(filter(facts, b => b.isNotNull)).as("f"))
       .select(col("f.attack_id"), col("f.is_atk"), col("ts"), col("f.device_utc_time"))
@@ -700,11 +690,7 @@ object Pipeline {
     */
   def attacksCorrelated(spark: SparkSession, dir: String, rep: Int = 1,
                         store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame =
-    records(spark, dir, rep, families = Set(Attacks), store = store)
-      .select(famNames(colsSyslogStart).map(col): _*)
-
-  private def famNames(cols: Seq[(String, Column)]): Seq[String] =
-    Seq("conv_id", "turn_idx", "ts") ++ cols.map(_._1) ++ Seq("facility", "severity")
+    familyRecords(spark, dir, rep, Attacks, store)
 
   /** Stats / traffic families off the family-pruned explode in ONE pass:
     * these families never receive the W3 lifecycle rewrite, so they skip
@@ -713,17 +699,21 @@ object Pipeline {
     */
   def statsRecords(spark: SparkSession, dir: String, rep: Int = 1,
                    store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame =
-    familyRecords(spark, dir, rep, Stats, colsSyslogSample, store)
+    familyRecords(spark, dir, rep, Stats, store)
 
   def trafficRecords(spark: SparkSession, dir: String, rep: Int = 1,
                      store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame =
-    familyRecords(spark, dir, rep, Traffic, colsTraffic, store)
+    familyRecords(spark, dir, rep, Traffic, store)
 
-  private def familyRecords(spark: SparkSession, dir: String, rep: Int,
-                            family: String, cols: Seq[(String, Column)],
-                            store: graft.sources.TranscriptTable): DataFrame =
+  /** One family's records in its output column order: the render order of
+    * the family's first table branch (q05/q06/q07 schemas).
+    */
+  private def familyRecords(spark: SparkSession, dir: String, rep: Int, family: String,
+                            store: graft.sources.TranscriptTable): DataFrame = {
+    val names = branches.find(_.family == family).get.cols.map(_._1)
     records(spark, dir, rep, families = Set(family), store = store)
-      .select(famNames(cols).map(col): _*)
+      .select((Seq("conv_id", "turn_idx", "ts") ++ names ++ Seq("facility", "severity")).map(col): _*)
+  }
 
   /** Downstream rollup (attacks x their mitigation-stat samples) in ONE
     * scan: both families come out of a single family-pruned explode, the
@@ -773,28 +763,30 @@ object Pipeline {
   def rejects(spark: SparkSession, dir: String, rep: Int = 1,
               store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
     val t = transcriptsClean(spark, dir, rep, store)
+    // What the table parses: the syslog event phrases, the traffic stat
+    // types and the CEF modules (sorted, so each IN list has one order).
+    val syslog = branches.filter(_.module.isEmpty)
+    val events = syslog.filter(_.family != Traffic).flatMap(_.phrases).distinct.sorted
+    val statTypes = syslog.filter(_.family == Traffic).flatMap(_.phrases)
+    val modules = branches.flatMap(_.module).distinct.sorted
     val fmt = remoteLogFormat(col("text"))
     val spl = split(col("text"), "\\|")
     val kv = kvSyslog(stripQuotes(col("text")))
     val evt = element_at(kv, "dos_attack_event")
+    val msgName = element_at(kv, "errdefs_msg_name")
+    val statType = element_at(kv, "traffic_stat_type")
     val reason = when(fmt === "Unknown", "unknown_format")
       .when(fmt === "CEF" && size(spl) =!= 8, "cef_bad_arity")
-      .when(fmt === "CEF" && element_at(spl, 3) === "ASM" &&
-        element_at(spl, 5) =!= "DOS L7 attack", "cef_unsupported_attack_type")
-      .when(fmt === "CEF" && !element_at(spl, 3).isin("ASM", "Advanced Firewall Module"),
-        "cef_unknown_module")
-      .when(fmt === "Syslog" && evt.isNotNull &&
-        !evt.isin("Attack Sampled", "Attack Started", "Attack Stopped", "TCP Syncookie"),
-        "unknown_dos_event")
+      .when(fmt === "CEF" && element_at(spl, 3) === Asm &&
+        element_at(spl, 5) =!= AsmAttackType, "cef_unsupported_attack_type")
+      .when(fmt === "CEF" && !element_at(spl, 3).isin(modules: _*), "cef_unknown_module")
+      .when(fmt === "Syslog" && evt.isNotNull && !evt.isin(events: _*), "unknown_dos_event")
+      // a missing (or empty, which the KV scan drops) stat type is unknown
+      // too: `!isin(null)` is null, which no arm would match
+      .when(fmt === "Syslog" && evt.isNull && msgName === TrafficStatistics &&
+        (statType.isNull || !statType.isin(statTypes: _*)), "unknown_traffic_stat_type")
       .when(fmt === "Syslog" && evt.isNull &&
-        element_at(kv, "errdefs_msg_name") === "Traffic Statistics" &&
-        !element_at(kv, "traffic_stat_type").isin(
-          "Cryptographic SYN Cookie", "Reaped Flow", "Active Flow", "Missed Flow"),
-        "unknown_traffic_stat_type")
-      .when(fmt === "Syslog" && evt.isNull &&
-        (element_at(kv, "errdefs_msg_name").isNull ||
-          element_at(kv, "errdefs_msg_name") =!= "Traffic Statistics"),
-        "unknown_syslog_message")
+        (msgName.isNull || msgName =!= TrafficStatistics), "unknown_syslog_message")
     t.withColumn("reject_reason", reason)
       .filter(col("reject_reason").isNotNull)
       .select(col("conv_id"), col("turn_idx"), col("reject_reason"))

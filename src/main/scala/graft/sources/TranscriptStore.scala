@@ -29,14 +29,15 @@ object TranscriptStore extends TranscriptTable {
     digest.take(4).map("%02x".format(_)).mkString
   }
 
-  /** The store directory for (dir, rep). The key drops the leading `_`/`.`
-    * that an absolute `dir` maps to: Spark treats such a name as hidden and
-    * warns that all paths were ignored on every read of the store.
+  /** The store directory for (dir, rep), under the running checkout's
+    * `target/transcripts`. The key drops the leading `_`/`.` that an
+    * absolute `dir` maps to: Spark treats such a name as hidden and warns
+    * that all paths were ignored on every read of the store.
     */
   private[graft] def storePath(dir: String, rep: Int): String = {
     val key = dir.replaceAll("[^a-zA-Z0-9.]", "_").replaceAll("^[_.]+", "") +
       (if (rep > 1) s"_x$rep" else "") + s"_v$templateVersion"
-    s"/root/repo/target/transcripts/$key"
+    Paths.get(sys.props("user.dir"), "target", "transcripts", key).toString
   }
 
   /** Synthesize-if-needed, then return the parquet-backed transcripts scan. */

@@ -180,6 +180,8 @@ class LineageSpec extends SparkSpec {
 
   test("transcript store path has no hidden segment, so its reads see the data files") {
     val path = TranscriptStore.storePath(dir, 1)
+    // rooted at the running checkout, so a second checkout keeps its own store
+    assert(Paths.get(path).getParent == Paths.get(sys.props("user.dir"), "target", "transcripts"))
     val hidden = Paths.get(path).iterator().asScala.map(_.toString)
       .filter(seg => seg.startsWith("_") || seg.startsWith(".")).toSeq
     assert(hidden.isEmpty, s"$path has hidden segments $hidden")

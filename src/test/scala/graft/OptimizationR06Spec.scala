@@ -113,23 +113,57 @@ class OptimizationR06Spec extends SparkSpec {
   test("lifeFacts prefilter keeps start/stop facts whose phrase carries a quote") {
     // the syslog KV scan reads the quote-stripped message, so a quote
     // inside `Attack Started` still parses to the phrase: the prefilter
-    // must test the same stripped text, or the fact silently drops
+    // must test the same stripped text, or the fact silently drops. The
+    // episodes cover every fact branch (syslog, CEF-AFM with its
+    // syslog-rescanned stop keys, CEF-ASM), zero ids, and decoy turns that
+    // carry a phrase but are no fact.
     val offsets = graft.sources.Transcripts.utcOffsets(spark)
     def payload(aid: Int, evt: String, sec: Int) =
       "<134>x b info tmm1: [hostname=b.lab bigip_mgmt_ip=172.16.21.41 " +
         f"date_time=2015-03-22 10:00:$sec%02d dos_attack_id=$aid dos_attack_event=$evt " +
         "severity=1 errdefs_msg_name=Network DoS Event]"
-    // 1-3 quotes at random positions after the `<134>` header (which the
-    // format dispatch reads before any strip)
+    def afm(aid: Int, status: String, sec: Int) = {
+      val dt = f"2015-03-22 10:00:$sec%02d"
+      // a stop's keys come from a syslog-regex rescan, so they lead
+      val stopKeys = if (status == "Attack Stopped") s"date_time=$dt dos_attack_id=$aid zz=0  " else ""
+      "CEF:0|F5|Advanced Firewall Module|11.6.0|Network DoS Attack|Flood attack|7|" + stopKeys +
+        s"dvchost=b dvc=172.16.21.41 rt=$dt act=Drop src=10.0.0.1 " +
+        s"cn3=$aid cn3Label=attack_id cs1=$status cs1Label=attack_status"
+    }
+    def asm(aid: Int, status: String, sec: Int) =
+      "CEF:0|F5|ASM|11.6.0|DOS L7 attack|Source IP-Based Rate Limiting|5|" +
+        f"dvchost=b dvc=172.16.21.41 rt=2015-03-22 10:00:$sec%02d act=Drop src=10.0.0.9 " +
+        s"request=/x cs1=$aid cs1Label=attack_id cs2=$status cs2Label=attack_status " +
+        "cs3=TPS Increased cs3Label=detection_mode"
+    val kinds: Seq[(Int, Int, Boolean) => String] = Seq(
+      (a, s, st) => payload(a, if (st) "Attack Started" else "Attack Stopped", s),
+      (a, s, st) => afm(a, if (st) "Attack Started" else "Attack Stopped", s),
+      (a, s, st) => asm(a, if (st) "Attack started" else "Attack ended", s))
+    val decoys: Seq[Int => String] = Seq(
+      a => payload(a, "Attack Sampled", 1).replace("severity=1", "dos_attack_name=Attack Stopped"),
+      a => payload(a, "TCP Syncookie", 2),
+      a => afm(a, "Attack Sampled", 3),
+      a => afm(a, "TCP Syncookie", 4),
+      a => asm(a, "Mitigation stats", 5))
+    // 1-3 quotes at random positions after the 5-character format prefix
+    // (which the format dispatch reads before any strip)
     def quoted(text: String): Gen[String] = for {
       k <- Gen.choose(1, 3)
       at <- Gen.listOfN(k, Gen.choose(5, text.length))
     } yield at.sorted.reverse.foldLeft(text)((acc, i) => acc.patch(i, "\"", 0))
-    // n episodes, each one start and one stop, so a dropped fact of either
-    // kind changes that episode's aggregate row
+    // n episodes of one kind each: a start and a stop (a dropped fact of
+    // either kind changes that episode's aggregate row), id 0 in about
+    // one of five, sometimes a second start, plus decoys on the same ids
+    val episode: Gen[List[String]] = for {
+      a <- Gen.choose(1, 9)
+      aid <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.const(a))
+      kind <- Gen.oneOf(kinds)
+      twice <- Gen.frequency(1 -> true, 4 -> false)
+      decoy <- Gen.oneOf(decoys)
+    } yield List(kind(aid, a, true), kind(aid, 30 + a, false), decoy(aid)) ++
+      (if (twice) List(kind(aid, 10 + a, true)) else Nil)
     val episodes: Gen[List[String]] = Gen.choose(3, 6).flatMap { n =>
-      Gen.sequence[List[String], String]((1 to n).flatMap(a => Seq(
-        payload(a, "Attack Started", a), payload(a, "Attack Stopped", 30 + a))).map(quoted))
+      Gen.listOfN(n, episode).flatMap(es => Gen.sequence[List[String], String](es.flatten.map(quoted)))
     }
     (0 until 12).foreach { i =>
       val seed = 7000L + i
