@@ -3,10 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 
 /** Diagnostic main: formatted physical plans, so plan regressions (lost
   * pushdown, surprise shuffles, dropped broadcasts, codegen breaks) are
-  * visible without running the queries.
+  * visible without running the queries. Each plan is followed by one line
+  * per whole-stage-codegen stage (`codegenStages`), so a stage that falls
+  * out of codegen or whose largest method crosses HotSpot's 8,000-byte JIT
+  * limit shows in a `scripts/plandiff.sh` diff.
   *
   * Usage: runMain graft.Plans <sfDir>
   *          prints the load-bearing queries' plans to stdout;
@@ -24,7 +28,9 @@ object Plans {
     spark.conf.set("spark.sql.debug.maxToStringFields", 100000)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     def query(q: String): () => DataFrame = () => SparkEntry.queries(q)(spark, dir)
-    def plan(df: DataFrame): String = df.queryExecution.explainString(FormattedMode)
+    def plan(df: DataFrame): String =
+      (df.queryExecution.explainString(FormattedMode) +: codegenStages(df).map(_.line))
+        .mkString("", "\n", "\n")
 
     if (args.length >= 3) {
       val (outDir, tag, wanted) = (args(1), args(2), args.drop(3))
@@ -54,5 +60,40 @@ object Plans {
       }
     }
     spark.stop()
+  }
+
+  /** HotSpot's `HugeMethodLimit`: a method with more bytecode than this is
+    * never JIT-compiled, so it runs interpreted however hot it gets.
+    */
+  val HugeMethodLimit = 8000
+
+  /** One whole-stage-codegen stage: its id, its largest generated method
+    * (bytes of bytecode) and its first operator.
+    */
+  final case class CodegenStage(id: Int, maxMethodBytes: Int, firstOp: String) {
+    def line: String = s"codegen stage $id: max method $maxMethodBytes B, first $firstOp" +
+      (if (maxMethodBytes > HugeMethodLimit) s" (over the $HugeMethodLimit B JIT limit)" else "")
+  }
+
+  private val StageHead = """^\*\((\d+)\) (\w+)""".r
+
+  /** The codegen stages of `df`'s plan as planned with AQE off, each
+    * compiled for its bytecode size. AQE collapses codegen stages only as
+    * it runs each query stage, so an adaptive plan that has not run has
+    * none to show.
+    */
+  def codegenStages(df: DataFrame): Seq[CodegenStage] = {
+    val spark = df.sparkSession
+    val aqe = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try codegenStringSeq(spark.sessionState.executePlan(df.queryExecution.logical).executedPlan)
+      .map { case (subtree, _, stats) =>
+        val head = subtree.linesIterator.next()
+        val m = StageHead.findFirstMatchIn(head)
+          .getOrElse(sys.error(s"not a codegen stage head: $head"))
+        CodegenStage(m.group(1).toInt, stats.maxMethodCodeSize, m.group(2))
+      }
+    finally spark.conf.set(aqe, was)
   }
 }

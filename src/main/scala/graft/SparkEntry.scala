@@ -34,8 +34,6 @@ object SparkEntry {
       .groupBy("record_type", "remote_log_format")
       .count()
 
-  private def kvv(key: String) = element_at(col("kv"), key)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- pipeline: parse -> enrich -> normalize -> route -> aggregate ----
     // the global orderBy is the DRIVER CONTRACT's deterministic-dump
@@ -65,10 +63,10 @@ object SparkEntry {
       Pipeline.parsedBase(Pipeline.transcriptsClean(s, dir), Transcripts.utcOffsets(s))
         .filter(col("fmt") === "Syslog")
         .select(col("conv_id"), col("turn_idx"),
-          kvv("date_time").as("date_time"),
-          kvv("dos_attack_event").as("dos_attack_event"),
-          kvv("severity").as("severity_kv"),
-          kvv("hostname").as("hostname_kv"))
+          Pipeline.kvv("date_time").as("date_time"),
+          Pipeline.kvv("dos_attack_event").as("dos_attack_event"),
+          Pipeline.kvv("severity").as("severity_kv"),
+          Pipeline.kvv("hostname").as("hostname_kv"))
         .orderBy("conv_id", "turn_idx")),
     "q05_attacks" -> ((s, dir) =>
       Pipeline.attacksCorrelated(s, dir).orderBy("conv_id", "turn_idx")),

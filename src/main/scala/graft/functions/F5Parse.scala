@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Column-level parse primitives for the F5 BIG-IP syslog / CEF wire formats.
@@ -10,9 +10,13 @@ import org.apache.spark.sql.functions._
   * whole parse path stays inside WholeStageCodegen — no UDFs, no RDDs.
   *
   * The reference re-runs near-identical regex scans up to 8x per message
-  * (lib/logstash/inputs/modules/bbn_syslog.rb:60,193,253,361,460,521,576,631);
-  * here the key=value scan happens once per row into a MapType column that
-  * every record family projects from.
+  * (lib/logstash/inputs/modules/bbn_syslog.rb:60,193,253,361,460,521,576,631)
+  * and pairs ArcSight labels in a second pass (bbn_cef.rb:136-174); here one
+  * tokenizer (KvScan) reads each row once and feeds two outputs: the
+  * `kv_extract` map (`kvSyslog`/`kvCef`, the SQL surface) and the typed
+  * struct (`kvSlots`) whose fixed slots hold the declared keys and paired
+  * labels every record family projects from (`Pipeline.KvKeys` /
+  * `Pipeline.DynLabels`, declared next to the event table).
   */
 object F5Parse {
 
@@ -53,12 +57,21 @@ object F5Parse {
 
   /** One-pass syslog KV scan -> map<string,string>, via the native KvScan
     * Catalyst expression (codegen-friendly, no regex). Last-assignment-wins
-    * duplicate semantics match the reference's elsif chains.
+    * duplicate semantics match the reference's elsif chains. This is the
+    * `kv_extract` SQL surface; the parse path reads `kvSlots` instead.
     */
   def kvSyslog(text: Column): Column = KvExtract(text, cef = false)
 
   /** One-pass CEF-extension KV scan -> map<string,string> (bbn_cef.rb:64). */
   def kvCef(text: Column): Column = KvExtract(text, cef = true)
+
+  /** The same one pass, typed: `struct<kv, dyn>` holding each of `slots`'
+    * declared keys and, for a CEF scan, each declared ArcSight label paired
+    * by name (P7) — the values `kvSyslog`/`kvCef` and `pairedLabels` give
+    * at those names (KvSlots).
+    */
+  def kvSlots(text: Column, cef: Boolean, slots: KvSlots): Column =
+    GraftBridge.column(KvSlotsExtract(GraftBridge.expression(text), cef, slots))
 
   /** Reference regex implementations, kept as the differential baseline the
     * native scanner is property-tested against (F5ParseSpec).
@@ -66,12 +79,15 @@ object F5Parse {
   def kvSyslogRegex(text: Column): Column = kvMapFromPattern(text, SyslogKvPattern)
   def kvCefRegex(text: Column): Column = kvMapFromPattern(text, CefKvPattern)
 
-  /** ArcSight dynamic-label pairing (bbn_cef.rb:136-174): a key `X` paired
-    * with `XLabel` becomes {value-of-XLabel: value-of-X}. The reference
-    * depends on insertion order (non-Label key immediately before its Label);
-    * this name-based lookup is order-independent — documented semantic
-    * cleanup per SURVEY.md §7.5.2, strictly more robust, identical on
-    * well-ordered input.
+  /** ArcSight dynamic-label pairing (bbn_cef.rb:136-174) over a KV map: a
+    * key `X` paired with `XLabel` becomes {value-of-XLabel: value-of-X}.
+    * The reference depends on insertion order (non-Label key immediately
+    * before its Label); this name-based lookup is order-independent —
+    * documented semantic cleanup per SURVEY.md §7.5.2, strictly more
+    * robust, identical on well-ordered input. Kept as the reference the
+    * typed scan's `dyn` slots are property-tested against (F5ParseSpec),
+    * as `kvSyslogRegex` is for the scan itself; needs
+    * `spark.sql.mapKeyDedupPolicy=LAST_WIN` when two labels carry one value.
     */
   def pairedLabels(kv: Column): Column = {
     val labelKeys = filter(map_keys(kv), k =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F5Parse._
+import graft.functions.KvSlots
 import graft.sources.Transcripts
 
 /** The parse -> enrich -> normalize -> route -> aggregate pipeline over the
@@ -27,6 +28,13 @@ import graft.sources.Transcripts
   * record is declared once, in the event table (`branches`): explodedAll,
   * lifeFacts (arms and prefilter needles) and rejects (its known sets) all
   * derive from it, so none of them can drift from the others.
+  *
+  * `kv` and `dyn` are structs, not maps: the typed KV scan
+  * (`F5Parse.kvSlots`) fills one slot per declared key (`KvKeys`) and, on
+  * CEF rows, per declared ArcSight label (`DynLabels`) in its byte pass, so
+  * a probe is a field read and the whole parse base compiles as one
+  * whole-stage-codegen stage. Both lists sit next to the event table;
+  * `kvv`/`dyn` reject an undeclared name when the plan is built.
   */
 object Pipeline {
 
@@ -68,8 +76,16 @@ object Pipeline {
       broadcast(health.select(col("health")).distinct()),
       transcripts("text") === col("health"), "left_anti")
 
-  private def kvv(key: String): Column = element_at(col("kv"), key)
-  private def dyn(key: String): Column = element_at(col("dyn"), key)
+  /** A declared key's / label's slot of the typed scan; an undeclared name
+    * fails here, when the plan is built.
+    */
+  def kvv(key: String): Column = slot(col("kv"), KvKeys, key)
+  private def dyn(label: String): Column = slot(col("dyn"), DynLabels, label)
+  private def stopKv(key: String): Column = slot(col("stop_sykv"), StopSlots.keys, key)
+  private def slot(s: Column, declared: Seq[String], name: String): Column = {
+    require(declared.contains(name), s"`$name` is not a declared slot: $declared")
+    s.getField(name)
+  }
 
   // ---------------------------------------------------------------------
   // Family normalizations as shared (name -> column) lists
@@ -326,6 +342,40 @@ object Pipeline {
 
   private def isModule(module: String): Column = element_at(col("spl"), 3) === module
 
+  /** Every key the renders, guards and hoists probe (`kvv`): the typed
+    * scan's `kv` slots. Syslog keys, then CEF extension keys; a scan of
+    * either format fills whichever of them its text carries.
+    */
+  val KvKeys: Seq[String] = Seq(
+    "device_vendor", "device_product", "device_version", "hostname", "bigip_mgmt_ip",
+    "date_time", "severity", "errdefs_msg_name", "dos_attack_event", "dos_attack_id",
+    "dos_attack_name", "context_name", "route_domain", "partition_name", "flow_id", "action",
+    "dos_packets_received", "dos_packets_dropped", "dns_query_name", "dns_query_type",
+    "source_ip", "source_port", "dest_ip", "dest_port", "vlan",
+    "traffic_stat_type", "traffic_stat_cnt", "cookie_challenge_issued",
+    "cookie_challenge_passed", "cookie_flow_accepted", "cookie_flow_rejected",
+    "rt", "dvchost", "dvc", "act", "src", "spt", "dst", "dpt", "request",
+    "F5RouteDomain", "F5FlowID")
+
+  /** Every ArcSight label the CEF renders and guards probe (`dyn`): the
+    * typed scan's `dyn` slots, each holding the value of the key `X` whose
+    * `XLabel` carries that name (P7).
+    */
+  val DynLabels: Seq[String] = Seq(
+    "attack_id", "attack_status", "detection_mode", "detection_average", "dropped_requests",
+    "virtual_name", "Virtual Server", "dos_attack_name", "dos_packets_received",
+    "dos_packets_dropped", "query_name", "query_type", "vlan")
+
+  private val Slots = KvSlots(KvKeys, DynLabels)
+
+  /** The CEF/AFM stop quirk's syslog-mode rescan reads two keys only. Its
+    * own narrow layout keeps the parse base's rows under Spark's
+    * whole-stage-codegen width limit (`spark.sql.codegen.maxFields`, 100
+    * nested fields): a second 42-field `kv` struct crossed it and split
+    * the base into an interpreted Project.
+    */
+  private val StopSlots = KvSlots(Seq("dos_attack_id", "date_time"), Nil)
+
   /** A start or stop branch's lifecycle fact: the attack id it carries and
     * the UTC time it closes its episode at (a typed null for a start).
     */
@@ -335,12 +385,21 @@ object Pipeline {
     * the CEF header's module otherwise (guard: `cef_ok` and that module).
     * The branch fires when its guard holds, `pre` holds, and `on`, the
     * probed event/status value, is one of `phrases`.
+    *
+    * The format guard reads the typed scan's structs whole: `dyn` is
+    * non-null exactly on the CEF rows that passed `cef_ok`, and `kv`
+    * without `dyn` exactly on syslog rows. A whole-struct reference keeps
+    * Spark's nested-column aliasing from splitting `kv`/`dyn` into ~50
+    * single-field columns under the render's Generate, which grew the
+    * parse base's generated method past the 8,000-byte JIT limit
+    * (PlanShapeSpec's codegen guard).
     */
   private final case class Branch(family: String, module: Option[String], on: Column,
       phrases: Seq[String], cols: Seq[(String, Column)], fact: Option[Fact] = None,
       pre: Option[Column] = None) {
     def cond: Column = {
-      val guard = module.fold(col("fmt") === "Syslog")(m => col("cef_ok") && isModule(m))
+      val guard = module.fold(col("kv").isNotNull && col("dyn").isNull)(m =>
+        col("dyn").isNotNull && isModule(m))
       val hit = if (phrases.size == 1) on === phrases.head else on.isin(phrases: _*)
       guard && pre.fold(hit)(_ && hit)
     }
@@ -370,7 +429,6 @@ object Pipeline {
         Some(Fact(aid, utc)))
     // CEF/AFM stop keys come from the SYSLOG-regex rescan of the raw
     // message (bbn_cef.rb:541), the guarded `stop_sykv` base column.
-    val afmStopKv = col("stop_sykv")
     Seq(
       start(None, evt, AttackStarted, colsSyslogStart, syId),
       Branch(Attacks, None, evt, Seq("TCP Syncookie"), colsSyslogSync),
@@ -381,8 +439,8 @@ object Pipeline {
       stop(None, evt, AttackStopped, syId, col("sy_utc")),
       start(Some(Afm), astat, AttackStarted, colsCefStart(afm = true, _), cefId),
       Branch(Stats, Some(Afm), astat, Seq(AttackSampled), colsCefAfmSample),
-      stop(Some(Afm), astat, AttackStopped, element_at(afmStopKv, "dos_attack_id"),
-        toUtcOrEmpty(element_at(afmStopKv, "date_time"), col("offh"))),
+      stop(Some(Afm), astat, AttackStopped, stopKv("dos_attack_id"),
+        toUtcOrEmpty(stopKv("date_time"), col("offh"))),
       start(Some(Asm), astat, AsmStarted, colsCefStart(afm = false, _), cefId),
       Branch(Stats, Some(Asm), astat, Seq(AsmStarted, MitigationStats, "Mitigation changed"),
         colsCefAsmStats),
@@ -484,11 +542,13 @@ object Pipeline {
   }
 
   /** The one parse base over (health-filtered) transcripts: format
-    * dispatch (`fmt`; Unknown rows dropped), quote strip, one-pass KV scan,
-    * CEF arity/module guard (`cef_ok`), dynamic-label pairing, PRI
-    * decomposition, offset enrichment. Every withColumn here is a lazy
-    * projection — consumers that never reference `dyn` or `facility` pay
-    * nothing for them (column pruning).
+    * dispatch (`fmt`; Unknown rows dropped), quote strip, CEF arity/module
+    * guard (`cef_ok`), the typed one-pass KV scan with its dynamic-label
+    * pairing (`kv`/`dyn` structs), PRI decomposition, offset enrichment.
+    * Every withColumn here is a lazy projection — consumers that never
+    * reference `dyn` or `facility` pay nothing for them (column pruning).
+    * Every expression here has generated code, so the base runs as one
+    * whole-stage-codegen stage (PlanShapeSpec's codegen guard).
     */
   def parsedBase(t: DataFrame, offsets: DataFrame): DataFrame = {
     val fmt = remoteLogFormat(col("text"))
@@ -520,12 +580,11 @@ object Pipeline {
         "cef_ok" -> cefOk,
         "facility" -> (col("_pri") / lit(8)).cast("int"),
         "severity" -> pmod(col("_pri"), lit(8))))
-      .withColumn("kv",
-        when(isSy, kvSyslog(col("msg")))
-          .when(col("cef_ok"), kvCef(element_at(col("spl"), 8))))
-      .withColumns(Map(
-        "dyn" -> when(col("cef_ok"), pairedLabels(col("kv"))),
-        "host" -> when(isSy, kvv("bigip_mgmt_ip")).otherwise(kvv("dvc"))))
+      .withColumn("kvs",
+        when(isSy, kvSlots(col("msg"), cef = false, Slots))
+          .when(col("cef_ok"), kvSlots(element_at(col("spl"), 8), cef = true, Slots)))
+      .withColumns(Map("kv" -> col("kvs.kv"), "dyn" -> col("kvs.dyn")))
+      .withColumn("host", when(isSy, kvv("bigip_mgmt_ip")).otherwise(kvv("dvc")))
       .join(broadcast(offsets), Seq("host"), "left")
       .withColumn("offh", coalesce(col("utc_offset_h"), lit(0)))
       // Shared per-row subexpressions hoisted to named columns (guide §4):
@@ -543,7 +602,8 @@ object Pipeline {
       // The CEF/AFM stop quirk's syslog-regex rescan of the raw message
       // (bbn_cef.rb:541) is guarded to exactly the rows of that branch and
       // computed once, not once per probed key.
-      .withColumn("stop_sykv", when(afmStop.cond, kvSyslog(col("text"))))
+      .withColumn("stop_sykv",
+        when(afmStop.cond, kvSlots(col("text"), cef = false, StopSlots).getField("kv")))
   }
 
   private def afmStop: Branch = branches.find(b => b.family == Stop && b.module.contains(Afm)).get
@@ -769,12 +829,11 @@ object Pipeline {
     val events = syslog.filter(_.family != Traffic).flatMap(_.phrases).distinct.sorted
     val statTypes = syslog.filter(_.family == Traffic).flatMap(_.phrases)
     val modules = branches.flatMap(_.module).distinct.sorted
-    val fmt = remoteLogFormat(col("text"))
-    val spl = split(col("text"), "\\|")
-    val kv = kvSyslog(stripQuotes(col("text")))
-    val evt = element_at(kv, "dos_attack_event")
-    val msgName = element_at(kv, "errdefs_msg_name")
-    val statType = element_at(kv, "traffic_stat_type")
+    val fmt = col("fmt")
+    val spl = col("spl")
+    val evt = kvv("dos_attack_event")
+    val msgName = kvv("errdefs_msg_name")
+    val statType = kvv("traffic_stat_type")
     val reason = when(fmt === "Unknown", "unknown_format")
       .when(fmt === "CEF" && size(spl) =!= 8, "cef_bad_arity")
       .when(fmt === "CEF" && element_at(spl, 3) === Asm &&
@@ -787,8 +846,18 @@ object Pipeline {
         (statType.isNull || !statType.isin(statTypes: _*)), "unknown_traffic_stat_type")
       .when(fmt === "Syslog" && evt.isNull &&
         (msgName.isNull || msgName =!= TrafficStatistics), "unknown_syslog_message")
-    t.withColumn("reject_reason", reason)
+    // The split and the typed scan are named columns under the CASE, each
+    // guarded to the format whose arms read it. The CASE is generated as a
+    // one-element explode, not projected: the optimizer pushes a Filter
+    // through a Project by substituting its aliases, which would put the
+    // split and the scan back into the pushed-down condition once per arm
+    // that reads them. A filter on a generated column stays above it.
+    t.withColumn("fmt", remoteLogFormat(col("text")))
+      .withColumns(Map(
+        "spl" -> when(fmt === "CEF", split(col("text"), "\\|")),
+        "kv" -> when(fmt === "Syslog",
+          kvSlots(stripQuotes(col("text")), cef = false, Slots).getField("kv"))))
+      .select(col("conv_id"), col("turn_idx"), explode(array(reason)).as("reject_reason"))
       .filter(col("reject_reason").isNotNull)
-      .select(col("conv_id"), col("turn_idx"), col("reject_reason"))
   }
 }

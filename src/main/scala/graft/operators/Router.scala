@@ -69,10 +69,7 @@ object Router {
     */
   def stage(spark: SparkSession, dir: String, outRoot: String, rep: Int = 1,
             store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
-    Pipeline.configure(spark)
     val staged = stagedDir(outRoot).toString
-    val t = Pipeline.healthFilter(store.table(spark, dir, rep),
-      Transcripts.healthStrings(spark))
     // Fan-out axes (the north rule's per-severity and per-tool sinks):
     //   - record_type and tool are DIRECTORY axes everywhere;
     //   - attack_severity is a directory axis for the attacks family (see
@@ -81,10 +78,21 @@ object Router {
     //     so severity predicates prune via parquet min/max stats. It cannot
     //     be a directory axis for every family: traffic_stats has no
     //     severity (all-null partition dirs would also break type inference).
-    Pipeline.explodedAll(t, Transcripts.utcOffsets(spark))
+    exploded(spark, dir, rep, store)
       .sortWithinPartitions("record_type", "tool", "attack_severity")
       .write.mode("overwrite").partitionBy("record_type", "tool").parquet(staged)
     spark.read.parquet(staged)
+  }
+
+  /** The rows `stage` writes: one parse of the health-filtered transcripts,
+    * every family's records plus the internal `_stop` rows.
+    */
+  private[graft] def exploded(spark: SparkSession, dir: String, rep: Int,
+                              store: graft.sources.TranscriptTable): DataFrame = {
+    Pipeline.configure(spark)
+    val t = Pipeline.healthFilter(store.table(spark, dir, rep),
+      Transcripts.healthStrings(spark))
+    Pipeline.explodedAll(t, Transcripts.utcOffsets(spark))
   }
 
   /** Step 2, one partition: publish `outRoot/record_type=p` from the staged

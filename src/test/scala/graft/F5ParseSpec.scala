@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.functions.F5Parse
+import graft.functions.{F5Parse, KvSlots}
+import graft.operators.Pipeline
 
 /** Unit + property tests for the column-level parse primitives
   * (FIXTURES.md §5). Property inputs are drawn from ScalaCheck Gens with a
@@ -137,6 +138,66 @@ class F5ParseSpec extends SparkSpec {
         assert(native == regex, s"cef=$cef input=${r.getString(2)}")
       }
     }
+  }
+
+  test("typed scan slots equal the regex map and pairedLabels at every declared name") {
+    // Differential property of the typed scan (KvSlots) against the
+    // reference chain: each declared key's slot == regex map at that key,
+    // each declared label's dyn slot == pairedLabels(regex map) at that
+    // label. 300 random texts per format from seeds 42..341, plus fixed
+    // texts that pin each edge case. Non-ASCII text avoids U+0085/U+2028/
+    // U+2029: java.util.regex's `$` also matches before a final one of
+    // those, which the scanner's CEF end anchor does not.
+    val slots = KvSlots(Pipeline.KvKeys, Pipeline.DynLabels)
+    val value = Gen.oneOf("1", "", "Attack Started", "10.0.0.1", "a_b", "x y", "2015-03-22 10:01:02",
+      "café", "Virtual Server", "attack_id", "vlan")
+    val label = Gen.oneOf(Pipeline.DynLabels ++ Seq("ATTACK_STATUS", "virtual server", "other", ""))
+    val wireKey = Gen.oneOf(Pipeline.KvKeys.take(12) ++ Pipeline.KvKeys.takeRight(11) ++
+      Seq("DVC", "Dvc", "Dos_attack_event", "f5flowid", "cs1", "cs2", "cn3", "x", "Label", "kéy"))
+    val frag = Gen.oneOf(
+      Gen.zip(wireKey, value).map { case (k, v) => s"$k=$v " },
+      // X / XLabel pairs, a label with no X, and a bare `Label` key
+      Gen.zip(Gen.oneOf("cs1", "cs2", "cn3", "cs4", "Label", "Virtual"), label)
+        .map { case (x, l) => s"${x}Label=$l " },
+      Gen.zip(Gen.oneOf("cs1", "cs2", "cn3"), value).map { case (x, v) => s"$x=$v " },
+      Gen.oneOf("] ", "[", "  ", "\t", "é日 ", "x==y ", "Label=attack_id "))
+    val gen = Gen.listOf(frag).map(_.mkString)
+    val fixed = Seq(
+      "[dvc=1 dvc=2 dvc= act=3 act=4]", // duplicate key: last non-empty value wins
+      "cs1=a cs1Label=vlan cs2=b cs2Label=vlan", // two labels carry one value
+      "cs1=a cs2=b cs2Label=vlan cs1Label=vlan cs1Label=vlan", // key order is first occurrence
+      "cs3Label=attack_id cn3=7", // label with no X
+      "cs5=vs1 cs5Label=Virtual Server", // a label value with a space
+      "Label=attack_id =5 Label=x", // bare Label key
+      "DVC=1 Dvc=2 cs1=z cs1Label=ATTACK_STATUS dvc=3", // case-only differences
+      "dvc=café src=日本 act=oké cs1=éx cs1Label=attack_status x=1]")
+    val inputs = fixed ++ samples(gen, 300)
+    Seq(false, true).foreach { cef =>
+      val regex = if (cef) F5Parse.kvCefRegex(col("text")) else F5Parse.kvSyslogRegex(col("text"))
+      inputs.toDF("text").select(col("text"), F5Parse.kvSlots(col("text"), cef, slots),
+          regex, F5Parse.pairedLabels(regex))
+        .collect().foreach { r =>
+          val text = r.getString(0)
+          def mapAt(i: Int) = Option(r.getMap[String, String](i)).map(_.toMap).getOrElse(Map.empty)
+          val (typed, kv, paired) = (r.getStruct(1), mapAt(2), mapAt(3))
+          Pipeline.KvKeys.zipWithIndex.foreach { case (k, i) =>
+            assert(Option(typed.getStruct(0).getString(i)) == kv.get(k), s"cef=$cef key=$k text=$text")
+          }
+          if (cef) Pipeline.DynLabels.zipWithIndex.foreach { case (l, i) =>
+            assert(Option(typed.getStruct(1).getString(i)) == paired.get(l), s"label=$l text=$text")
+          }
+          else assert(typed.isNullAt(1), s"a syslog scan pairs no labels: $text")
+        }
+    }
+  }
+
+  test("declared slots: an undeclared or case-colliding name fails when the plan is built") {
+    assert(intercept[IllegalArgumentException](Pipeline.kvv("no_such_key"))
+      .getMessage.contains("no_such_key"))
+    assert(intercept[IllegalArgumentException](KvSlots(Seq("dvc", "DVC"), Nil))
+      .getMessage.contains("collide"))
+    assert(intercept[IllegalArgumentException](KvSlots(Nil, Seq("vlan", "Vlan")))
+      .getMessage.contains("collide"))
   }
 
   test("mitigation decision table D1 truth table (bbn_syslog.rb:104-145)") {

@@ -1,12 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.CreateArray
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, ProjectExec,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import graft.operators.Pipeline
+import graft.functions.{KvExtract, KvSlotsExtract}
+import graft.operators.{Pipeline, Router}
 
 /** Plan-shape pins for the parse pipeline: the scan count and the explode
   * branch count are the two levers behind the r2->r3 4-30x query speedups
@@ -56,6 +61,53 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val atk = Pipeline.attacksCorrelated(spark, dir)
     assert(explodeBranchCounts(atk).sorted == Seq(4, 6))
     assert(nParquetScans(atk) == 2)
+  }
+
+  test("q12 rejects: one KV scan and one split, under a CASE over attributes") {
+    // the reason CASE reads the typed scan and the CEF split as named
+    // columns; a Filter substituted through them would carry the scan once
+    // per arm that reads it (and the Project a second copy)
+    val plan = SparkEntry.queries("q12_rejects")(spark, dir).queryExecution.optimizedPlan
+    def count(p: Expression => Boolean): Int =
+      plan.collect { case n => n.expressions.map(_.collect { case e if p(e) => e }.size).sum }.sum
+    assert(count(e => e.isInstanceOf[KvSlotsExtract] || e.isInstanceOf[KvExtract]) == 1, plan)
+    assert(count(_.isInstanceOf[StringSplit]) == 1, plan)
+  }
+
+  test("codegen guard: the route's parse base is one compiled stage; no method over 8,000 bytes") {
+    // AQE off: an adaptive plan collapses its codegen stages only as it runs
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = Router.exploded(spark, dir, 1, graft.sources.TranscriptStore)
+      val plan = spark.sessionState.executePlan(df.queryExecution.logical).executedPlan
+      val gen = plan.collect { case g: GenerateExec => g }
+      assert(gen.size == 1, plan)
+      // parsedBase: every Project/Filter between the scan and the render's
+      // Generate, short of an exchange (the broadcast sides are own stages)
+      def upToExchange(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: Exchange => Nil
+        case _ => p +: p.children.flatMap(upToExchange)
+      }
+      val base = upToExchange(gen.head.child).collect { case p @ (_: ProjectExec | _: FilterExec) => p }
+      assert(base.exists(_.expressions.exists(_.exists(_.isInstanceOf[KvSlotsExtract]))), plan)
+      val stage = gen.head.child match {
+        case w: WholeStageCodegenExec =>
+          def within(p: SparkPlan): Seq[SparkPlan] = p match {
+            case _: InputAdapter => Nil
+            case _ => p +: p.children.flatMap(within)
+          }
+          within(w.child)
+        case other => fail(s"the Generate reads an uncompiled ${other.nodeName}:\n$plan")
+      }
+      base.foreach(b => assert(stage.exists(_ eq b), s"outside the parse base's stage: $b\n$plan"))
+      val fallback = base.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e }))
+      assert(fallback.isEmpty, fallback)
+      // a generated method over HotSpot's HugeMethodLimit is never JIT-compiled
+      val stages = Plans.codegenStages(df)
+      assert(stages.nonEmpty)
+      stages.foreach(s =>
+        assert(s.maxMethodBytes > 0 && s.maxMethodBytes <= Plans.HugeMethodLimit, s.line))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("lifecycle join resolves as broadcast: the wide records never shuffle") {
