@@ -708,6 +708,14 @@ object Pipeline {
       .drop("_n_starts", "_stop_utc")
   }
 
+  /** The lifecycle MERGE: the attacks rows of `staged`, closed by its own
+    * facts, without `record_type`. Router.commit and the streamed resolve
+    * (StreamingPipeline.incrementalResolveFrame) both run it.
+    */
+  def lifecycleMerge(staged: DataFrame): DataFrame =
+    applyLifecycle(staged.filter(col("record_type") === Attacks),
+      lifeAggOf(lifeFactsFromStaged(staged))).drop("record_type")
+
   // ---------------------------------------------------------------------
   // Entry points
   // ---------------------------------------------------------------------

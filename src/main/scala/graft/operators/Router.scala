@@ -18,9 +18,10 @@ import graft.sources.Transcripts
   *            device_utc_time) from the attacks/_stop partitions — a
   *            column-pruned columnar read of a tiny fraction of the routed
   *            bytes — aggregate the lifecycle facts, and rewrite ONLY the
-  *            attacks partition (the MERGE); every other partition promotes
-  *            by rename (a metadata commit, the local-FS stand-in for an
-  *            Iceberg snapshot commit).
+  *            attacks partition (the MERGE, Pipeline.lifecycleMerge, which
+  *            the streamed resolve runs too); every other partition
+  *            promotes by rename (a metadata commit, the local-FS stand-in
+  *            for an Iceberg snapshot commit).
   *
   * Net cost: one full parse pass + one small read + one small rewrite,
   * versus two full parse passes for the naive plan. checkpoint.Lineage runs
@@ -44,8 +45,9 @@ object Router {
     * that keeps schema inference from throwing on a sink directory that
     * holds no rows (a family that routed none; a stream whose batches were
     * all empty). Underscore-prefixed subtrees are skipped, mirroring
-    * Spark's hidden-path rule: a data file inside `_staged`/`_attacks`
-    * must not make the enclosing read look non-empty.
+    * Spark's hidden-path rule: a data file inside `_staged` or the
+    * streamed `_attacks` sidecar (attacks and `_stop` rows) must not make
+    * the enclosing read look non-empty.
     */
   private[graft] def hasParquet(path: String): Boolean = {
     val root = Paths.get(path)
@@ -103,9 +105,7 @@ object Router {
   def commit(back: DataFrame, outRoot: String, p: String): Unit = {
     val target = Paths.get(outRoot, s"record_type=$p")
     if (p == Pipeline.Attacks) {
-      val lifeAgg = Pipeline.lifeAggOf(Pipeline.lifeFactsFromStaged(back))
-      Pipeline.applyLifecycle(back.filter(col("record_type") === Pipeline.Attacks), lifeAgg)
-        .drop("record_type")
+      Pipeline.lifecycleMerge(back)
         .write.mode("overwrite").partitionBy("tool", "attack_severity")
         .parquet(target.toString)
     } else {

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import graft.operators.Pipeline
 
 /** Production streaming entry: the spark-submit composition of the streamed
   * route (parse -> bucketed routed sinks with the incremental W3 lifecycle
@@ -9,18 +11,18 @@ import org.apache.spark.sql.SparkSession
   * pair state ([[StreamingPipeline.exactConvPairsBatch]]) — the streamed
   * analog of `scripts/submit.sh Bench`'s batch route. Reference contrast:
   * the plugin's runtime loop is one blocking thread per socket
-  * (bbn_f5networks.rb:142-202); here both queries are checkpointed
-  * Structured Streaming jobs that restart exactly-once from their sinks.
+  * (bbn_f5networks.rb:142-202); here one checkpointed Structured Streaming
+  * query restarts exactly-once from its sinks.
   *
   * Usage (see scripts/submit.sh):
   *   streaming.StreamMain <sourceDir> <outRoot> [--drain]
   *
   * `sourceDir` is a parquet transcripts directory watched as a file stream
   * (the sandbox stand-in for the socket ingress; the live-socket path is
-  * spec-verified in StreamingSpec). Checkpoints and the exact-counts state
-  * live under `outRoot/_checkpoints` and `outRoot/_convpairs`. `--drain`
-  * processes everything currently available and exits (smoke/test mode);
-  * without it both queries run until terminated.
+  * spec-verified in StreamingSpec). The checkpoint and the exact-counts
+  * state live under `outRoot/_checkpoints` and `outRoot/_convpairs`.
+  * `--drain` processes everything currently available and exits
+  * (smoke/test mode); without it the query runs until terminated.
   */
 object StreamMain {
 
@@ -32,25 +34,22 @@ object StreamMain {
     finally spark.stop()
   }
 
-  /** Start (and optionally drain) both streaming queries. Split from main
-    * so specs drive it under the shared test session.
+  /** Start (and optionally drain) the one query: each micro-batch is parsed
+    * once, persisted, routed, and its non-`_stop` rows feed the conv-pair
+    * state. Split from main so specs drive it under the shared test session.
     */
   def run(spark: SparkSession, sourceDir: String, outRoot: String,
           drain: Boolean): Unit = {
-    val route = StreamingPipeline.routeStream(spark, sourceDir, outRoot,
-      s"$outRoot/_checkpoints/route")
-    val counts = StreamingPipeline
-      .streamRecords(spark, StreamingPipeline.streamTranscripts(spark, sourceDir))
-      .writeStream
-      .option("checkpointLocation", s"$outRoot/_checkpoints/convpairs")
-      .foreachBatch(StreamingPipeline.exactConvPairsBatch(s"$outRoot/_convpairs") _)
-      .start()
-    if (drain) {
-      route.processAllAvailable(); route.stop()
-      counts.processAllAvailable(); counts.stop()
-    } else {
-      route.awaitTermination()
-      counts.awaitTermination()
+    val q = StreamingPipeline.startStream(spark, sourceDir, s"$outRoot/_checkpoints/route") {
+      (batch, batchId) =>
+        val b = batch.persist()
+        try {
+          StreamingPipeline.routeBatch(outRoot, b, batchId)
+          StreamingPipeline.exactConvPairsBatch(s"$outRoot/_convpairs")(
+            b.filter(col("record_type") =!= Pipeline.Stop), batchId)
+        } finally b.unpersist()
     }
+    if (drain) { q.processAllAvailable(); q.stop() }
+    else q.awaitTermination()
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 import graft.operators.{Pipeline, Router}
 import graft.sources.Transcripts
@@ -14,9 +16,10 @@ import graft.sources.Transcripts
   * plan is narrow); what changes is the lifecycle resolution: batch
   * broadcasts the per-episode aggregate (Pipeline.lifeAggOf) into a join
   * with the attacks rows, streaming holds per-attack state in
-  * flatMapGroupsWithState (W3) or merges each micro-batch's facts into
-  * bucketed sidecars (routeStream), and aggregates with watermarked
-  * windows (W1).
+  * flatMapGroupsWithState (W3) or appends each micro-batch's attacks and
+  * stops to one bucketed `_attacks` sidecar and re-runs Router's MERGE
+  * (Pipeline.lifecycleMerge) over the buckets it touched (routeStream),
+  * and aggregates with watermarked windows (W1).
   */
 object StreamingPipeline {
 
@@ -109,13 +112,7 @@ object StreamingPipeline {
     * directory, which Spark rejects.
     */
   def compactConvPairs(spark: SparkSession, stateDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(stateDir)
-    if (!java.nio.file.Files.isDirectory(root)) return
-    val ls = java.nio.file.Files.list(root)
-    val dirs = try ls.iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("batch_id="))
-      .toVector finally ls.close()
+    val dirs = dirsUnder(Paths.get(stateDir), "batch_id=")
     if (dirs.size < 2) return
     val names = dirs.map(_.getFileName.toString.stripPrefix("batch_id="))
     val epoch = names.map(_.stripPrefix("compact-").takeWhile(_.isDigit))
@@ -315,100 +312,93 @@ object StreamingPipeline {
     batch.write.mode("overwrite").partitionBy("record_type")
       .parquet(s"$outRoot/batch_id=$batchId")
 
-  /** Bucket count for the attack-keyed streamed sidecars. At 100 TB this is
-    * sized so one bucket's attacks fit a target file size (Iceberg would
-    * make it the table's bucket transform); here it only needs to exceed
-    * the typical per-batch touched-attack spread so a micro-batch rewrites
-    * a strict subset of the resolved sink.
+  /** Bucket count of the `_attacks` sidecar (`abucket = pmod(attack_id,
+    * AttackBuckets)`): a batch writes at most this many sidecar files. At
+    * 100 TB it is sized so one bucket's attacks fit a target file size (an
+    * Iceberg bucket transform); here it only needs to exceed the typical
+    * per-batch touched-attack spread, so a batch rewrites a strict subset.
     */
   val AttackBuckets = 16
 
-  /** The INCREMENTAL resolve frame: attacks and accumulated lifecycle facts
-    * restricted (by PARTITION FILTER on their bucket dirs — plan-pinned in
-    * PlanShapeSpec) to the buckets a micro-batch touched, joined through the
-    * same narrow lifecycle aggregate as the batch MERGE. Exposed separately
-    * from the write so specs can pin the pruned plan shape.
+  /** The INCREMENTAL resolve frame: Router.commit's MERGE
+    * (Pipeline.lifecycleMerge) over the `_attacks` sidecar of every batch so
+    * far, restricted by a PARTITION FILTER to the touched buckets
+    * (plan-pinned in PlanShapeSpec). Separate from the write so specs can
+    * pin the pruned plan shape.
     */
   def incrementalResolveFrame(spark: SparkSession, outRoot: String,
-                              touched: Seq[Int]): DataFrame = {
-    val facts = spark.read.parquet(s"$outRoot/_lifefacts")
-      .filter(col("fbucket").isin(touched: _*))
-      .select("attack_id", "is_atk", "ts", "device_utc_time")
-    val attacks = spark.read.parquet(s"$outRoot/_attacks")
+                              touched: Seq[Int]): DataFrame =
+    Pipeline.lifecycleMerge(spark.read.parquet(s"$outRoot/_attacks")
       .filter(col("abucket").isin(touched: _*))
       .withColumnRenamed("abucket", "rbucket")
-      .drop("batch_id")
-      .withColumn("record_type", lit(Pipeline.Attacks))
-    Pipeline.applyLifecycle(attacks, Pipeline.lifeAggOf(facts)).drop("record_type")
-  }
+      .drop("batch_id"))
 
   /** The streamed MERGE, incremental: rewrite ONLY the resolved-sink buckets
-    * whose attacks this micro-batch routed or whose lifecycle facts it
-    * appended. Reference behavior: each stop event synchronously re-updated
-    * the stored attack document in ES (bbn_syslog.rb:271-324); here a
-    * micro-batch of stops updates the affected attack buckets in one narrow
-    * agg + join + dynamic-partition overwrite.
+    * whose attacks or stops this micro-batch routed. Reference behavior:
+    * each stop event synchronously re-updated the stored attack document in
+    * ES (bbn_syslog.rb:271-324); here a micro-batch of stops updates the
+    * affected attack buckets in one narrow agg + join + dynamic-partition
+    * overwrite.
     *
     * Scale shape: per-batch work is O(touched-buckets/B of the sink), not
-    * O(total attacks so far) — the full-sink rewrite was O(B^2) over a
-    * stream's life. Reads prune to the touched buckets at the source
-    * (PartitionFilters on abucket/fbucket), and the write replaces only the
-    * touched `rbucket=` partitions (partitionOverwriteMode=dynamic — the
-    * parquet stand-in for an Iceberg MERGE INTO touching only affected
-    * files). Idempotent: a replayed batch overwrites its own batch-id dirs
-    * first, so the accumulated state it resolves from is unchanged and the
-    * touched buckets rewrite to identical contents.
+    * O(total attacks so far). The read prunes to the touched buckets
+    * (PartitionFilters on abucket); the write replaces only the touched
+    * `rbucket=` partitions, one file each (partitionOverwriteMode=dynamic —
+    * the parquet stand-in for an Iceberg MERGE INTO). `touched` lists the
+    * sidecar's own bucket dirs, so a non-empty set always finds files.
+    * Idempotent: a replayed batch overwrites its own batch-id dirs first, so
+    * the touched buckets rewrite to identical contents.
     */
-  def resolveAttacks(spark: SparkSession, outRoot: String, touched: Seq[Int]): Unit = {
-    if (touched.isEmpty || !Router.hasParquet(s"$outRoot/_attacks")) return
-    if (!Router.hasParquet(s"$outRoot/_lifefacts")) return
-    incrementalResolveFrame(spark, outRoot, touched)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("rbucket")
-      .parquet(s"$outRoot/_resolved/record_type=attacks")
-  }
+  def resolveAttacks(spark: SparkSession, outRoot: String, touched: Seq[Int]): Unit =
+    if (touched.nonEmpty)
+      incrementalResolveFrame(spark, outRoot, touched)
+        .repartition(col("rbucket"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("rbucket")
+        .parquet(s"$outRoot/_resolved/record_type=attacks")
 
   /** The routed-sink batch writer (the streaming analog of Router.route):
     * 1. the batch's stats/traffic rows land in their own `batch_id=<id>`
     *    directory partitioned by record_type (idempotent overwrite — see
     *    writeBatch for the exactly-once contract);
-    * 2. the batch's attacks rows land under `_attacks/batch_id=<id>`
-    *    partitioned by `abucket = pmod(attack_id, AttackBuckets)`, and its
-    *    narrow lifecycle facts under `_lifefacts/batch_id=<id>` partitioned
-    *    by `fbucket` — same batch-id-keyed idempotence; the underscore prefix
-    *    keeps all sidecars invisible to partition discovery over `outRoot`;
-    * 3. resolveAttacks rewrites ONLY the touched resolved buckets so the
-    *    routed output CONVERGES to the batch Router.route result as the
-    *    stream drains — a stop in batch N closes an attack routed in batch
-    *    N-k, exactly as the reference's ES update side-channel did.
+    * 2. its attacks rows and its `_stop` rows with an id (the rows
+    *    Pipeline.lifeFactsFromStaged keeps) land, with their `record_type`,
+    *    in ONE sidecar `_attacks/batch_id=<id>`, shuffled on and
+    *    partitioned by `abucket`: one file per touched bucket, hidden from
+    *    partition discovery over `outRoot` by the underscore;
+    * 3. resolveAttacks rewrites ONLY the buckets that write produced (a
+    *    directory listing, no Spark job), so the routed output CONVERGES to
+    *    Router.route's as the stream drains — a stop in batch N closes an
+    *    attack routed in batch N-k, as the reference's ES update did.
     */
   def writeRoutedBatch(outRoot: String)(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.persist()
-    try {
-      writeBatch(outRoot)(b.filter(!col("record_type").isin(Pipeline.Stop, Pipeline.Attacks)),
-        batchId)
-      b.filter(col("record_type") === Pipeline.Attacks)
-        .drop("record_type")
-        .withColumn("abucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
-        .write.mode("overwrite").partitionBy("abucket")
-        .parquet(s"$outRoot/_attacks/batch_id=$batchId")
-      // the batch's narrow lifecycle facts, taken before its `_stop` rows
-      // are dropped (the same extraction as Router's staged read-back)
-      Pipeline.lifeFactsFromStaged(b)
-        .withColumn("fbucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
-        .write.mode("overwrite").partitionBy("fbucket")
-        .parquet(s"$outRoot/_lifefacts/batch_id=$batchId")
-      // the touched-bucket set: a scalar probe over the batch (<= AttackBuckets
-      // distinct ints on the driver, the pattern of Lineage.route's read-back)
-      val touched = b
-        .filter(col("record_type") === Pipeline.Attacks ||
-          (col("record_type") === Pipeline.Stop && col("attack_id") =!= 0L))
-        .select(pmod(col("attack_id"), lit(AttackBuckets)).cast("int").as("bk"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      resolveAttacks(b.sparkSession, outRoot, touched)
-    } finally b.unpersist()
+    try routeBatch(outRoot, b, batchId) finally b.unpersist()
   }
+
+  /** writeRoutedBatch's steps over a batch the caller has persisted. */
+  private[streaming] def routeBatch(outRoot: String, b: DataFrame, batchId: Long): Unit = {
+    writeBatch(outRoot)(b.filter(!col("record_type").isin(Pipeline.Stop, Pipeline.Attacks)),
+      batchId)
+    val sidecar = Paths.get(outRoot, "_attacks", s"batch_id=$batchId")
+    b.filter(col("record_type") === Pipeline.Attacks ||
+        (col("record_type") === Pipeline.Stop && col("attack_id") =!= 0L))
+      .withColumn("abucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
+      .repartition(col("abucket"))
+      .write.mode("overwrite").partitionBy("abucket")
+      .parquet(sidecar.toString)
+    resolveAttacks(b.sparkSession, outRoot, dirsUnder(sidecar, "abucket=")
+      .map(_.getFileName.toString.stripPrefix("abucket=").toInt))
+  }
+
+  /** The `<prefix>...` subdirectories of `root`; none if it is absent. */
+  private def dirsUnder(root: Path, prefix: String): Vector[Path] =
+    if (!Files.isDirectory(root)) Vector() else {
+      val ls = Files.list(root)
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toVector
+      finally ls.close()
+    }
 
   /** Routed streamed sinks -> one DataFrame: the resolved attacks (post
     * incremental lifecycle MERGE) plus every other family from the batch-id
@@ -428,13 +418,8 @@ object StreamingPipeline {
         .drop("rbucket")
         .withColumn("record_type", lit(Pipeline.Attacks)))
       else None
-    (rest, resolved) match {
-      case (Some(r), Some(a)) => r.unionByName(a, allowMissingColumns = true)
-      case (Some(r), None)    => r
-      case (None, Some(a))    => a
-      case (None, None) =>
-        throw new IllegalStateException(s"no routed parquet data under $outRoot")
-    }
+    (rest ++ resolved).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(throw new IllegalStateException(s"no routed parquet data under $outRoot"))
   }
 
   /** End-to-end streaming job: parse -> route to per-record_type parquet
@@ -444,11 +429,16 @@ object StreamingPipeline {
     * sink converges to the batch Router.route output (see writeRoutedBatch).
     */
   def routeStream(spark: SparkSession, sourcePath: String, outRoot: String,
-                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val records = streamRecordsAll(spark, streamTranscripts(spark, sourcePath))
-    records.writeStream
+                  checkpoint: String): StreamingQuery =
+    startStream(spark, sourcePath, checkpoint)(writeRoutedBatch(outRoot) _)
+
+  /** One checkpointed query: the file-stream parse (with `_stop` rows) of
+    * `sourcePath`, each micro-batch handed to `writer`.
+    */
+  private[streaming] def startStream(spark: SparkSession, sourcePath: String, checkpoint: String)(
+      writer: (DataFrame, Long) => Unit): StreamingQuery =
+    streamRecordsAll(spark, streamTranscripts(spark, sourcePath)).writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch(writeRoutedBatch(outRoot) _)
+      .foreachBatch(writer)
       .start()
-  }
 }

@@ -248,6 +248,88 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
+  /** parquet file names per `<prefix>=` subdirectory of `root`. */
+  private def filesByDir(root: java.nio.file.Path, prefix: String): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(root)
+    try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).map { d =>
+      val fs = Files.list(d)
+      try d.getFileName.toString.stripPrefix(prefix) ->
+        fs.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+      finally fs.close()
+    }.toMap
+    finally ls.close()
+  }
+
+  test("one sidecar per batch: one file per touched bucket, one per resolved bucket") {
+    val dir = "/root/testdata/sf0.001"
+    val outPath = Files.createTempDirectory("graft-routed-files").toString
+    val batch = StreamingPipeline.streamRecordsAll(spark,
+      graft.sources.TranscriptStore.table(spark, dir)).repartition(4)
+    StreamingPipeline.writeRoutedBatch(outPath)(batch, 0L)
+    val sidecar = filesByDir(java.nio.file.Paths.get(s"$outPath/_attacks/batch_id=0"), "abucket=")
+    assert(sidecar.nonEmpty)
+    sidecar.foreach { case (k, fs) => assert(fs.size == 1, s"abucket=$k holds ${fs.size} files") }
+    // the touched set: buckets of the attacks rows and of the stops with an id
+    val touched = batch
+      .filter(col("record_type") === "attacks" ||
+        (col("record_type") === "_stop" && col("attack_id") =!= 0L))
+      .select(pmod(col("attack_id"), lit(StreamingPipeline.AttackBuckets)).cast("string"))
+      .distinct().as[String].collect().toSet
+    assert(sidecar.keySet == touched)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$outPath/_lifefacts")))
+    val resolved = filesByDir(
+      java.nio.file.Paths.get(s"$outPath/_resolved/record_type=attacks"), "rbucket=")
+    assert(resolved.nonEmpty)
+    resolved.foreach { case (k, fs) => assert(fs.size == 1, s"rbucket=$k holds ${fs.size} files") }
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
+  }
+
+  test("split-and-replay property: any 2-4 batch split, one batch replayed, equals the batch route") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val dir = "/root/testdata/sf0.001"
+    val exploded = StreamingPipeline.streamRecordsAll(spark,
+      graft.sources.TranscriptStore.table(spark, dir)).persist()
+    val batchOut = Files.createTempDirectory("graft-split-batch").toString
+    graft.operators.Router.route(spark, dir, batchOut)
+    val expected = graft.operators.Router.readRouted(spark, batchOut)
+    // a split is (batches, hash salt, the batch to replay)
+    val split = for {
+      n <- Gen.choose(2, 4)
+      salt <- Gen.choose(0, Int.MaxValue)
+      replay <- Gen.choose(0, n - 1)
+    } yield (n, salt, replay)
+    var stopsFirst = 0L
+    (700L until 703L).foreach { seed =>
+      val (n, salt, replay) = split.pureApply(Gen.Parameters.default, Seed(seed))
+      val part = pmod(hash(col("conv_id"), col("turn_idx"), lit(salt)), lit(n))
+      val outPath = Files.createTempDirectory("graft-split-out").toString
+      (0 until n).foreach(i =>
+        StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === i), i.toLong))
+      StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === replay), replay.toLong)
+      // stops routed in an earlier batch than their (single) start
+      val starts = exploded.filter(col("record_type") === "attacks" && col("attack_id") =!= 0L)
+        .select(col("attack_id"), part.as("sb"))
+      stopsFirst += exploded.filter(col("record_type") === "_stop" && col("attack_id") =!= 0L)
+        .select(col("attack_id"), part.as("pb"))
+        .join(starts, "attack_id").filter(col("pb") < col("sb")).count()
+      val streamed = StreamingPipeline.readRoutedStream(spark, outPath)
+      val cols = expected.columns.toSet.intersect(streamed.columns.toSet).toSeq.sorted
+      assert(cols.contains("attack_ongoing") && cols.contains("attack_end_date"))
+      def norm(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(c => col(c).cast("string").as(c)): _*)
+      val ctx = s"seed $seed: $n batches, salt $salt, batch $replay replayed"
+      assert(streamed.count() == expected.count(), ctx)
+      assert(norm(streamed).exceptAll(norm(expected)).isEmpty, ctx)
+      assert(norm(expected).exceptAll(norm(streamed)).isEmpty, ctx)
+      graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
+    }
+    assert(stopsFirst > 0, "no split routed a stop before its start")
+    exploded.unpersist()
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(batchOut))
+  }
+
   test("file-stream parse produces the same routed records as the batch path") {
     val dir = "/root/testdata/sf0.001"
     val src = graft.sources.TranscriptStore.table(spark, dir)
@@ -402,10 +484,35 @@ class StreamingSpec extends SparkSpec {
     graft.sources.TranscriptStore.table(spark, dir).limit(2000)
       .write.mode("overwrite").parquet(srcPath)
     val outPath = Files.createTempDirectory("graft-main-out").toString
-    graft.streaming.StreamMain.run(spark, srcPath, outPath, drain = true)
+    // query-start events reach a listener synchronously, inside start()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try graft.streaming.StreamMain.run(spark, srcPath, outPath, drain = true)
+    finally spark.streams.removeListener(listener)
+    assert(started.get == 1, s"StreamMain started ${started.get} queries")
     assert(StreamingPipeline.readRoutedStream(spark, outPath).count() > 0)
-    assert(StreamingPipeline.exactSinkCounts(spark, s"$outPath/_convpairs").count() > 0)
+    val counts = StreamingPipeline.exactSinkCounts(spark, s"$outPath/_convpairs")
+    assert(counts.count() > 0)
+    // the two-query composition: a second query parsing the same source
+    // into its own pair state gives the same exact counts
+    val pairs2 = Files.createTempDirectory("graft-main-pairs2").toString
+    val ckpt2 = Files.createTempDirectory("graft-main-ckpt2").toString
+    val q2 = StreamingPipeline
+      .streamRecords(spark, StreamingPipeline.streamTranscripts(spark, srcPath))
+      .writeStream.option("checkpointLocation", ckpt2)
+      .foreachBatch(StreamingPipeline.exactConvPairsBatch(pairs2) _)
+      .start()
+    q2.processAllAvailable(); q2.stop()
+    val twoQuery = StreamingPipeline.exactSinkCounts(spark, pairs2)
+    assert(counts.exceptAll(twoQuery).isEmpty && twoQuery.exceptAll(counts).isEmpty)
     graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(pairs2))
   }
 
   test("streaming dedup drops redelivered payloads within the watermark") {
