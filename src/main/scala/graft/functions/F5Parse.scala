@@ -74,10 +74,13 @@ object F5Parse {
     GraftBridge.column(KvSlotsExtract(GraftBridge.expression(text), cef, slots))
 
   /** Reference regex implementations, kept as the differential baseline the
-    * native scanner is property-tested against (F5ParseSpec).
+    * native scanner is property-tested against (F5ParseSpec). The CEF
+    * pattern compiles under UNIX_LINES (`(?d)`): java.util.regex's default
+    * `$` also matches before a final U+0085, U+2028 or U+2029, and Ruby's
+    * `$` (like the scanner's end anchor) does not.
     */
   def kvSyslogRegex(text: Column): Column = kvMapFromPattern(text, SyslogKvPattern)
-  def kvCefRegex(text: Column): Column = kvMapFromPattern(text, CefKvPattern)
+  def kvCefRegex(text: Column): Column = kvMapFromPattern(text, "(?d)" + CefKvPattern)
 
   /** ArcSight dynamic-label pairing (bbn_cef.rb:136-174) over a KV map: a
     * key `X` paired with `XLabel` becomes {value-of-XLabel: value-of-X}.

@@ -13,13 +13,14 @@ import graft.sources.Transcripts
   *
   * The stateless parse/normalize/explode is the SAME code as batch
   * (Pipeline.explodedAll — readStream swaps in transparently because the
-  * plan is narrow); what changes is the lifecycle resolution: batch
-  * broadcasts the per-episode aggregate (Pipeline.lifeAggOf) into a join
-  * with the attacks rows, streaming holds per-attack state in
-  * flatMapGroupsWithState (W3) or appends each micro-batch's attacks and
+  * plan is narrow), and so is the W3 lifecycle rule: batch broadcasts the
+  * per-episode aggregate (Pipeline.lifeAggOf) into a join with the attacks
+  * rows, and the routed stream appends each micro-batch's attacks and
   * stops to one bucketed `_attacks` sidecar and re-runs Router's MERGE
-  * (Pipeline.lifecycleMerge) over the buckets it touched (routeStream),
-  * and aggregates with watermarked windows (W1).
+  * (Pipeline.lifecycleMerge) over the buckets it touched (routeStream).
+  * The MERGE counts starts and stops over everything routed so far, so the
+  * result does not depend on arrival order: a stop routed before its start
+  * still closes it. Streaming also aggregates with watermarked windows (W1).
   */
 object StreamingPipeline {
 
@@ -126,82 +127,6 @@ object StreamingPipeline {
     dirs.foreach(d => Router.rmrf(d))
   }
 
-  // ---- W3 streaming lifecycle: flatMapGroupsWithState ----
-
-  case class LifeEvent(attack_id: Long, is_stop: Boolean, event_utc: String,
-                       ts: java.sql.Timestamp)
-  case class LifeState(nStarts: Int, startDate: String, endDate: String,
-                       closed: Boolean)
-  case class LifeUpdate(attack_id: Long, attack_ongoing: Int,
-                        attack_start_date: String, attack_end_date: String,
-                        n_starts: Int)
-
-  /** The lifecycle transition shared by both state variants: starts
-    * accumulate; a stop closes the attack iff exactly ONE start was seen
-    * (hits.total==1, bbn_syslog.rb:271-324), otherwise it is a log-only
-    * no-op.
-    */
-  private def applyLifeEvents(s0: LifeState, events: Seq[LifeEvent]): LifeState = {
-    var s = s0
-    events.sortBy(_.ts.getTime).foreach { e =>
-      if (e.is_stop) {
-        if (s.nStarts == 1) s = s.copy(endDate = e.event_utc, closed = true)
-        // 0 or >1 starts: log-only in the reference; state unchanged
-      } else {
-        s = s.copy(nStarts = s.nStarts + 1,
-          startDate = if (s.startDate.isEmpty) e.event_utc else s.startDate)
-      }
-    }
-    s
-  }
-
-  /** Per-attack lifecycle state machine replicating the reference's ES
-    * correlation. Emits the current resolution on every update. Unbounded
-    * state (the reference's ES index also keeps every attack forever);
-    * production deployments use `lifecycleFnTtl` to bound state.
-    */
-  def lifecycleFn(attackId: Long, events: Iterator[LifeEvent],
-                  state: GroupState[LifeState]): Iterator[LifeUpdate] = {
-    val s = applyLifeEvents(
-      state.getOption.getOrElse(LifeState(0, "", "", closed = false)), events.toSeq)
-    state.update(s)
-    Iterator.single(LifeUpdate(attackId, if (s.closed) 0 else 1,
-      s.startDate, s.endDate, s.nStarts))
-  }
-
-  /** TTL-bounded lifecycle: same transitions, but each update arms an
-    * event-time timeout `ttlMs` past the attack's latest event, and the
-    * timeout callback drops the state. This is what makes the job runnable
-    * over 10^12 turns: state is bounded by the set of attacks ACTIVE within
-    * the TTL horizon, not by stream history. A stop arriving after its
-    * attack's eviction is a log-only no-op (nStarts reads 0 — an orphan),
-    * which is the correct degradation: the reference's guard makes orphan
-    * stops no-ops anyway, so only episodes longer than the TTL can resolve
-    * differently — pick the TTL above the longest plausible episode.
-    */
-  def lifecycleFnTtl(ttlMs: Long)(attackId: Long, events: Iterator[LifeEvent],
-                                  state: GroupState[LifeState]): Iterator[LifeUpdate] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val evs = events.toSeq
-      val s = applyLifeEvents(
-        state.getOption.getOrElse(LifeState(0, "", "", closed = false)), evs)
-      state.update(s)
-      // clamped to watermark+1: a batch of purely LATE events (all ts+ttl
-      // <= current watermark) would otherwise make setTimeoutTimestamp
-      // throw (Spark requires the timeout to exceed the watermark) and
-      // crash the query — flatMapGroupsWithState does NOT pre-filter late
-      // rows. The clamp arms the earliest legal timeout instead: the
-      // already-expired state evicts on the next trigger.
-      state.setTimeoutTimestamp(math.max(evs.map(_.ts.getTime).max + ttlMs,
-        state.getCurrentWatermarkMs + 1))
-      Iterator.single(LifeUpdate(attackId, if (s.closed) 0 else 1,
-        s.startDate, s.endDate, s.nStarts))
-    }
-  }
-
   // ---- streaming sessionization (parity with ConversationOps.sessionize) ----
 
   case class SessTurn(conv_id: String, turn_idx: Int, ts: java.sql.Timestamp)
@@ -243,8 +168,11 @@ object StreamingPipeline {
     * conversation's eviction is, by construction, more than a gap past the
     * previous turn, so it provably starts a NEW session and only the dense
     * per-conv counter restarts — `session_start_us` (the eviction-stable
-    * key) is identical to the unbounded run's. Timeout clamped to
-    * watermark+1 for purely-late batches, same as lifecycleFnTtl.
+    * key) is identical to the unbounded run's. The timeout is clamped to
+    * watermark+1: flatMapGroupsWithState does not drop late rows, and a
+    * batch of purely late turns (every ts+ttl at or below the current
+    * watermark) would otherwise make setTimeoutTimestamp throw and kill
+    * the query.
     */
   def sessionizeFnTtl(gapUs: Long, ttlMs: Long)(
       convId: String, turns: Iterator[SessTurn],

@@ -126,7 +126,9 @@ class F5ParseSpec extends SparkSpec {
       "", "=", "==", "a=", "a=b", "[a=b]", "a=b ", " a=b c=d", "a=b\tc=d e=]",
       "k=v1 k=v2]", // duplicate keys: last wins
       "a=1 date_time=2015 b=2", // CEF pair-poisoning shape
-      "date_time=x dos_attack_id=9 zz=0 dvchost=h cn3=9 cn3Label=attack_id")
+      "date_time=x dos_attack_id=9 zz=0 dvchost=h cn3=9 cn3Label=attack_id",
+      // a final U+2028/U+0085/U+2029 is no line end for the CEF end anchor
+      "a=1\u2028", "a=1\u0085", "a=1 b=2\u2029")
     Seq(false, true).foreach { cef =>
       val df = inputs.toDF("text").select(
         (if (cef) F5Parse.kvCef(col("text")) else F5Parse.kvSyslog(col("text"))).as("native"),
@@ -145,9 +147,7 @@ class F5ParseSpec extends SparkSpec {
     // reference chain: each declared key's slot == regex map at that key,
     // each declared label's dyn slot == pairedLabels(regex map) at that
     // label. 300 random texts per format from seeds 42..341, plus fixed
-    // texts that pin each edge case. Non-ASCII text avoids U+0085/U+2028/
-    // U+2029: java.util.regex's `$` also matches before a final one of
-    // those, which the scanner's CEF end anchor does not.
+    // texts that pin each edge case.
     val slots = KvSlots(Pipeline.KvKeys, Pipeline.DynLabels)
     val value = Gen.oneOf("1", "", "Attack Started", "10.0.0.1", "a_b", "x y", "2015-03-22 10:01:02",
       "café", "Virtual Server", "attack_id", "vlan")
@@ -170,7 +170,9 @@ class F5ParseSpec extends SparkSpec {
       "cs5=vs1 cs5Label=Virtual Server", // a label value with a space
       "Label=attack_id =5 Label=x", // bare Label key
       "DVC=1 Dvc=2 cs1=z cs1Label=ATTACK_STATUS dvc=3", // case-only differences
-      "dvc=café src=日本 act=oké cs1=éx cs1Label=attack_status x=1]")
+      "dvc=café src=日本 act=oké cs1=éx cs1Label=attack_status x=1]",
+      // a final U+2028/U+0085/U+2029 ends no CEF value; dvc and act are declared slots
+      "a=1\u2028", "a=1\u0085", "a=1 b=2\u2029", "dvc=1\u2028", "act=1 dvc=2\u2029")
     val inputs = fixed ++ samples(gen, 300)
     Seq(false, true).foreach { cef =>
       val regex = if (cef) F5Parse.kvCefRegex(col("text")) else F5Parse.kvSyslogRegex(col("text"))

@@ -1,134 +1,85 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamingPipeline
-import graft.streaming.StreamingPipeline.LifeEvent
 
-/** Structured Streaming specs: the stateful W3 lifecycle over MemoryStream
-  * micro-batches, and the file-stream parse path against the batch result.
+/** Structured Streaming specs: the routed stream's per-batch W3 lifecycle
+  * MERGE against Router.route, the file-stream parse path against the
+  * batch result, and the stateful operators (dedup, sessionization,
+  * windowed counts) over MemoryStream micro-batches.
   */
 class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("flatMapGroupsWithState lifecycle: start then stop across micro-batches") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[LifeEvent]
-    val updates = input.toDS().groupByKey(_.attack_id)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-        StreamingPipeline.lifecycleFn)
-    val q = updates.writeStream.format("memory").queryName("life")
-      .outputMode("update").start()
-
-    def ts(s: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 00:00:$s%02d")
-    // batch 1: two starts (ids 1, 2) + an extra duplicate start for id 2
-    input.addData(
-      LifeEvent(1L, is_stop = false, "2026-01-01T00:00:00", ts(0)),
-      LifeEvent(2L, is_stop = false, "2026-01-01T00:00:01", ts(1)),
-      LifeEvent(2L, is_stop = false, "2026-01-01T00:00:02", ts(2)))
-    q.processAllAvailable()
-    // batch 2: stops for 1 (closes), 2 (ambiguous: 2 starts), 9 (orphan)
-    input.addData(
-      LifeEvent(1L, is_stop = true, "2026-01-01T00:05:00", ts(10)),
-      LifeEvent(2L, is_stop = true, "2026-01-01T00:05:01", ts(11)),
-      LifeEvent(9L, is_stop = true, "2026-01-01T00:05:02", ts(12)))
-    q.processAllAvailable()
-    q.stop()
-
-    val byId = spark.table("life").collect()
-      .groupBy(_.getAs[Long]("attack_id"))
-      .view.mapValues(_.last).toMap
-    assert(byId(1L).getAs[Int]("attack_ongoing") == 0)
-    assert(byId(1L).getAs[String]("attack_end_date") == "2026-01-01T00:05:00")
-    assert(byId(2L).getAs[Int]("attack_ongoing") == 1) // 2 starts -> log-only
-    assert(byId(2L).getAs[String]("attack_end_date") == "")
-    assert(byId(9L).getAs[Int]("attack_ongoing") == 1) // orphan stop
-    assert(byId(9L).getAs[Int]("n_starts") == 0)
+  /** The streamed routed sinks hold the batch route's rows on every shared
+    * column, as a multiset; values compare as strings, since the two sink
+    * layouts infer partition column types differently.
+    */
+  private def assertSameRoutes(streamed: DataFrame, expected: DataFrame, ctx: String = ""): Unit = {
+    val cols = expected.columns.toSet.intersect(streamed.columns.toSet).toSeq.sorted
+    assert(cols.contains("attack_ongoing") && cols.contains("attack_end_date"))
+    def norm(df: DataFrame) = df.select(cols.map(c => col(c).cast("string").as(c)): _*)
+    assert(streamed.count() == expected.count(), ctx)
+    assert(norm(streamed).exceptAll(norm(expected)).isEmpty, ctx)
+    assert(norm(expected).exceptAll(norm(streamed)).isEmpty, ctx)
   }
 
-  test("TTL-bounded lifecycle state evicts settled attacks once the watermark passes") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[LifeEvent]
-    val ttlMs = 3600L * 1000 // 1 hour past an attack's last event
-    val updates = input.toDS().withWatermark("ts", "0 seconds")
-      .groupByKey(_.attack_id)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())(
-        StreamingPipeline.lifecycleFnTtl(ttlMs))
-    val q = updates.writeStream.format("memory").queryName("life_ttl")
-      .outputMode("update").start()
+  test("writeRoutedBatch applies Router's MERGE in any batch order of starts and stops") {
+    def mk(aid: Int, evt: String, t: String) =
+      "<134>x b info tmm1: [hostname=b.lab bigip_mgmt_ip=172.16.21.41 " +
+        s"date_time=2015-03-22 $t dos_attack_id=$aid dos_attack_event=Attack $evt " +
+        "severity=1 errdefs_msg_name=Network DoS Event]"
+    // (micro-batch, payload); transcriptsOf keys turn i as (conv-i, i)
+    val turns = Seq(
+      0 -> mk(1, "Started", "10:00:00"),
+      0 -> mk(2, "Started", "10:00:01"),
+      0 -> mk(2, "Started", "10:00:02"),
+      1 -> mk(1, "Stopped", "10:05:00"), // one start: closes
+      1 -> mk(2, "Stopped", "10:05:01"), // two starts: log only
+      1 -> mk(9, "Stopped", "10:05:02"), // orphan: no attacks row
+      1 -> mk(1, "Sampled", "10:03:00"), // a stats row sharing id 1
+      0 -> mk(3, "Stopped", "10:06:00"), // a stop batched before its start
+      1 -> mk(3, "Started", "10:01:00"),
+      0 -> mk(4, "Started", "10:02:00"), // start, stop, then a second start
+      1 -> mk(4, "Stopped", "10:07:00"),
+      2 -> mk(4, "Started", "10:08:00"))
+    val texts = turns.map(_._2)
+    val exploded = StreamingPipeline.streamRecordsAll(spark, transcriptsOf(texts)).persist()
+    val outPath = Files.createTempDirectory("graft-w3-stream").toString
+    def route(batch: Int): Unit = {
+      val idx = turns.map(_._1).zipWithIndex.collect { case (`batch`, i) => i }
+      StreamingPipeline.writeRoutedBatch(outPath)(
+        exploded.filter(col("turn_idx").isin(idx: _*)), batch.toLong)
+    }
+    // attack_id -> (attack_ongoing, attack_end_date) of each attacks row
+    def attacks(): Map[Long, Seq[(Int, String)]] =
+      StreamingPipeline.readRoutedStream(spark, outPath)
+        .filter(col("record_type") === "attacks")
+        .select("attack_id", "attack_ongoing", "attack_end_date").collect().toSeq
+        .groupMap(_.getLong(0))(r => (r.getInt(1), r.getString(2)))
+    val open = (1, null: String)
+    route(0)
+    route(1)
+    assert(attacks() == Map(1L -> Seq((0, "2015-03-22T10:05:00")), 2L -> Seq(open, open),
+      3L -> Seq((0, "2015-03-22T10:06:00")), 4L -> Seq((0, "2015-03-22T10:07:00"))))
+    route(2)
+    assert(attacks()(4L) == Seq(open, open), "a second start must reopen attack 4")
 
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: attack 1 starts and stops
-    input.addData(
-      LifeEvent(1L, is_stop = false, "2026-01-01T00:00:00", ts("2026-01-01 00:00:00")),
-      LifeEvent(1L, is_stop = true, "2026-01-01T00:05:00", ts("2026-01-01 00:05:00")))
-    q.processAllAvailable()
-    // batch 2: a different attack 3h later advances the watermark far past
-    // attack 1's timeout (00:05 + 1h); batch 3 gives the timeout a batch to fire
-    input.addData(
-      LifeEvent(2L, is_stop = false, "2026-01-01 03:00:00", ts("2026-01-01 03:00:00")))
-    q.processAllAvailable()
-    input.addData(
-      LifeEvent(2L, is_stop = false, "2026-01-01 03:10:00", ts("2026-01-01 03:10:00")))
-    q.processAllAvailable()
-
-    // attack 1 resolved correctly before eviction
-    val byId = spark.table("life_ttl").collect()
-      .groupBy(_.getAs[Long]("attack_id")).view.mapValues(_.last).toMap
-    assert(byId(1L).getAs[Int]("attack_ongoing") == 0)
-    assert(byId(1L).getAs[String]("attack_end_date") == "2026-01-01T00:05:00")
-    // state bounded: only attack 2 survives the TTL horizon
-    val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
-    q.stop()
-    assert(stateRows == 1, s"expected 1 live state row after eviction, saw $stateRows")
-  }
-
-  test("TTL lifecycle survives a batch of purely-late events (timeout clamped to watermark)") {
-    implicit val sql = spark.sqlContext
-    // without no-data batches the late-row filter lags one batch behind the
-    // eviction watermark (SPARK-40925 split), exposing the clamp scenario;
-    // restored in the finally below so a mid-test failure can't leak the
-    // disabled conf into later tests sharing the session
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-    val input = MemoryStream[LifeEvent]
-    val ttlMs = 3600L * 1000
-    val updates = input.toDS().withWatermark("ts", "0 seconds")
-      .groupByKey(_.attack_id)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())(
-        StreamingPipeline.lifecycleFnTtl(ttlMs))
-    val q = updates.writeStream.format("memory").queryName("life_late")
-      .outputMode("update").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // Spark filters late rows against the PREVIOUS batch's watermark but
-    // evicts state (and validates timeouts) against the CURRENT one — so a
-    // row can pass the late filter while its ts+ttl sits behind the
-    // eviction watermark. batch 1: watermark(after) = 00:00.
-    input.addData(
-      LifeEvent(1L, is_stop = false, "2026-01-01T00:00:00", ts("2026-01-01 00:00:00")))
-    q.processAllAvailable()
-    // batch 2 jumps event time: watermark(after) = 10:00
-    input.addData(
-      LifeEvent(2L, is_stop = false, "2026-01-01T10:00:00", ts("2026-01-01 10:00:00")))
-    q.processAllAvailable()
-    // batch 3: ts 00:30 passes the late filter (> batch-1 watermark 00:00)
-    // but 00:30 + 1h TTL = 01:30 <= eviction watermark 10:00 — an
-    // unclamped setTimeoutTimestamp throws and kills the query here
-    input.addData(
-      LifeEvent(7L, is_stop = false, "2026-01-01T00:30:00", ts("2026-01-01 00:30:00")))
-    q.processAllAvailable()
-    assert(q.exception.isEmpty, s"query died on late input: ${q.exception}")
-    val byId = spark.table("life_late").collect()
-      .groupBy(_.getAs[Long]("attack_id")).view.mapValues(_.last).toMap
-    assert(byId(7L).getAs[Int]("attack_ongoing") == 1)
-    q.stop()
-    } finally spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    object Turns extends graft.sources.TranscriptTable {
+      def table(spark: SparkSession, dir: String, rep: Int): DataFrame = transcriptsOf(texts)
+      def snapshotId(spark: SparkSession, dir: String, rep: Int): String = texts.hashCode.toString
+    }
+    val batchOut = Files.createTempDirectory("graft-w3-batch").toString
+    graft.operators.Router.route(spark, "w3-turns", batchOut, 1, Turns)
+    assertSameRoutes(StreamingPipeline.readRoutedStream(spark, outPath),
+      graft.operators.Router.readRouted(spark, batchOut))
+    exploded.unpersist()
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
+    graft.operators.Router.rmrf(java.nio.file.Paths.get(batchOut))
   }
 
   test("streamed route converges to the batch Router.route output (lifecycle applied)") {
@@ -152,15 +103,8 @@ class StreamingSpec extends SparkSpec {
     val expected = graft.operators.Router.readRouted(spark, batchOut)
     val streamed = StreamingPipeline.readRoutedStream(spark, outPath)
     // full-row equality INCLUDING the lifecycle columns (attack_ongoing,
-    // attack_end_date) — everything cast to string to erase partition-dir
-    // type inference differences between the two sink layouts
-    val cols = expected.columns.toSet.intersect(streamed.columns.toSet).toSeq.sorted
-    assert(cols.contains("attack_ongoing") && cols.contains("attack_end_date"))
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(c => col(c).cast("string").as(c)): _*)
-    assert(streamed.count() == expected.count())
-    assert(norm(streamed).except(norm(expected)).count() == 0)
-    assert(norm(expected).except(norm(streamed)).count() == 0)
+    // attack_end_date)
+    assertSameRoutes(streamed, expected)
     // and the stream really did close attacks (not all-ongoing as before)
     assert(streamed.filter(col("record_type") === "attacks" &&
       col("attack_ongoing") === 0).count() > 0)
@@ -314,15 +258,8 @@ class StreamingSpec extends SparkSpec {
       stopsFirst += exploded.filter(col("record_type") === "_stop" && col("attack_id") =!= 0L)
         .select(col("attack_id"), part.as("pb"))
         .join(starts, "attack_id").filter(col("pb") < col("sb")).count()
-      val streamed = StreamingPipeline.readRoutedStream(spark, outPath)
-      val cols = expected.columns.toSet.intersect(streamed.columns.toSet).toSeq.sorted
-      assert(cols.contains("attack_ongoing") && cols.contains("attack_end_date"))
-      def norm(df: org.apache.spark.sql.DataFrame) =
-        df.select(cols.map(c => col(c).cast("string").as(c)): _*)
-      val ctx = s"seed $seed: $n batches, salt $salt, batch $replay replayed"
-      assert(streamed.count() == expected.count(), ctx)
-      assert(norm(streamed).exceptAll(norm(expected)).isEmpty, ctx)
-      assert(norm(expected).exceptAll(norm(streamed)).isEmpty, ctx)
+      assertSameRoutes(StreamingPipeline.readRoutedStream(spark, outPath), expected,
+        s"seed $seed: $n batches, salt $salt, batch $replay replayed")
       graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
     }
     assert(stopsFirst > 0, "no split routed a stop before its start")
