@@ -1,7 +1,13 @@
 #!/usr/bin/env bash
 # Diff two `graft.Plans` output directories query by query, ignoring the
-# per-run noise in Spark's plan text: expression ids (`#123`, `#123L`) and
-# lambda variable suffixes (`x_12`).
+# per-run noise in Spark's plan text: expression ids (`#123`, `#123L`),
+# lambda variable suffixes (`x_12`), exchange plan ids (`plan_id=42`), RDD
+# ids (`MapPartitionsRDD[267]`), the
+# class and identity hash of a typed operator's JVM lambda
+# (`$$Lambda$5160/0x00007f0c851ac3a8@21b5dbc`), the source line of an RDD's
+# call site (`at DedupOps.scala:828`), and the checkout that holds the
+# transcript store (`file:/<checkout>/target/transcripts/...`). Two dumps of
+# the same commit differ in all of these; no plan shape is carried by them.
 #
 # Usage: scripts/plandiff.sh <dirA> <dirB>
 #   Files are paired by query name: the tag of `<query>_<tag>.txt`, which
@@ -16,7 +22,13 @@ if [ $# -ne 2 ] || [ ! -d "$1" ] || [ ! -d "$2" ]; then
   exit 2
 fi
 a=$1 b=$2
-norm() { sed -E -e 's/#[0-9]+L?/#/g' -e 's/\b([a-z]{1,3})_[0-9]+\b/\1_/g' "$1"; }
+norm() {
+  sed -E -e 's/#[0-9]+L?/#/g' -e 's/\b([a-z]{1,3})_[0-9]+\b/\1_/g' \
+    -e 's/plan_id=[0-9]+/plan_id=/g' -e 's/RDD\[[0-9]+\]/RDD[]/g' \
+    -e 's/\$\$Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/$$Lambda/g' \
+    -e 's/\b([A-Za-z0-9_]+\.scala):[0-9]+/\1:/g' \
+    -e 's#file:[^] ,]*/target/transcripts/#file:<checkout>/target/transcripts/#g' "$1"
+}
 # query name of a dump file: strip the directory and the trailing _<tag>.txt
 query() { local f=${1##*/}; f=${f%.txt}; echo "${f%_*}"; }
 declare -A fa fb

@@ -142,15 +142,12 @@ object Bench {
     if (busy <= 0) 0.0 else (after._2 - before._2).toDouble / busy
   }
 
-  /** Spawn a fresh JVM running routeChild; returns the timed seconds.
+  /** Spawn a fresh JVM running routeChild; returns the timed seconds and
+    * the steal fraction measured across the child's lifetime.
     * `n` routes, min taken: route 1 is cold (page cache + JIT), so n=2
     * yields one warm sample and n=3 two — the headline throughput child
     * uses 3 so a single slow warm window can't set the record.
     */
-  private def spawnRoute(cpus: Int, sfDir: String, rep: Int, n: Int = 2): Double =
-    spawnRouteSteal(cpus, sfDir, rep, n)._1
-
-  /** spawnRoute + the steal fraction measured across the child's lifetime. */
   private def spawnRouteSteal(cpus: Int, sfDir: String, rep: Int,
                               n: Int = 2): (Double, Double) = {
     val (sec, steal, _) = spawnRouteAll(cpus, sfDir, rep, n)

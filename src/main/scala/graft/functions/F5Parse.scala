@@ -106,12 +106,13 @@ object F5Parse {
   /** Syslog PRI decomposition. The reference dispatches only on the exact
     * prefix `<134>` (bbn_f5networks.rb:323) = facility 16 (local0),
     * severity 6 (info); the generalized decomposition is exposed for the
-    * per-sink facility x severity aggregates.
+    * per-sink facility x severity aggregates. The parse base extracts
+    * `pri` once per row and derives both fields from that column.
     */
   def pri(text: Column): Column =
     regexp_extract(text, "^<(\\d{1,3})>", 1).cast("int")
-  def priFacility(text: Column): Column = (pri(text) / lit(8)).cast("int")
-  def priSeverity(text: Column): Column = pmod(pri(text), lit(8))
+  def priFacility(pri: Column): Column = (pri / lit(8)).cast("int")
+  def priSeverity(pri: Column): Column = pmod(pri, lit(8))
 
   /** Wire-format dispatch on the first five characters
     * (bbn_f5networks.rb:321-341): exactly `<134>` -> Syslog, `CEF:0` -> CEF,

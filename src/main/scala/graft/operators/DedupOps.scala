@@ -41,14 +41,11 @@ object DedupOps {
       .select("doc_id", "keeper_doc_id", "is_dup")
   }
 
-  /** Distinct word-3-gram shingle codes per document (polynomial over
-    * token signatures; values < P so no overflow). Use `withShingles` in
-    * plans: referencing `sigs` inside the per-element lambda would re-derive
-    * the whole signature array per shingle otherwise.
+  /** Distinct word-3-gram shingle codes of a token-signature array
+    * (polynomial over the signatures; values < P so no overflow). Callers go
+    * through `withShingles`: referencing `sigs` inside the per-element
+    * lambda would re-derive the whole signature array per shingle otherwise.
     */
-  def shingleCodes(text: Column): Column =
-    shingleCodesFrom(transform(tokens(text), tokenSig(_)))
-
   private def shingleCodesFrom(sigs: Column): Column =
     // sequence() descends when start > stop, so guard short documents
     when(size(sigs) < 3, array().cast("array<bigint>")).otherwise(
@@ -194,7 +191,7 @@ object DedupOps {
       .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
   }
 
-  /** Positional word-3-gram codes: the same polynomial as shingleCodes but
+  /** Positional word-3-gram codes: the same polynomial as shingleCodesFrom but
     * WITHOUT the distinct — winnowing needs the positional hash sequence,
     * because its guarantee is stated over consecutive windows.
     */

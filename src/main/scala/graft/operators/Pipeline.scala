@@ -482,20 +482,6 @@ object Pipeline {
     "record_type" -> "string", "remote_log_format" -> "string",
     "remote_log_payload" -> "string")
 
-  /** Schema-only surface for the reference's fourth ES mapping family,
-    * `attack_mitigation_methods` (README.md:306-324): NO reference code
-    * path ever emits a document of this type (verified across bbn_syslog.rb
-    * and bbn_cef.rb — the family exists only in the index-setup curl), so
-    * the engine carries the StructType for API completeness and emits
-    * nothing, matching the reference's observable behavior exactly.
-    */
-  val attackMitigationMethodsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "customer_id int, device_utc_time string, device_utc_offset int, " +
-        "attack_id bigint, attack_type string, attack_mitigation_method string, " +
-        "attack_mitigation_action string, forward_for string, " +
-        "forward_utc_time string, record_type string")
-
   /** Canonical (all-nullable) struct type for every branch: casting each
     * branch struct to the ONE shared type makes the 11 array elements'
     * types EXACTLY equal, so the analyzer's complex-type coercion
@@ -578,8 +564,8 @@ object Pipeline {
         "_pri" -> when(isSy, pri(col("text")))))
       .withColumns(Map(
         "cef_ok" -> cefOk,
-        "facility" -> (col("_pri") / lit(8)).cast("int"),
-        "severity" -> pmod(col("_pri"), lit(8))))
+        "facility" -> priFacility(col("_pri")),
+        "severity" -> priSeverity(col("_pri"))))
       .withColumn("kvs",
         when(isSy, kvSlots(col("msg"), cef = false, Slots))
           .when(col("cef_ok"), kvSlots(element_at(col("spl"), 8), cef = true, Slots)))
@@ -729,25 +715,6 @@ object Pipeline {
                        store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
     configure(spark)
     healthFilter(store.table(spark, dir, rep), Transcripts.healthStrings(spark))
-  }
-
-  /** The PRODUCTION variant of q01's deterministic dump: conversations
-    * hash-partitioned by conv_id with each partition locally sorted on
-    * (conv_id, turn_idx). Downstream consumers need per-CONVERSATION order
-    * (a conversation's turns contiguous and ordered), not a global total
-    * order — so the plan is one hash exchange + a LOCAL sort, never the
-    * range exchange + full sort a global orderBy costs over the text
-    * corpus at 10^12 turns (sampling pass + skew-prone range partitions).
-    * Merge contract: a reader wanting a single totally-ordered stream
-    * merges the already-sorted partitions by (conv_id, turn_idx) — a
-    * streaming k-way merge, never a re-sort. Plan-pinned in PlanShapeSpec.
-    */
-  def transcriptsClustered(spark: SparkSession, dir: String, rep: Int = 1,
-                           store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
-    configure(spark)
-    store.table(spark, dir, rep)
-      .repartition(col("conv_id"))
-      .sortWithinPartitions("conv_id", "turn_idx")
   }
 
   /** Correlated attacks via the family-pruned records() path: one scan of

@@ -127,36 +127,6 @@ object SimilarityOps {
         round(col("cos"), 6).as("cos_sim"))
   }
 
-  /** IVF-style index: the vector table written partitioned by sign-LSH
-    * bucket. At 100 TB this is the difference between scanning the table
-    * per probe and reading 1/2^bits of it: the bucket equality predicate
-    * becomes PARTITION PRUNING at the source (visible as `PartitionFilters`
-    * in explain), so a probe's IO is bounded by its bucket.
-    */
-  def buildIvfIndex(emb: DataFrame, path: String, bits: Int = 8): Unit =
-    emb.select(col("vec_id"), col("embedding"),
-        signBucket(col("embedding"), bits).as("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** Probe the IVF index: per query, read ONLY its bucket partition and
-    * rerank exactly. Equivalent results to lshTopK (asserted in tests);
-    * different physical plan (pruned scans instead of a shuffle join).
-    */
-  def ivfTopK(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-              queries: DataFrame, k: Int = 3, bits: Int = 8): DataFrame = {
-    val idx = spark.read.parquet(indexPath)
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      signBucket(col("embedding"), bits).as("bucket"))
-    // the join key is the partition column -> dynamic partition pruning /
-    // pushed partition filters bound each probe's scan to one bucket
-    val scored = idx.join(broadcast(q), "bucket")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("bucket"),
-        cosine(col("qv"), col("embedding")).as("cos"))
-    topK(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("bucket"), col("rank"),
-        round(col("cos"), 6).as("cos_sim"))
-  }
-
   // ---- trained IVF: k-means coarse quantizer (the FAISS-IVF shape) ----
 
   /** Squared L2 to every centroid; returns (argmin cid, min distance). */
@@ -220,51 +190,6 @@ object SimilarityOps {
     (cents, costs.toSeq)
   }
 
-  /** Corpus -> (vec_id, embedding, cid) under a trained quantizer. */
-  def assignCells(spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
-                  cents: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, v, nearestCentroid(bc.value, v)._1) }
-      .toDF("vec_id", "embedding", "cid")
-  }
-
-  /** Trained-IVF ANN: queries probe their `nProbe` nearest cells only —
-    * the trained analog of lshTopK. At 100 TB the cell id is the partition
-    * key of the vector table (buildIvfIndex pattern), a probe reads
-    * nProbe/k of the data, and the probe list broadcasts (nQueries x
-    * nProbe rows). Exact rerank inside the probed cells; partial top-k
-    * before the rank window as everywhere else.
-    */
-  def ivfTrainedTopK(spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
-                     nQueries: Int = 10, k: Int = 3, cells: Int = 8,
-                     iters: Int = 3, nProbe: Int = 2): DataFrame = {
-    import spark.implicits._
-    val (cents, _) = trainCentroids(spark, emb, cells, iters)
-    val assigned = assignCells(spark, emb, cents)
-    val bc = spark.sparkContext.broadcast(cents)
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .flatMap { case (id, v) =>
-        bc.value.indices
-          .map(c => (c, {
-            var d = 0.0; var i = 0
-            while (i < bc.value(c).length) { val t = v(i) - bc.value(c)(i); d += t * t; i += 1 }
-            d
-          }))
-          .sortBy(_._2).take(nProbe)
-          .map { case (cid, _) => (id, v, cid) }
-      }
-      .toDF("query_id", "qv", "cid")
-    val scored = assigned.join(broadcast(probes), "cid")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cid"),
-        cosine(col("qv"), col("embedding")).as("cos"))
-    topK(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("cid"), col("rank"),
-        round(col("cos"), 6).as("cos_sim"))
-  }
-
   /** Squared L2 distance to a FROZEN centroid as a strict left fold:
     * 0.0 + (v1-c1)^2 + (v2-c2)^2 + ... in double — the same op sequence the
     * DuckDB oracle's unrolled left-assoc expression evaluates (the 0.0 seed
@@ -292,8 +217,10 @@ object SimilarityOps {
     * each query probes its `nProbe` nearest cells (ties by cell index);
     * exact cosine rerank inside the probed cells with the same partial
     * top-k reduction as the other ANN paths. At 100 TB the cell id is the
-    * table's partition key (buildIvfIndex pattern): a probe reads
-    * nProbe/k of the data and the probe list broadcasts.
+    * vector table's partition key: a probe reads nProbe/k of the data and
+    * the probe list broadcasts.
+    * The centroids come from trainCentroids, frozen into IvfModel by
+    * TrainModels.
     */
   def ivfFrozenTopK(emb: DataFrame, cents: Array[Array[Double]],
                     nQueries: Int = 10, k: Int = 3, nProbe: Int = 2): DataFrame = {

@@ -36,20 +36,27 @@ object StreamMain {
 
   /** Start (and optionally drain) the one query: each micro-batch is parsed
     * once, persisted, routed, and its non-`_stop` rows feed the conv-pair
-    * state. Split from main so specs drive it under the shared test session.
+    * state. The pair state is compacted before the query starts and after a
+    * drain stop, so a restart or a drain leaves one directory of it, not one
+    * per batch. Split from main so specs drive it under the shared test
+    * session.
     */
   def run(spark: SparkSession, sourceDir: String, outRoot: String,
           drain: Boolean): Unit = {
+    val pairs = s"$outRoot/_convpairs"
+    StreamingPipeline.compactConvPairs(spark, pairs)
     val q = StreamingPipeline.startStream(spark, sourceDir, s"$outRoot/_checkpoints/route") {
       (batch, batchId) =>
         val b = batch.persist()
         try {
           StreamingPipeline.routeBatch(outRoot, b, batchId)
-          StreamingPipeline.exactConvPairsBatch(s"$outRoot/_convpairs")(
+          StreamingPipeline.exactConvPairsBatch(pairs)(
             b.filter(col("record_type") =!= Pipeline.Stop), batchId)
         } finally b.unpersist()
     }
-    if (drain) { q.processAllAvailable(); q.stop() }
-    else q.awaitTermination()
+    if (drain) {
+      q.processAllAvailable(); q.stop()
+      StreamingPipeline.compactConvPairs(spark, pairs)
+    } else q.awaitTermination()
   }
 }

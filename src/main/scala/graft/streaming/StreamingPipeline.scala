@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.operators.{Pipeline, Router}
 import graft.sources.Transcripts
@@ -95,6 +95,8 @@ object StreamingPipeline {
     * present at call time into ONE distinct-pair directory and drop the
     * originals — the job that keeps the state's file count O(1) instead of
     * O(batches) over a stream's life (the read side lists every dir).
+    * StreamMain runs it before its query starts and after a drain stop,
+    * the two points where no batch is writing.
     *
     * Crash-safe by the same dedup that makes the counts exact: the
     * compacted dir only becomes visible at its _SUCCESS commit (before
@@ -126,104 +128,6 @@ object StreamingPipeline {
       .write.mode("overwrite").parquet(s"$stateDir/batch_id=compact-${epoch}g$gen")
     dirs.foreach(d => Router.rmrf(d))
   }
-
-  // ---- streaming sessionization (parity with ConversationOps.sessionize) ----
-
-  case class SessTurn(conv_id: String, turn_idx: Int, ts: java.sql.Timestamp)
-  case class SessState(lastUs: Long, idx: Int, startUs: Long)
-  case class SessAssign(conv_id: String, turn_idx: Int, session_idx: Int,
-                        session_start_us: Long)
-
-  /** Keyed gap-based sessionization: per-conversation state holds only
-    * (last event-time, session counter, session start) — 20 bytes — and a
-    * turn starts a new session exactly when its gap to the previous turn
-    * exceeds `gapSec` (same rule as the batch window variant; parity pinned
-    * in StreamingSpec). Within a micro-batch turns sort by turn_idx; across
-    * batches the state carries continuity. `session_start_us` is the
-    * EVICTION-STABLE session key: a production deployment bounds state with
-    * an event-time TTL ≥ the gap (any post-eviction turn provably starts a
-    * new session, so only the dense per-conv counter would be lost, never
-    * the session identity).
-    */
-  def sessionizeFn(gapUs: Long)(convId: String, turns: Iterator[SessTurn],
-                                state: GroupState[SessState]): Iterator[SessAssign] = {
-    var s = state.getOption.getOrElse(SessState(Long.MinValue, 0, 0L))
-    val out = turns.toSeq.sortBy(_.turn_idx).map { t =>
-      val us = t.ts.getTime * 1000L + (t.ts.getNanos / 1000) % 1000
-      if (s.lastUs == Long.MinValue || us - s.lastUs > gapUs)
-        s = SessState(us, s.idx + 1, us)
-      else s = s.copy(lastUs = us)
-      SessAssign(convId, t.turn_idx, s.idx, s.startUs)
-    }
-    state.update(s)
-    out.iterator
-  }
-
-  /** TTL-bounded sessionization: same transitions, but the state arms an
-    * event-time timeout `ttlMs` past the conversation's latest turn and
-    * evicts on expiry — per-conversation state is bounded by the set of
-    * conversations ACTIVE within the TTL horizon, not by stream history
-    * (the property that makes this runnable over 10^12 turns). Pick
-    * `ttlMs` >= the session gap: any turn arriving after its
-    * conversation's eviction is, by construction, more than a gap past the
-    * previous turn, so it provably starts a NEW session and only the dense
-    * per-conv counter restarts — `session_start_us` (the eviction-stable
-    * key) is identical to the unbounded run's. The timeout is clamped to
-    * watermark+1: flatMapGroupsWithState does not drop late rows, and a
-    * batch of purely late turns (every ts+ttl at or below the current
-    * watermark) would otherwise make setTimeoutTimestamp throw and kill
-    * the query.
-    */
-  def sessionizeFnTtl(gapUs: Long, ttlMs: Long)(
-      convId: String, turns: Iterator[SessTurn],
-      state: GroupState[SessState]): Iterator[SessAssign] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val ts = turns.toSeq
-      val out = sessionizeFn(gapUs)(convId, ts.iterator, state)
-      state.setTimeoutTimestamp(math.max(ts.map(_.ts.getTime).max + ttlMs,
-        state.getCurrentWatermarkMs + 1))
-      out
-    }
-  }
-
-  def sessionizeStream(spark: SparkSession, transcripts: DataFrame,
-                       gapSec: Long = 3600,
-                       stateTtlMs: Option[Long] = None): Dataset[SessAssign] = {
-    import spark.implicits._
-    val turns = transcripts
-      .select(col("conv_id"), col("turn_idx"), col("ts").cast("timestamp").as("ts"))
-      .as[SessTurn]
-    stateTtlMs match {
-      case Some(ttl) =>
-        turns.withWatermark("ts", "0 seconds")
-          .groupByKey(_.conv_id)
-          .flatMapGroupsWithState(OutputMode.Update(),
-            GroupStateTimeout.EventTimeTimeout())(
-            sessionizeFnTtl(gapSec * 1000000L, ttl))
-      case None =>
-        turns.groupByKey(_.conv_id)
-          .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
-            sessionizeFn(gapSec * 1000000L))
-    }
-  }
-
-  /** Streaming exact dedup: drop re-delivered rows by content digest within
-    * the watermark horizon — the streaming analog of DedupOps.exactDups for
-    * an at-least-once upstream (the socket/file ingest redelivers on
-    * reconnect). Keyed state holds only the 16-byte digest and ages out at
-    * the watermark, which is what makes this runnable indefinitely: state
-    * is bounded by the redelivery window, not by stream history. Rows
-    * never shuffle wider than (digest, payload) once, keyed on the digest.
-    */
-  def dedupStream(transcripts: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    transcripts
-      .withColumn("_digest", md5(col("text").cast("binary")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("_digest")
-      .drop("_digest")
 
   /** Idempotent per-batch sink write: each micro-batch lands in its own
     * `batch_id=<id>` partition directory with mode=overwrite, so a batch

@@ -153,7 +153,7 @@ class DedupSpec extends SparkSpec {
     // gets alias-substituted and pushed into the FileScan DataFilters,
     // where the whole signature tree re-evaluates pre-repartition on the
     // single input split (measured 138 s vs 1.5 s at sf0.1).
-    val dir = java.nio.file.Files.createTempDirectory("dedup-scan").toString
+    val dir = tmpDir("dedup-scan")
     Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "other words entirely here"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)

@@ -69,7 +69,8 @@ class F5ParseSpec extends SparkSpec {
 
   test("PRI decomposition: facility = pri/8, severity = pri%8 (FIXTURES §5)") {
     val df = (0 to 191).map(pri => s"<$pri>rest").toDF("text")
-      .select(F5Parse.pri(col("text")), F5Parse.priFacility(col("text")), F5Parse.priSeverity(col("text")))
+      .select(F5Parse.pri(col("text")).as("pri"))
+      .select(col("pri"), F5Parse.priFacility(col("pri")), F5Parse.priSeverity(col("pri")))
     df.collect().foreach { r =>
       val pri = r.getInt(0)
       assert(r.getInt(1) == pri / 8 && r.getInt(2) == pri % 8)

@@ -49,7 +49,7 @@ class LineageSpec extends SparkSpec {
   }
 
   test("killed run resumes from the manifest without recomputing routed partitions") {
-    val out = Files.createTempDirectory("graft-lineage").toString
+    val out = tmpDir("graft-lineage")
 
     // phase 1: "killed" run — only the attacks partition committed
     Lineage.route(spark, dir, out)
@@ -85,17 +85,15 @@ class LineageSpec extends SparkSpec {
     // snapshot identity: same input -> same id; different input -> different
     assert(Lineage.snapshotId(dir, 1, 1000L) == partial.snapshotId)
     assert(Lineage.snapshotId(dir, 2, 2000L) != partial.snapshotId)
-
-    Router.rmrf(Paths.get(out))
   }
 
   test("every kill point resumes over debris to a fresh Router.route, in Router's layout") {
-    val fresh = Files.createTempDirectory("graft-lineage-fresh").toString
+    val fresh = tmpDir("graft-lineage-fresh")
     Router.route(spark, dir, fresh)
     val expected = Router.readRouted(spark, fresh)
 
     (0 to 2).foreach { k =>
-      val out = Files.createTempDirectory(s"graft-lineage-k$k").toString
+      val out = tmpDir(s"graft-lineage-k$k")
       Lineage.route(spark, dir, out)
       killAfter(out, k)
       // debris a kill leaves: a stale staging dir and a partial file under
@@ -123,7 +121,6 @@ class LineageSpec extends SparkSpec {
         f.contains("/tool=") && f.contains("/attack_severity=")), s"kill point $k")
       Router.rmrf(Paths.get(out))
     }
-    Router.rmrf(Paths.get(fresh))
   }
 
   test("resume keeps a non-default TranscriptTable; a family with no rows commits rows = 0") {
@@ -135,10 +132,10 @@ class LineageSpec extends SparkSpec {
       def snapshotId(spark: SparkSession, dir: String, rep: Int): String =
         Lineage.snapshotId(s"$dir|no-traffic", rep, table(spark, dir, rep).count())
     }
-    val fresh = Files.createTempDirectory("graft-lineage-store-fresh").toString
+    val fresh = tmpDir("graft-lineage-store-fresh")
     Router.route(spark, dir, fresh, 1, NoTraffic)
 
-    val out = Files.createTempDirectory("graft-lineage-store").toString
+    val out = tmpDir("graft-lineage-store")
     val full = Lineage.route(spark, dir, out, store = NoTraffic)
     assert(full.entries.last == Lineage.Entry("traffic_stats", 0L, "", committed = true))
     assert(full.snapshotId != TranscriptStore.snapshotId(spark, dir))
@@ -151,9 +148,6 @@ class LineageSpec extends SparkSpec {
     val routed = Router.readRouted(spark, out)
     assert(routed.filter(col("record_type") === "traffic_stats").isEmpty)
     assertSameRows(routed, Router.readRouted(spark, fresh))
-
-    Router.rmrf(Paths.get(out))
-    Router.rmrf(Paths.get(fresh))
   }
 
   test("manifest JSON round-trips any source string: parse(render(m)) == m") {

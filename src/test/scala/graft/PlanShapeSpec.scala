@@ -136,61 +136,15 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assertBroadcast(Pipeline.attacksCorrelated(spark, dir))
     // streaming: the incremental resolve over a small attacks sidecar
     import graft.streaming.StreamingPipeline
-    val outPath = java.nio.file.Files.createTempDirectory("graft-resolve-join").toString
+    val outPath = tmpDir("graft-resolve-join")
     StreamingPipeline.writeRoutedBatch(outPath)(StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir)), 0L)
     assertBroadcast(StreamingPipeline.incrementalResolveFrame(spark, outPath, 0 until 16))
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
-  }
-
-  test("ivfTopK probe scan is partition-pruned to the probed buckets") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").repartition(4)
-    val idxPath = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString
-    graft.operators.SimilarityOps.buildIvfIndex(emb, idxPath)
-    val df = graft.operators.SimilarityOps.ivfTopK(spark, idxPath, emb.limit(8))
-    df.write.mode("overwrite").format("noop").save()
-    val plan = df.queryExecution.executedPlan.toString
-    // the index scan must carry a partition filter on the bucket column
-    // (static or dynamic pruning) — an unpruned probe reads the whole
-    // index per query, the exact failure mode the IVF layout exists to
-    // prevent at 100 TB
-    val scanLine = plan.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains(idxPath.split('/').last))
-      .orElse(plan.linesIterator.find(_.contains("PartitionFilters")))
-    assert(scanLine.exists(l => l.contains("dynamicpruning") ||
-        """PartitionFilters: \[[^\]]*bucket""".r.findFirstIn(l).isDefined),
-      s"no bucket partition filter on the index scan:\n${plan.take(3000)}")
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(idxPath))
-  }
-
-  test("production transcript ordering: hash exchange + LOCAL sort, no global range sort") {
-    val df = Pipeline.transcriptsClustered(spark, dir)
-    // one hash exchange on conv_id; NEVER a range exchange (the global-sort
-    // shape that samples and range-shuffles the full text corpus)
-    val planStr = df.queryExecution.executedPlan.toString
-    assert(planStr.contains("hashpartitioning(conv_id"), planStr.take(2000))
-    assert(!planStr.toLowerCase.contains("rangepartitioning"), planStr.take(2000))
-    // every sort is partition-local (SortExec renders "Sort [...], <global>, 0";
-    // string match because the adaptive wrapper hides children from collect)
-    assert("""Sort \[[^\]]*\], false, 0""".r.findFirstIn(planStr).isDefined, planStr.take(2000))
-    assert("""Sort \[[^\]]*\], true, 0""".r.findFirstIn(planStr).isEmpty, planStr.take(2000))
-    // and the contract holds: within every partition (conv_id, turn_idx)
-    // is non-decreasing, with each conversation contiguous in one partition
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    val parts = df.select(spark_partition_id().as("p"), col("conv_id"), col("turn_idx"))
-      .collect().groupBy(_.getInt(0))
-    parts.values.foreach { rows =>
-      val keys = rows.map(r => (r.getString(1), r.getInt(2))).toSeq
-      assert(keys == keys.sorted, "partition not locally sorted")
-    }
-    val convToParts = df.select(spark_partition_id().as("p"), col("conv_id"))
-      .distinct().collect().groupBy(_.getString(1)).view.mapValues(_.length)
-    assert(convToParts.values.forall(_ == 1), "a conversation spans partitions")
   }
 
   test("incremental streamed resolve prunes both sidecar scans to the touched buckets") {
     import graft.streaming.StreamingPipeline
-    val outPath = java.nio.file.Files.createTempDirectory("graft-incr-plan").toString
+    val outPath = tmpDir("graft-incr-plan")
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
     StreamingPipeline.writeRoutedBatch(outPath)(exploded, 0L)
@@ -206,7 +160,6 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(l.contains("/_attacks") && """PartitionFilters: \[[^\]]*abucket""".r.findFirstIn(l).isDefined,
         s"a sidecar scan without an abucket partition filter:\n${plan.take(3000)}")
     }
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   test("curriculum rank: the quality expression never reappears under an inferred isnotnull") {

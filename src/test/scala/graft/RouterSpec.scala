@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.{Pipeline, Router}
 
 /** The MERGE-shaped routed write must equal the pure-DataFrame records()
@@ -11,7 +10,7 @@ class RouterSpec extends SparkSpec {
 
   test("Router.route sinks equal Pipeline.records including lifecycle fields") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-router").toString
+    val out = tmpDir("graft-router")
     Router.route(spark, dir, out)
     val routed = Router.readRouted(spark, out)
     val direct = Pipeline.records(spark, dir)
@@ -26,7 +25,7 @@ class RouterSpec extends SparkSpec {
 
   test("severity is a sink fan-out axis: attacks partition dirs + pruned reads") {
     val dir = "/root/testdata/sf0.001"
-    val out = Files.createTempDirectory("graft-router-sev").toString
+    val out = tmpDir("graft-router-sev")
     Router.route(spark, dir, out)
 
     // per-severity directories exist under every attacks tool sink

@@ -1,33 +1,15 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.SimilarityOps
 
-/** ANN specs: the IVF partitioned index must return exactly the bucketed
-  * LSH results, and its probe plan must prune to bucket partitions.
+/** ANN and embedding-operator specs: probe recall against exact brute
+  * force, the partial top-k plan shapes, and the cosine dedup and mining
+  * operators.
   */
 class SimilaritySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  test("IVF index probe == in-memory sign-LSH top-k; plan prunes partitions") {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val path = Files.createTempDirectory("graft-ivf").toString
-    SimilarityOps.buildIvfIndex(emb, path)
-
-    val queries = emb.filter(col("vec_id") < 10)
-    val ivf = SimilarityOps.ivfTopK(spark, path, queries)
-    val lsh = SimilarityOps.lshTopK(emb)
-    assert(ivf.count() == lsh.count())
-    assert(ivf.except(lsh).count() == 0 && lsh.except(ivf).count() == 0)
-
-    // partition pruning evidence: the scan carries a PartitionFilters entry
-    // on the bucket column (dynamic pruning from the broadcast side)
-    val plan = ivf.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters") || plan.contains("dynamicpruning"),
-      s"expected partition pruning in plan:\n${plan.take(2000)}")
-  }
 
   test("sign-LSH ANN recall vs exact top-k is reported and sane") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -58,17 +40,13 @@ class SimilaritySpec extends SparkSpec {
     }
     info(f"kmeans costs: ${costs.map(c => f"$c%.1f").mkString(" -> ")}")
 
-    // every vector lands in exactly one cell; cells are non-trivially used
-    val assigned = SimilarityOps.assignCells(spark, emb, cents)
-    assert(assigned.count() == emb.count())
-    assert(assigned.select("cid").distinct().count() >= 2)
-
+    // the trained quantizer served the way TrainModels promotes it: frozen
+    // centroids into the q45 probe path
     val k = 3
     val brute = SimilarityOps.bruteTopK(emb, nQueries = 10, k = k)
       .select("query_id", "neighbor_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val ivf = SimilarityOps.ivfTrainedTopK(spark, emb, nQueries = 10, k = k,
-        cells = 8, iters = 3, nProbe = 2)
+    val ivf = SimilarityOps.ivfFrozenTopK(emb, cents, nQueries = 10, k = k, nProbe = 2)
       .select("query_id", "neighbor_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val recalls = brute.map { case (q, exact) =>
@@ -103,7 +81,7 @@ class SimilaritySpec extends SparkSpec {
 
     // serving path is pure Catalyst: assignment/probing stay in codegen —
     // the ONLY object boundary in the plan is the bounded partial top-k
-    // (one MapPartitions), unlike ivfTrainedTopK's typed assignment maps
+    // (one MapPartitions), no typed assignment map
     val plan = SimilarityOps.ivfFrozenTopK(emb, operators.IvfModel.centroids)
       .queryExecution.executedPlan.toString()
     val nMapPartitions = "MapPartitions".r.findAllIn(plan).size

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +9,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
+
+  private var tmpRoot: Option[Path] = None
+  private var tmpDirs = 0
+
+  /** A fresh `<prefix><n>` directory under this suite's one temp root,
+    * which afterAll removes with everything under it. Paths stay short:
+    * plan strings abbreviate a scan's Location to 100 characters, and
+    * plan-shape specs match on the path's tail.
+    */
+  def tmpDir(prefix: String): String = synchronized {
+    val root = tmpRoot.getOrElse {
+      val r = Files.createTempDirectory("graft-")
+      tmpRoot = Some(r)
+      r
+    }
+    tmpDirs += 1
+    Files.createDirectory(root.resolve(s"$prefix$tmpDirs")).toString
+  }
+
+  override def afterAll(): Unit =
+    try tmpRoot.foreach(graft.operators.Router.rmrf) finally super.afterAll()
 
   /** Build a tiny transcripts DF from raw payload texts. */
   def transcriptsOf(texts: Seq[String]): DataFrame = {

@@ -8,8 +8,9 @@ import graft.streaming.StreamingPipeline
 
 /** Structured Streaming specs: the routed stream's per-batch W3 lifecycle
   * MERGE against Router.route, the file-stream parse path against the
-  * batch result, and the stateful operators (dedup, sessionization,
-  * windowed counts) over MemoryStream micro-batches.
+  * batch result, StreamMain's drains, and the per-sink counts: watermarked
+  * windows over MemoryStream micro-batches and the exact pair state with its
+  * compaction.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -49,7 +50,7 @@ class StreamingSpec extends SparkSpec {
       2 -> mk(4, "Started", "10:08:00"))
     val texts = turns.map(_._2)
     val exploded = StreamingPipeline.streamRecordsAll(spark, transcriptsOf(texts)).persist()
-    val outPath = Files.createTempDirectory("graft-w3-stream").toString
+    val outPath = tmpDir("graft-w3-stream")
     def route(batch: Int): Unit = {
       val idx = turns.map(_._1).zipWithIndex.collect { case (`batch`, i) => i }
       StreamingPipeline.writeRoutedBatch(outPath)(
@@ -73,21 +74,19 @@ class StreamingSpec extends SparkSpec {
       def table(spark: SparkSession, dir: String, rep: Int): DataFrame = transcriptsOf(texts)
       def snapshotId(spark: SparkSession, dir: String, rep: Int): String = texts.hashCode.toString
     }
-    val batchOut = Files.createTempDirectory("graft-w3-batch").toString
+    val batchOut = tmpDir("graft-w3-batch")
     graft.operators.Router.route(spark, "w3-turns", batchOut, 1, Turns)
     assertSameRoutes(StreamingPipeline.readRoutedStream(spark, outPath),
       graft.operators.Router.readRouted(spark, batchOut))
     exploded.unpersist()
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(batchOut))
   }
 
   test("streamed route converges to the batch Router.route output (lifecycle applied)") {
     val dir = "/root/testdata/sf0.001"
     val all = graft.sources.TranscriptStore.table(spark, dir)
-    val srcPath = Files.createTempDirectory("graft-conv-src").toString
-    val outPath = Files.createTempDirectory("graft-conv-out").toString
-    val ckpt = Files.createTempDirectory("graft-conv-ckpt").toString
+    val srcPath = tmpDir("graft-conv-src")
+    val outPath = tmpDir("graft-conv-out")
+    val ckpt = tmpDir("graft-conv-ckpt")
 
     // two arrival phases so lifecycle stops land in LATER micro-batches
     // than their starts (turn parity splits start/stop pairs arbitrarily)
@@ -98,7 +97,7 @@ class StreamingSpec extends SparkSpec {
     val q2 = StreamingPipeline.routeStream(spark, srcPath, outPath, ckpt)
     q2.processAllAvailable(); q2.stop()
 
-    val batchOut = Files.createTempDirectory("graft-conv-batch").toString
+    val batchOut = tmpDir("graft-conv-batch")
     graft.operators.Router.route(spark, dir, batchOut)
     val expected = graft.operators.Router.readRouted(spark, batchOut)
     val streamed = StreamingPipeline.readRoutedStream(spark, outPath)
@@ -112,7 +111,7 @@ class StreamingSpec extends SparkSpec {
 
   test("writeRoutedBatch replay is idempotent: records, facts and resolved attacks") {
     val dir = "/root/testdata/sf0.001"
-    val outPath = Files.createTempDirectory("graft-routed-replay").toString
+    val outPath = tmpDir("graft-routed-replay")
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
     val b0 = exploded.filter(col("turn_idx") % 2 === 0)
@@ -127,12 +126,11 @@ class StreamingSpec extends SparkSpec {
     val after = StreamingPipeline.readRoutedStream(spark, outPath)
     assert(after.count() == before)
     assert(after.filter(col("attack_ongoing") === 0).count() == closedBefore)
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   test("a micro-batch's resolve rewrites ONLY its touched resolved buckets") {
     val dir = "/root/testdata/sf0.001"
-    val outPath = Files.createTempDirectory("graft-routed-incr").toString
+    val outPath = tmpDir("graft-routed-incr")
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
     // batch 0: everything -> the resolved sink covers many buckets
@@ -169,12 +167,11 @@ class StreamingSpec extends SparkSpec {
     }
     assert(after(s"rbucket=$target") != before(s"rbucket=$target"),
       "the touched bucket was not rewritten")
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   test("a first batch of only _stop rows cannot crash the resolve (empty-sink guard)") {
     val dir = "/root/testdata/sf0.001"
-    val outPath = Files.createTempDirectory("graft-routed-stoponly").toString
+    val outPath = tmpDir("graft-routed-stoponly")
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
     // batch 0: stops only — _attacks has no data files yet; the old
@@ -189,7 +186,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.filter(col("record_type") === "attacks" &&
       col("attack_ongoing") === 0).count() > 0,
       "stops routed before their attacks did not close them")
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   /** parquet file names per `<prefix>=` subdirectory of `root`. */
@@ -207,7 +203,7 @@ class StreamingSpec extends SparkSpec {
 
   test("one sidecar per batch: one file per touched bucket, one per resolved bucket") {
     val dir = "/root/testdata/sf0.001"
-    val outPath = Files.createTempDirectory("graft-routed-files").toString
+    val outPath = tmpDir("graft-routed-files")
     val batch = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir)).repartition(4)
     StreamingPipeline.writeRoutedBatch(outPath)(batch, 0L)
@@ -226,7 +222,6 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$outPath/_resolved/record_type=attacks"), "rbucket=")
     assert(resolved.nonEmpty)
     resolved.foreach { case (k, fs) => assert(fs.size == 1, s"rbucket=$k holds ${fs.size} files") }
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
   }
 
   test("split-and-replay property: any 2-4 batch split, one batch replayed, equals the batch route") {
@@ -235,7 +230,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir)).persist()
-    val batchOut = Files.createTempDirectory("graft-split-batch").toString
+    val batchOut = tmpDir("graft-split-batch")
     graft.operators.Router.route(spark, dir, batchOut)
     val expected = graft.operators.Router.readRouted(spark, batchOut)
     // a split is (batches, hash salt, the batch to replay)
@@ -248,7 +243,7 @@ class StreamingSpec extends SparkSpec {
     (700L until 703L).foreach { seed =>
       val (n, salt, replay) = split.pureApply(Gen.Parameters.default, Seed(seed))
       val part = pmod(hash(col("conv_id"), col("turn_idx"), lit(salt)), lit(n))
-      val outPath = Files.createTempDirectory("graft-split-out").toString
+      val outPath = tmpDir("graft-split-out")
       (0 until n).foreach(i =>
         StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === i), i.toLong))
       StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === replay), replay.toLong)
@@ -264,16 +259,15 @@ class StreamingSpec extends SparkSpec {
     }
     assert(stopsFirst > 0, "no split routed a stop before its start")
     exploded.unpersist()
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(batchOut))
   }
 
   test("file-stream parse produces the same routed records as the batch path") {
     val dir = "/root/testdata/sf0.001"
     val src = graft.sources.TranscriptStore.table(spark, dir)
-    val srcPath = Files.createTempDirectory("graft-stream-src").toString
+    val srcPath = tmpDir("graft-stream-src")
     src.write.mode("overwrite").parquet(srcPath)
-    val outPath = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val outPath = tmpDir("graft-stream-out")
+    val ckpt = tmpDir("graft-stream-ckpt")
 
     val q = StreamingPipeline.routeStream(spark, srcPath, outPath, ckpt)
     q.processAllAvailable()
@@ -290,9 +284,9 @@ class StreamingSpec extends SparkSpec {
   test("file stream resumes from checkpoint across restarts without duplicates") {
     val dir = "/root/testdata/sf0.001"
     val all = graft.sources.TranscriptStore.table(spark, dir)
-    val srcPath = Files.createTempDirectory("graft-resume-src").toString
-    val outPath = Files.createTempDirectory("graft-resume-out").toString
-    val ckpt = Files.createTempDirectory("graft-resume-ckpt").toString
+    val srcPath = tmpDir("graft-resume-src")
+    val outPath = tmpDir("graft-resume-out")
+    val ckpt = tmpDir("graft-resume-ckpt")
 
     // phase 1: first half of the data, then the query "dies"
     all.filter(col("turn_idx") % 2 === 0).write.mode("append").parquet(srcPath)
@@ -317,10 +311,10 @@ class StreamingSpec extends SparkSpec {
   test("a replayed micro-batch rewrites its own partition: zero duplicates") {
     val dir = "/root/testdata/sf0.001"
     val src = graft.sources.TranscriptStore.table(spark, dir)
-    val srcPath = Files.createTempDirectory("graft-replay-src").toString
+    val srcPath = tmpDir("graft-replay-src")
     src.limit(500).write.mode("overwrite").parquet(srcPath)
-    val outPath = Files.createTempDirectory("graft-replay-out").toString
-    val ckpt = Files.createTempDirectory("graft-replay-ckpt").toString
+    val outPath = tmpDir("graft-replay-out")
+    val ckpt = tmpDir("graft-replay-ckpt")
 
     val q = StreamingPipeline.routeStream(spark, srcPath, outPath, ckpt)
     q.processAllAvailable(); q.stop()
@@ -417,10 +411,9 @@ class StreamingSpec extends SparkSpec {
 
   test("StreamMain drains a source directory to routed sinks + exact conv counts") {
     val dir = "/root/testdata/sf0.001"
-    val srcPath = Files.createTempDirectory("graft-main-src").toString
-    graft.sources.TranscriptStore.table(spark, dir).limit(2000)
-      .write.mode("overwrite").parquet(srcPath)
-    val outPath = Files.createTempDirectory("graft-main-out").toString
+    val turns = graft.sources.TranscriptStore.table(spark, dir)
+    val srcPath = tmpDir("graft-main-src")
+    val outPath = tmpDir("graft-main-out")
     // query-start events reach a listener synchronously, inside start()
     val started = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -429,17 +422,31 @@ class StreamingSpec extends SparkSpec {
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
-    spark.streams.addListener(listener)
-    try graft.streaming.StreamMain.run(spark, srcPath, outPath, drain = true)
-    finally spark.streams.removeListener(listener)
+    // two drains on one outRoot, a second source file arriving in between
+    def drain(): Unit = {
+      spark.streams.addListener(listener)
+      try graft.streaming.StreamMain.run(spark, srcPath, outPath, drain = true)
+      finally spark.streams.removeListener(listener)
+    }
+    turns.filter(col("turn_idx") % 2 === 0).limit(2000).write.mode("append").parquet(srcPath)
+    drain()
     assert(started.get == 1, s"StreamMain started ${started.get} queries")
-    assert(StreamingPipeline.readRoutedStream(spark, outPath).count() > 0)
+    val firstDrain = StreamingPipeline.readRoutedStream(spark, outPath).count()
+    assert(firstDrain > 0)
+    turns.filter(col("turn_idx") % 2 === 1).limit(2000).write.mode("append").parquet(srcPath)
+    drain()
+    assert(started.get == 2, s"StreamMain started ${started.get} queries over two drains")
+    assert(StreamingPipeline.readRoutedStream(spark, outPath).count() > firstDrain)
+    // the drains compacted the pair state: one folded directory, not one per batch
+    val pairDirs = filesByDir(java.nio.file.Paths.get(s"$outPath/_convpairs"), "batch_id=").keySet
+    assert(pairDirs.size == 1 && pairDirs.head.startsWith("compact-"),
+      s"expected one compacted pair-state dir, saw $pairDirs")
     val counts = StreamingPipeline.exactSinkCounts(spark, s"$outPath/_convpairs")
     assert(counts.count() > 0)
-    // the two-query composition: a second query parsing the same source
+    // the two-query composition: a second query parsing both source files
     // into its own pair state gives the same exact counts
-    val pairs2 = Files.createTempDirectory("graft-main-pairs2").toString
-    val ckpt2 = Files.createTempDirectory("graft-main-ckpt2").toString
+    val pairs2 = tmpDir("graft-main-pairs2")
+    val ckpt2 = tmpDir("graft-main-ckpt2")
     val q2 = StreamingPipeline
       .streamRecords(spark, StreamingPipeline.streamTranscripts(spark, srcPath))
       .writeStream.option("checkpointLocation", ckpt2)
@@ -448,67 +455,6 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable(); q2.stop()
     val twoQuery = StreamingPipeline.exactSinkCounts(spark, pairs2)
     assert(counts.exceptAll(twoQuery).isEmpty && twoQuery.exceptAll(counts).isEmpty)
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(outPath))
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(pairs2))
-  }
-
-  test("streaming dedup drops redelivered payloads within the watermark") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(String, Int, String, String, String, java.sql.Timestamp)]
-    val t = input.toDF().toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val q = StreamingPipeline.dedupStream(t, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("streamdedup")
-      .outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: A delivered twice (same content, different turns) + B
-    input.addData(
-      ("c1", 0, "user", "payload A", "none", ts("2026-01-01 00:00:00")),
-      ("c1", 1, "user", "payload A", "none", ts("2026-01-01 00:00:01")),
-      ("c1", 2, "user", "payload B", "none", ts("2026-01-01 00:00:02")))
-    q.processAllAvailable()
-    // batch 2: A redelivered later but inside the watermark horizon
-    input.addData(("c2", 0, "user", "payload A", "none", ts("2026-01-01 00:01:00")))
-    q.processAllAvailable()
-    q.stop()
-    val texts = spark.table("streamdedup").collect().map(_.getAs[String]("text")).toSeq
-    assert(texts.sorted == Seq("payload A", "payload B"),
-      s"expected one A and one B, got: $texts")
-  }
-
-  test("streaming sessionization carries state across micro-batches and matches batch") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(String, Int, java.sql.Timestamp)]
-    val t = input.toDF().toDF("conv_id", "turn_idx", "ts")
-    val q = StreamingPipeline.sessionizeStream(spark, t, gapSec = 3600)
-      .writeStream.format("memory").queryName("streamsess")
-      .outputMode("update").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val rows = Seq(
-      ("a", 0, ts("2026-01-01 00:00:00")),
-      ("a", 1, ts("2026-01-01 00:30:00")),   // same session
-      ("b", 0, ts("2026-01-01 00:00:00")))
-    val rows2 = Seq(
-      ("a", 2, ts("2026-01-01 02:00:00")),   // gap > 1h ACROSS batches -> new session
-      ("a", 3, ts("2026-01-01 02:10:00")),
-      ("b", 1, ts("2026-01-01 01:00:00")))   // exactly 3600s -> same session
-    input.addData(rows: _*)
-    q.processAllAvailable()
-    input.addData(rows2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("streamsess")
-      .select("conv_id", "turn_idx", "session_idx").collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val batch = graft.operators.ConversationOps
-      .sessionize((rows ++ rows2).toDF("conv_id", "turn_idx", "ts"), gapSec = 3600)
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-    assert(got == batch, s"stream $got vs batch $batch")
-    // the eviction-stable key equals the session's first event time
-    val sess2Start = spark.table("streamsess")
-      .filter(col("conv_id") === "a" && col("turn_idx") === 2)
-      .collect()(0).getAs[Long]("session_start_us")
-    assert(sess2Start == ts("2026-01-01 02:00:00").getTime * 1000L)
   }
 
   test("watermarked windowed sink counts run in append mode") {
@@ -539,7 +485,7 @@ class StreamingSpec extends SparkSpec {
   test("exact streaming distinct-conv counts: batch parity and replay idempotence") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-exact-convs").toString
+    val stateDir = tmpDir("graft-exact-convs")
     val records = graft.operators.Pipeline.records(spark, dir)
 
     // two disjoint "micro-batches" by conv hash, fed through the foreachBatch fn
@@ -558,13 +504,12 @@ class StreamingSpec extends SparkSpec {
       .agg(countDistinct(col("conv_id")).as("n_convs"))
     assert(exact.count() == truth.count())
     assert(exact.except(truth).count() == 0 && truth.except(exact).count() == 0)
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(stateDir))
   }
 
   test("pair-state compaction folds batch dirs to one and preserves exact counts") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val stateDir = tmpDir("graft-compact")
     def batchDirs() = {
       val ls = java.nio.file.Files.list(java.nio.file.Paths.get(stateDir))
       try {
@@ -598,40 +543,5 @@ class StreamingSpec extends SparkSpec {
     val after2 = StreamingPipeline.exactSinkCounts(spark, stateDir).collect()
       .map(r => (r.get(0), r.getString(1), r.get(2), r.get(3)) -> r.getLong(4)).toMap
     assert(after2 == before, "post-replay compaction changed the exact counts")
-    graft.operators.Router.rmrf(java.nio.file.Paths.get(stateDir))
-  }
-
-  test("TTL-bounded sessionization evicts idle conversations; session key survives") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(String, Int, java.sql.Timestamp)]
-    val t = input.toDF().toDF("conv_id", "turn_idx", "ts")
-    // TTL == gap (1h): eviction can only drop conversations whose next turn
-    // would have started a new session anyway
-    val q = StreamingPipeline.sessionizeStream(spark, t, gapSec = 3600,
-        stateTtlMs = Some(3600L * 1000))
-      .writeStream.format("memory").queryName("sess_ttl")
-      .outputMode("update").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    input.addData(("a", 0, ts("2026-01-01 00:00:00")))
-    q.processAllAvailable()
-    // conv b three hours later advances the watermark past a's TTL; the
-    // next batch gives a's timeout a batch to fire
-    input.addData(("b", 0, ts("2026-01-01 03:00:00")))
-    q.processAllAvailable()
-    input.addData(("b", 1, ts("2026-01-01 03:10:00")))
-    q.processAllAvailable()
-    val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
-    assert(stateRows == 1, s"expected only conv b live after eviction, saw $stateRows")
-    // a's post-eviction turn: dense counter restarts (1), but the
-    // eviction-stable session key equals the turn's own event time, exactly
-    // what the unbounded run would assign for a > gap jump
-    input.addData(("a", 1, ts("2026-01-01 03:20:00")))
-    q.processAllAvailable()
-    q.stop()
-    val a1 = spark.table("sess_ttl")
-      .filter(col("conv_id") === "a" && col("turn_idx") === 1).collect()(0)
-    assert(a1.getAs[Int]("session_idx") == 1)
-    assert(a1.getAs[Long]("session_start_us") ==
-      ts("2026-01-01 03:20:00").getTime * 1000L)
   }
 }
