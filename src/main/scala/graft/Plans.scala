@@ -81,6 +81,18 @@ object Plans {
     * compiled for its bytecode size. AQE collapses codegen stages only as
     * it runs each query stage, so an adaptive plan that has not run has
     * none to show.
+    *
+    * A stage's byte count can differ by a few bytes between JVMs on the
+    * same plan. When a hash aggregate splits each aggregate function into
+    * its own method (`spark.sql.codegen.aggregate.splitAggregateFunc.enabled`,
+    * on by default), Spark takes the method's parameters from
+    * `CodeGenerator.getLocalInputVariableValues`, an unordered Set of
+    * `VariableValue(name, javaType)`, whose hash includes the identity hash
+    * of a `java.lang.Class`. The parameter order, hence which locals get
+    * the one-byte load slots (0-3), follows that hash: q24_simhash's
+    * stage 2 reads 288 B when `hashAgg_doAggregate_sum_0`'s row buffer
+    * follows the long into local slot 3 (`aload_3`) and 293 B when it
+    * comes third or fourth. Nothing in this build feeds that order.
     */
   def codegenStages(df: DataFrame): Seq[CodegenStage] = {
     val spark = df.sparkSession
