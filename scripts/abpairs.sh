@@ -13,12 +13,15 @@
 # keeps absolute paths, and building the copy can delete the original's
 # compiled classes.
 #
-# Prints, per run: side, seed, op_cpu_s, setup_s, correctness, exit status
-# and the ledger's jit_s (JIT compile seconds summed over the timed
-# operations); per side: median and quartiles of op_cpu_s and setup_s; the
-# pairs the change won on each metric (lower is better) out of the pairs
-# where both runs completed; and, for any run that exited non-zero, the
-# CodeCache and exception lines of its jvm.log.
+# Prints, per run: side, seed, op_cpu_s, setup_s, correctness, exit status,
+# the ledger's jit_s (JIT compile seconds summed over the timed operations)
+# and whether its jvm.log says `CodeCache is full` (the JIT stopped
+# compiling for want of code cache); per side: median and quartiles of
+# op_cpu_s and setup_s, the median jit_s of its completed runs and the
+# count of its runs whose code cache filled; the pairs the change won on
+# each metric (lower is better) out of the pairs where both runs
+# completed; and, for any run that exited non-zero, the CodeCache and
+# exception lines of its jvm.log.
 set -euo pipefail
 if [ $# -lt 4 ]; then
   echo "usage: $0 <parentDir> <changeDir> <workload> <seed>..." >&2
@@ -42,7 +45,8 @@ def run(side, seed):
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=d, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     work = os.path.join(d, ".bench_build", "runs", f"{workload}-seed{seed}-trace0")
-    r = {"side": side, "seed": seed, "rc": p.returncode, "correct": False, "jit_s": None}
+    r = {"side": side, "seed": seed, "rc": p.returncode, "correct": False, "jit_s": None,
+         "cc_full": None}
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if lines:
         out = json.loads(lines[-1])
@@ -55,17 +59,19 @@ def run(side, seed):
             r["jit_s"] = sum(s["jit_s"] for s in json.load(f))
     except (OSError, ValueError):
         pass
+    try:
+        with open(os.path.join(work, "jvm.log"), errors="replace") as f:
+            hits = [l.rstrip() for l in f if re.search(r"CodeCache|Exception|Error:", l)]
+        r["cc_full"] = any("CodeCache is full" in l for l in hits)
+    except OSError:
+        hits = ["(no jvm.log)"]
     if p.returncode != 0:
-        try:
-            with open(os.path.join(work, "jvm.log"), errors="replace") as f:
-                hits = [l.rstrip() for l in f if re.search(r"CodeCache|Exception|Error:", l)]
-        except OSError:
-            hits = ["(no jvm.log)"]
         r["log"] = hits[:12]
     fmt = lambda v: "-" if v is None else f"{v:.2f}"
     print(f"{side:6} seed {seed:3}  op_cpu_s {fmt(r.get('op_cpu_s')):>7}  "
           f"setup_s {fmt(r.get('setup_s')):>6}  correct {str(r['correct']):5}  "
-          f"exit {r['rc']:3}  jit_s {fmt(r['jit_s'])}", flush=True)
+          f"exit {r['rc']:3}  jit_s {fmt(r['jit_s'])}  "
+          f"codecache_full {'-' if r['cc_full'] is None else r['cc_full']}", flush=True)
     return r
 
 
@@ -93,6 +99,12 @@ for m in METRICS:
              if p["side"] == "parent" and c["side"] == "change" and p["seed"] == c["seed"]
              and p["rc"] == 0 and c["rc"] == 0 and m in p and m in c]
     print(f"{m:8} change wins {sum(c[m] < p[m] for p, c in pairs)}/{len(pairs)} completed pairs")
+for side in sides:
+    mine = [r for r in runs if r["side"] == side]
+    jit = [r["jit_s"] for r in mine if r["rc"] == 0 and r["jit_s"] is not None]
+    print(f"jit_s    {side:6} median {'-' if not jit else f'{quantile(jit, 0.5):.2f}'}  "
+          f"(n={len(jit)})  CodeCache is full in {sum(bool(r['cc_full']) for r in mine)}"
+          f"/{len(mine)} runs")
 for r in runs:
     if r["rc"] != 0:
         print(f"\n{r['side']} seed {r['seed']} exited {r['rc']}; jvm.log:")

@@ -695,8 +695,9 @@ object Pipeline {
   }
 
   /** The lifecycle MERGE: the attacks rows of `staged`, closed by its own
-    * facts, without `record_type`. Router.commit and the streamed resolve
-    * (StreamingPipeline.incrementalResolveFrame) both run it.
+    * facts, without `record_type`. Router.commit runs it over the staged
+    * read-back, the streamed resolve (StreamingPipeline.resolveFrame) over
+    * every micro-batch's attacks and `_stop` directories.
     */
   def lifecycleMerge(staged: DataFrame): DataFrame =
     applyLifecycle(staged.filter(col("record_type") === Attacks),

@@ -46,8 +46,8 @@ object Router {
     * holds no rows (a family that routed none; a stream whose batches were
     * all empty). Underscore-prefixed subtrees are skipped, mirroring
     * Spark's hidden-path rule: a data file inside `_staged` or the
-    * streamed `_attacks` sidecar (attacks and `_stop` rows) must not make
-    * the enclosing read look non-empty.
+    * streamed `_resolved` attacks sink must not make the enclosing read
+    * look non-empty.
     */
   private[graft] def hasParquet(path: String): Boolean = {
     val root = Paths.get(path)
@@ -73,7 +73,8 @@ object Router {
             store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
     val staged = stagedDir(outRoot).toString
     // Fan-out axes (the north rule's per-severity and per-tool sinks):
-    //   - record_type and tool are DIRECTORY axes everywhere;
+    //   - record_type and tool are DIRECTORY axes in the batch route (the
+    //     streamed sinks are `batch_id=/record_type=` only);
     //   - attack_severity is a directory axis for the attacks family (see
     //     commit, always populated there) and a ROW-GROUP axis for the rest
     //     — the sortWithinPartitions clusters each staged file by severity,

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions.col
 import graft.operators.Pipeline
 
 /** Production streaming entry: the spark-submit composition of the streamed
-  * route (parse -> bucketed routed sinks with the incremental W3 lifecycle
-  * MERGE, see [[StreamingPipeline.writeRoutedBatch]]) plus the exact
-  * per-sink distinct-conversation counts maintained as idempotent per-batch
-  * pair state ([[StreamingPipeline.exactConvPairsBatch]]) — the streamed
+  * route (parse -> per-batch routed sinks, then the W3 lifecycle MERGE
+  * into one resolved attacks sink, see
+  * [[StreamingPipeline.writeRoutedBatch]]) plus the exact per-sink
+  * distinct-conversation counts maintained as idempotent per-batch pair
+  * state ([[StreamingPipeline.exactConvPairsBatch]]) — the streamed
   * analog of `scripts/submit.sh Bench`'s batch route. Reference contrast:
   * the plugin's runtime loop is one blocking thread per socket
   * (bbn_f5networks.rb:142-202); here one checkpointed Structured Streaming
@@ -49,7 +50,7 @@ object StreamMain {
       (batch, batchId) =>
         val b = batch.persist()
         try {
-          StreamingPipeline.routeBatch(outRoot, b, batchId)
+          StreamingPipeline.writeRoutedBatch(outRoot)(b, batchId)
           StreamingPipeline.exactConvPairsBatch(pairs)(
             b.filter(col("record_type") =!= Pipeline.Stop), batchId)
         } finally b.unpersist()

@@ -15,9 +15,10 @@ import graft.sources.Transcripts
   * (Pipeline.explodedAll — readStream swaps in transparently because the
   * plan is narrow), and so is the W3 lifecycle rule: batch broadcasts the
   * per-episode aggregate (Pipeline.lifeAggOf) into a join with the attacks
-  * rows, and the routed stream appends each micro-batch's attacks and
-  * stops to one bucketed `_attacks` sidecar and re-runs Router's MERGE
-  * (Pipeline.lifecycleMerge) over the buckets it touched (routeStream).
+  * rows, and the routed stream writes each micro-batch, its attacks and
+  * stops included, to its own `batch_id=` directory, then re-runs Router's
+  * MERGE (Pipeline.lifecycleMerge) over every batch's attacks and `_stop`
+  * directories into one resolved attacks sink (routeStream).
   * The MERGE counts starts and stops over everything routed so far, so the
   * result does not depend on arrival order: a stop routed before its start
   * still closes it. Streaming also aggregates with watermarked windows (W1).
@@ -144,84 +145,38 @@ object StreamingPipeline {
     batch.write.mode("overwrite").partitionBy("record_type")
       .parquet(s"$outRoot/batch_id=$batchId")
 
-  /** Bucket count of the `_attacks` sidecar (`abucket = pmod(attack_id,
-    * AttackBuckets)`): a batch writes at most this many sidecar files. At
-    * 100 TB it is sized so one bucket's attacks fit a target file size (an
-    * Iceberg bucket transform); here it only needs to exceed the typical
-    * per-batch touched-attack spread, so a batch rewrites a strict subset.
+  /** The streamed resolve frame: Router's MERGE (Pipeline.lifecycleMerge)
+    * over every batch's attacks and `_stop` rows, behind a PARTITION FILTER
+    * on record_type, so it opens no stats or traffic file (PlanShapeSpec).
     */
-  val AttackBuckets = 16
-
-  /** The INCREMENTAL resolve frame: Router.commit's MERGE
-    * (Pipeline.lifecycleMerge) over the `_attacks` sidecar of every batch so
-    * far, restricted by a PARTITION FILTER to the touched buckets
-    * (plan-pinned in PlanShapeSpec). Separate from the write so specs can
-    * pin the pruned plan shape.
-    */
-  def incrementalResolveFrame(spark: SparkSession, outRoot: String,
-                              touched: Seq[Int]): DataFrame =
-    Pipeline.lifecycleMerge(spark.read.parquet(s"$outRoot/_attacks")
-      .filter(col("abucket").isin(touched: _*))
-      .withColumnRenamed("abucket", "rbucket")
+  def resolveFrame(spark: SparkSession, outRoot: String): DataFrame =
+    Pipeline.lifecycleMerge(spark.read.parquet(outRoot)
+      .filter(col("record_type").isin(Pipeline.Attacks, Pipeline.Stop))
       .drop("batch_id"))
 
-  /** The streamed MERGE, incremental: rewrite ONLY the resolved-sink buckets
-    * whose attacks or stops this micro-batch routed. Reference behavior:
-    * each stop event synchronously re-updated the stored attack document in
-    * ES (bbn_syslog.rb:271-324); here a micro-batch of stops updates the
-    * affected attack buckets in one narrow agg + join + dynamic-partition
-    * overwrite.
-    *
-    * Scale shape: per-batch work is O(touched-buckets/B of the sink), not
-    * O(total attacks so far). The read prunes to the touched buckets
-    * (PartitionFilters on abucket); the write replaces only the touched
-    * `rbucket=` partitions, one file each (partitionOverwriteMode=dynamic —
-    * the parquet stand-in for an Iceberg MERGE INTO). `touched` lists the
-    * sidecar's own bucket dirs, so a non-empty set always finds files.
-    * Idempotent: a replayed batch overwrites its own batch-id dirs first, so
-    * the touched buckets rewrite to identical contents.
+  /** Overwrite the resolved attacks sink with resolveFrame, as each stop
+    * re-updated its stored attack in the reference (bbn_syslog.rb:271-324).
+    * The work grows with the attacks and stops routed so far. Idempotent: a
+    * replayed batch rewrites its own directory first, then the same result.
     */
-  def resolveAttacks(spark: SparkSession, outRoot: String, touched: Seq[Int]): Unit =
-    if (touched.nonEmpty)
-      incrementalResolveFrame(spark, outRoot, touched)
-        .repartition(col("rbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("rbucket")
-        .parquet(s"$outRoot/_resolved/record_type=attacks")
+  def resolveAttacks(spark: SparkSession, outRoot: String): Unit =
+    resolveFrame(spark, outRoot)
+      .write.mode("overwrite").parquet(s"$outRoot/_resolved/record_type=attacks")
 
   /** The routed-sink batch writer (the streaming analog of Router.route):
-    * 1. the batch's stats/traffic rows land in their own `batch_id=<id>`
-    *    directory partitioned by record_type (idempotent overwrite — see
-    *    writeBatch for the exactly-once contract);
-    * 2. its attacks rows and its `_stop` rows with an id (the rows
-    *    Pipeline.lifeFactsFromStaged keeps) land, with their `record_type`,
-    *    in ONE sidecar `_attacks/batch_id=<id>`, shuffled on and
-    *    partitioned by `abucket`: one file per touched bucket, hidden from
-    *    partition discovery over `outRoot` by the underscore;
-    * 3. resolveAttacks rewrites ONLY the buckets that write produced (a
-    *    directory listing, no Spark job), so the routed output CONVERGES to
-    *    Router.route's as the stream drains — a stop in batch N closes an
-    *    attack routed in batch N-k, as the reference's ES update did.
+    * writeBatch lands every family, `_stop` rows included, in the batch's
+    * own `batch_id=<id>` directory, then resolveAttacks re-runs Router's
+    * MERGE, so a stop in batch N closes an attack routed in batch N-k and
+    * the output converges to Router.route's. A raw read of `outRoot` also
+    * sees unresolved attacks and `_stop` rows; readRoutedStream is the
+    * reader.
     */
   def writeRoutedBatch(outRoot: String)(batch: DataFrame, batchId: Long): Unit = {
-    val b = batch.persist()
-    try routeBatch(outRoot, b, batchId) finally b.unpersist()
-  }
-
-  /** writeRoutedBatch's steps over a batch the caller has persisted. */
-  private[streaming] def routeBatch(outRoot: String, b: DataFrame, batchId: Long): Unit = {
-    writeBatch(outRoot)(b.filter(!col("record_type").isin(Pipeline.Stop, Pipeline.Attacks)),
-      batchId)
-    val sidecar = Paths.get(outRoot, "_attacks", s"batch_id=$batchId")
-    b.filter(col("record_type") === Pipeline.Attacks ||
-        (col("record_type") === Pipeline.Stop && col("attack_id") =!= 0L))
-      .withColumn("abucket", pmod(col("attack_id"), lit(AttackBuckets)).cast("int"))
-      .repartition(col("abucket"))
-      .write.mode("overwrite").partitionBy("abucket")
-      .parquet(sidecar.toString)
-    resolveAttacks(b.sparkSession, outRoot, dirsUnder(sidecar, "abucket=")
-      .map(_.getFileName.toString.stripPrefix("abucket=").toInt))
+    writeBatch(outRoot)(batch, batchId)
+    // an empty batch changes no attack, and writes no file for the
+    // resolve's schema inference to find
+    if (Router.hasParquet(s"$outRoot/batch_id=$batchId"))
+      resolveAttacks(batch.sparkSession, outRoot)
   }
 
   /** The `<prefix>...` subdirectories of `root`; none if it is absent. */
@@ -232,9 +187,9 @@ object StreamingPipeline {
       finally ls.close()
     }
 
-  /** Routed streamed sinks -> one DataFrame: the resolved attacks (post
-    * incremental lifecycle MERGE) plus every other family from the batch-id
-    * sinks — the frame a StreamingSpec equates with Router.readRouted.
+  /** Routed streamed sinks -> one DataFrame: the resolved attacks plus the
+    * batch-id sinks' other families, `_stop` excluded — the frame a
+    * StreamingSpec equates with Router.readRouted.
     * Either side may be absent (an attacks-only or stats-only stream);
     * schema inference is guarded so empty batches can't crash the read.
     */
@@ -242,12 +197,11 @@ object StreamingPipeline {
     val resolvedPath = s"$outRoot/_resolved/record_type=attacks"
     val rest =
       if (Router.hasParquet(outRoot)) Some(spark.read.parquet(outRoot)
-        .filter(col("record_type") =!= Pipeline.Attacks)
+        .filter(!col("record_type").isin(Pipeline.Attacks, Pipeline.Stop))
         .drop("batch_id"))
       else None
     val resolved =
       if (Router.hasParquet(resolvedPath)) Some(spark.read.parquet(resolvedPath)
-        .drop("rbucket")
         .withColumn("record_type", lit(Pipeline.Attacks)))
       else None
     (rest ++ resolved).reduceOption(_.unionByName(_, allowMissingColumns = true))

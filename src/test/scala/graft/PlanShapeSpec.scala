@@ -134,31 +134,29 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     // batch: the records() path behind q05/q11
     assertBroadcast(Pipeline.attacksCorrelated(spark, dir))
-    // streaming: the incremental resolve over a small attacks sidecar
+    // streaming: the resolve over a routed micro-batch's attacks and stops
     import graft.streaming.StreamingPipeline
     val outPath = tmpDir("graft-resolve-join")
     StreamingPipeline.writeRoutedBatch(outPath)(StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir)), 0L)
-    assertBroadcast(StreamingPipeline.incrementalResolveFrame(spark, outPath, 0 until 16))
+    assertBroadcast(StreamingPipeline.resolveFrame(spark, outPath))
   }
 
-  test("incremental streamed resolve prunes both sidecar scans to the touched buckets") {
+  test("streamed resolve prunes both scans to the attacks and _stop directories") {
     import graft.streaming.StreamingPipeline
-    val outPath = tmpDir("graft-incr-plan")
-    val exploded = StreamingPipeline.streamRecordsAll(spark,
-      graft.sources.TranscriptStore.table(spark, dir))
-    StreamingPipeline.writeRoutedBatch(outPath)(exploded, 0L)
-    val df = StreamingPipeline.incrementalResolveFrame(spark, outPath, Seq(1, 2))
-    val plan = df.queryExecution.executedPlan.toString
-    // both scans of the one `_attacks` sidecar (the attacks rows and the
-    // lifecycle facts) must carry PARTITION filters on its bucket dirs — an
-    // unpruned resolve re-reads the whole accumulated state per
-    // micro-batch, the O(B^2) shape the incremental MERGE removes
+    val outPath = tmpDir("graft-resolve-plan")
+    StreamingPipeline.writeRoutedBatch(outPath)(StreamingPipeline.streamRecordsAll(spark,
+      graft.sources.TranscriptStore.table(spark, dir)), 0L)
+    val plan = StreamingPipeline.resolveFrame(spark, outPath).queryExecution.executedPlan.toString
+    // both scans of the batch-id sinks (the attacks rows and the lifecycle
+    // facts) must carry PARTITION filters on record_type: the resolve runs
+    // once per micro-batch over the whole history, and an unpruned scan
+    // would open every stats and traffic file routed so far
     val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.size == 2, s"expected two sidecar scans:\n${plan.take(3000)}")
+    assert(scans.size == 2, s"expected two scans:\n${plan.take(3000)}")
     scans.foreach { l =>
-      assert(l.contains("/_attacks") && """PartitionFilters: \[[^\]]*abucket""".r.findFirstIn(l).isDefined,
-        s"a sidecar scan without an abucket partition filter:\n${plan.take(3000)}")
+      assert("""PartitionFilters: \[[^\]]*record_type""".r.findFirstIn(l).isDefined,
+        s"a resolve scan without a record_type partition filter:\n${plan.take(3000)}")
     }
   }
 

@@ -128,45 +128,44 @@ class StreamingSpec extends SparkSpec {
     assert(after.filter(col("attack_ongoing") === 0).count() == closedBefore)
   }
 
-  test("a micro-batch's resolve rewrites ONLY its touched resolved buckets") {
+  test("a micro-batch writes only its own batch directory and the resolved sink") {
     val dir = "/root/testdata/sf0.001"
-    val outPath = tmpDir("graft-routed-incr")
+    val outPath = tmpDir("graft-routed-writeset")
+    val root = java.nio.file.Paths.get(outPath)
     val exploded = StreamingPipeline.streamRecordsAll(spark,
       graft.sources.TranscriptStore.table(spark, dir))
-    // batch 0: everything -> the resolved sink covers many buckets
-    StreamingPipeline.writeRoutedBatch(outPath)(exploded, 0L)
-    val resolvedRoot = java.nio.file.Paths.get(s"$outPath/_resolved/record_type=attacks")
-    def bucketFiles(): Map[String, Set[String]] = {
+    val part = pmod(hash(col("conv_id"), col("turn_idx")), lit(4))
+    // every file under outRoot -> its mtime
+    def files(): Map[String, java.nio.file.attribute.FileTime] = {
       import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(resolvedRoot)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("rbucket="))
-        .map { d =>
-          val fs = java.nio.file.Files.list(d)
-          try d.getFileName.toString ->
-            fs.iterator().asScala.map(_.getFileName.toString)
-              .filter(_.endsWith(".parquet")).toSet
-          finally fs.close()
-        }.toMap
-      finally ls.close()
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.getLastModifiedTime(f)).toMap
+      finally walk.close()
     }
-    val before = bucketFiles()
-    assert(before.size > 1, s"expected multiple resolved buckets, got ${before.keySet}")
-    // batch 1: lifecycle facts touching exactly ONE bucket
-    val target = exploded
-      .filter(col("record_type") === "attacks" && col("attack_id") =!= 0L)
-      .select(pmod(col("attack_id"), lit(16)).cast("int")).head.getInt(0)
-    val b1 = exploded.filter(col("record_type").isin("attacks", "_stop") &&
-      col("attack_id") =!= 0L && pmod(col("attack_id"), lit(16)) === target)
-    assert(b1.count() > 0)
-    StreamingPipeline.writeRoutedBatch(outPath)(b1, 1L)
-    val after = bucketFiles()
-    assert(after.keySet == before.keySet)
-    before.keys.filterNot(_ == s"rbucket=$target").foreach { k =>
-      assert(after(k) == before(k), s"untouched resolved bucket $k was rewritten")
+    // the files a write created, changed or deleted, outside the allowed dirs
+    def strays(before: Map[String, java.nio.file.attribute.FileTime], allowed: Seq[String]) = {
+      val after = files()
+      (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
+        .filterNot(f => allowed.exists(f.startsWith))
     }
-    assert(after(s"rbucket=$target") != before(s"rbucket=$target"),
-      "the touched bucket was not rewritten")
+    (0 until 3).foreach(i =>
+      StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === i), i.toLong))
+    val before = files()
+    StreamingPipeline.writeRoutedBatch(outPath)(exploded.filter(part === 3), 3L)
+    val changed = strays(before, Seq("batch_id=3/", "_resolved/"))
+    assert(changed.isEmpty, s"batch 3 wrote outside its own directory and _resolved: $changed")
+    // an empty batch writes its own directory only: the resolve does not run
+    val settled = files()
+    StreamingPipeline.writeRoutedBatch(outPath)(exploded.limit(0), 4L)
+    val emptyChanged = strays(settled, Seq("batch_id=4/"))
+    assert(emptyChanged.isEmpty, s"an empty batch wrote outside its own directory: $emptyChanged")
+
+    val batchOut = tmpDir("graft-writeset-batch")
+    graft.operators.Router.route(spark, dir, batchOut)
+    assertSameRoutes(StreamingPipeline.readRoutedStream(spark, outPath),
+      graft.operators.Router.readRouted(spark, batchOut))
+    Seq(outPath, batchOut).foreach(p => graft.operators.Router.rmrf(java.nio.file.Paths.get(p)))
   }
 
   test("a first batch of only _stop rows cannot crash the resolve (empty-sink guard)") {
@@ -199,29 +198,6 @@ class StreamingSpec extends SparkSpec {
       finally fs.close()
     }.toMap
     finally ls.close()
-  }
-
-  test("one sidecar per batch: one file per touched bucket, one per resolved bucket") {
-    val dir = "/root/testdata/sf0.001"
-    val outPath = tmpDir("graft-routed-files")
-    val batch = StreamingPipeline.streamRecordsAll(spark,
-      graft.sources.TranscriptStore.table(spark, dir)).repartition(4)
-    StreamingPipeline.writeRoutedBatch(outPath)(batch, 0L)
-    val sidecar = filesByDir(java.nio.file.Paths.get(s"$outPath/_attacks/batch_id=0"), "abucket=")
-    assert(sidecar.nonEmpty)
-    sidecar.foreach { case (k, fs) => assert(fs.size == 1, s"abucket=$k holds ${fs.size} files") }
-    // the touched set: buckets of the attacks rows and of the stops with an id
-    val touched = batch
-      .filter(col("record_type") === "attacks" ||
-        (col("record_type") === "_stop" && col("attack_id") =!= 0L))
-      .select(pmod(col("attack_id"), lit(StreamingPipeline.AttackBuckets)).cast("string"))
-      .distinct().as[String].collect().toSet
-    assert(sidecar.keySet == touched)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$outPath/_lifefacts")))
-    val resolved = filesByDir(
-      java.nio.file.Paths.get(s"$outPath/_resolved/record_type=attacks"), "rbucket=")
-    assert(resolved.nonEmpty)
-    resolved.foreach { case (k, fs) => assert(fs.size == 1, s"rbucket=$k holds ${fs.size} files") }
   }
 
   test("split-and-replay property: any 2-4 batch split, one batch replayed, equals the batch route") {
