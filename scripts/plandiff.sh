@@ -9,6 +9,12 @@
 # transcript store (`file:/<checkout>/target/transcripts/...`). Two dumps of
 # the same commit differ in all of these; no plan shape is carried by them.
 #
+# A `codegen stage N: max method B B, first Op` line compares its stage id,
+# first operator and `(over the 8000 B JIT limit)` marker exactly, and its
+# byte count B within 16 B: two JVMs can order a split aggregate method's
+# parameters differently (see `graft.Plans.codegenStages`), which has moved
+# the same stage by 5 B (288/293, 197/202).
+#
 # Usage: scripts/plandiff.sh <dirA> <dirB>
 #   Files are paired by query name: the tag of `<query>_<tag>.txt`, which
 #   must not contain `_`, is ignored, so dumps of two commits made with
@@ -27,7 +33,19 @@ norm() {
     -e 's/plan_id=[0-9]+/plan_id=/g' -e 's/RDD\[[0-9]+\]/RDD[]/g' \
     -e 's/\$\$Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/$$Lambda/g' \
     -e 's/\b([A-Za-z0-9_]+\.scala):[0-9]+/\1:/g' \
-    -e 's#file:[^] ,]*/target/transcripts/#file:<checkout>/target/transcripts/#g' "$1"
+    -e 's#file:[^] ,]*/target/transcripts/#file:<checkout>/target/transcripts/#g' \
+    -e 's/^(codegen stage [0-9]+: max method )[0-9]+ B/\1<n> B/' "$1"
+}
+tolerance=16
+# "<stage> <bytes>" per codegen line of a dump
+stagebytes() { sed -nE 's/^codegen stage ([0-9]+): max method ([0-9]+) B.*/\1 \2/p' "$1"; }
+# byte counts of two dumps whose codegen lines otherwise match, pairwise;
+# prints and fails on a pair further apart than the tolerance
+bytesclose() {
+  paste -d ' ' <(stagebytes "$1") <(stagebytes "$2") | awk -v tol=$tolerance -v q="$3" '
+    { d = $2 - $4; if (d < 0) d = -d
+      if (d > tol) { printf "== %s: codegen stage %s max method %s B vs %s B\n", q, $1, $2, $4; bad = 1 } }
+    END { exit bad }'
 }
 # query name of a dump file: strip the directory and the trailing _<tag>.txt
 query() { local f=${1##*/}; f=${f%.txt}; echo "${f%_*}"; }
@@ -40,7 +58,7 @@ for q in $(printf '%s\n' "${!fa[@]}" "${!fb[@]}" | sort -u); do
     echo "== $q: only in ${fa[$q]:+$a}${fb[$q]:+$b}"
     status=1 differ=$((differ + 1))
   elif diff -u --label "$q ($a)" --label "$q ($b)" \
-      <(norm "${fa[$q]}") <(norm "${fb[$q]}"); then
+      <(norm "${fa[$q]}") <(norm "${fb[$q]}") && bytesclose "${fa[$q]}" "${fb[$q]}" "$q"; then
     same=$((same + 1))
   else
     status=1 differ=$((differ + 1))

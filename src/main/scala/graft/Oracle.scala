@@ -500,7 +500,7 @@ incr AS (
   FROM ex LEFT JOIN inear ON inear.doc_id = ex.doc_id)"""
 
   /** Positional (non-distinct) 3-gram codes + the winnowing selection
-    * (window-of-4 minima) — mirror DedupOps.kgramCodesFrom/winnowFingerprints.
+    * (window-of-4 minima) — mirror TextOps.gramCodes(_, 3)/DedupOps.winnowFingerprints.
     */
   private def kgramsExpr: String = s"""
     CASE WHEN len($sigsExpr) < 3 THEN CAST([] AS BIGINT[])

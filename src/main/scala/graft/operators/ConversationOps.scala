@@ -158,10 +158,10 @@ object ConversationOps {
   def validateConversations(transcripts: DataFrame): DataFrame = {
     val idxs = transform(col("_t"), t => t.getField("turn_idx"))
     val nd = size(array_distinct(idxs)).cast("long")
-    val nRepeats = when(size(col("_t")) < 2, lit(0L)).otherwise(
-      size(filter(sequence(lit(2), size(col("_t"))), i =>
-        element_at(col("_t"), i).getField("role")
-          === element_at(col("_t"), i - 1).getField("role"))).cast("long"))
+    val nRepeats = size(filter(
+      TextOps.windows(col("_t"), 2, "boolean")(w =>
+        w(1).getField("role") === w(0).getField("role")),
+      same => same)).cast("long")
     transcripts
       .groupBy("conv_id")
       .agg(array_sort(collect_list(

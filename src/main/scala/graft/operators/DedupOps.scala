@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import TextOps.{tokenSig, tokens}
+import TextOps.{P, gramCodes, sigs, tokens}
 
 /** Deduplication operators for the training-data pipeline: exact hash
   * dedup, n-gram Jaccard near-dup via an inverted shingle index, and
@@ -15,8 +15,6 @@ import TextOps.{tokenSig, tokens}
   * oracle replicates signatures exactly (graft.Oracle).
   */
 object DedupOps {
-
-  val P = 1000000007L
 
   /** Exact dedup: every doc mapped to the keeper (min doc_id) of its
     * identical-text group.
@@ -41,30 +39,18 @@ object DedupOps {
       .select("doc_id", "keeper_doc_id", "is_dup")
   }
 
-  /** Distinct word-3-gram shingle codes of a token-signature array
-    * (polynomial over the signatures; values < P so no overflow). Callers go
-    * through `withShingles`: referencing `sigs` inside the per-element
-    * lambda would re-derive the whole signature array per shingle otherwise.
-    */
-  private def shingleCodesFrom(sigs: Column): Column =
-    // sequence() descends when start > stop, so guard short documents
-    when(size(sigs) < 3, array().cast("array<bigint>")).otherwise(
-      array_distinct(
-        transform(sequence(lit(1), size(sigs) - 2), i =>
-          pmod(element_at(sigs, i) * lit(131L * 131L)
-            + element_at(sigs, i + 1) * lit(131L)
-            + element_at(sigs, i + 2), lit(P)))))
-
-  /** docs + a materialized `_codes` column: the signature array lands in
-    * its own projection first, so the shingle lambda's three element_at
-    * references share ONE evaluation per row instead of re-deriving the
-    * array per element (a >100x per-row blowup otherwise; CollapseProject
-    * keeps multi-referenced non-cheap aliases materialized).
+  /** docs + a materialized `_codes` column, the distinct word-3-gram
+    * shingle codes: the signature array lands in its own projection first,
+    * so the shingle lambda's three element_at references share ONE
+    * evaluation per row instead of re-deriving the array per element (a
+    * >100x per-row blowup otherwise; CollapseProject keeps multi-referenced
+    * non-cheap aliases materialized). Every gram-code caller below does the
+    * same.
     */
   def withShingles(docs: DataFrame): DataFrame =
     docs
-      .withColumn("_sigs", transform(tokens(col("text")), tokenSig(_)))
-      .withColumn("_codes", shingleCodesFrom(col("_sigs")))
+      .withColumn("_sigs", sigs(col("text")))
+      .withColumn("_codes", array_distinct(gramCodes(col("_sigs"), 3)))
       .drop("_sigs")
 
   /** doc_id -> exploded distinct shingle codes (the inverted index).
@@ -191,17 +177,6 @@ object DedupOps {
       .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
   }
 
-  /** Positional word-3-gram codes: the same polynomial as shingleCodesFrom but
-    * WITHOUT the distinct — winnowing needs the positional hash sequence,
-    * because its guarantee is stated over consecutive windows.
-    */
-  private def kgramCodesFrom(sigs: Column): Column =
-    when(size(sigs) < 3, array().cast("array<bigint>")).otherwise(
-      transform(sequence(lit(1), size(sigs) - 2), i =>
-        pmod(element_at(sigs, i) * lit(131L * 131L)
-          + element_at(sigs, i + 1) * lit(131L)
-          + element_at(sigs, i + 2), lit(P))))
-
   /** Duplicated-SPAN extraction — the within-document complement of
     * document-level dedup (the shape of exact substring deduplication, Lee
     * et al., "Deduplicating Training Data Makes Language Models Better",
@@ -240,8 +215,8 @@ object DedupOps {
     // parquet scan's DataFilter)
     val idx = Intermediates.persist(
       docs
-        .withColumn("_sigs", transform(tokens(col("text")), tokenSig(_)))
-        .withColumn("_k", kgramCodesFrom(col("_sigs")))
+        .withColumn("_sigs", sigs(col("text")))
+        .withColumn("_k", gramCodes(col("_sigs"), 3))
         .select(col("doc_id"), posexplode_outer(col("_k")).as(Seq("_p0", "g")))
         .filter(col("g").isNotNull)
         .select(col("doc_id"), (col("_p0") + 1).cast("long").as("pos"), col("g")))
@@ -325,8 +300,8 @@ object DedupOps {
     */
   def winnowFingerprints(docs: DataFrame, w: Int = 4): DataFrame =
     docs
-      .withColumn("_sigs", transform(tokens(col("text")), tokenSig(_)))
-      .withColumn("_k", kgramCodesFrom(col("_sigs")))
+      .withColumn("_sigs", sigs(col("text")))
+      .withColumn("_k", gramCodes(col("_sigs"), 3))
       .withColumn("_fps",
         when(size(col("_k")) === 0, array().cast("array<bigint>"))
           .when(size(col("_k")) < w, array(array_min(col("_k"))))
@@ -413,20 +388,6 @@ object DedupOps {
       .withColumn("is_contaminated", col("contam_ratio") >= threshold)
   }
 
-  /** Distinct positional n-gram codes for arbitrary `n`: polynomial over
-    * token signatures with precomputed powers of 131 mod P. Each term is
-    * sig * 131^(n-1-j) < 2^44 and the 13-term sum stays < 2^48, so the
-    * arithmetic is exact int64 on both engines before the single pmod.
-    */
-  def ngramCodes(sigs: Column, n: Int): Column = {
-    val pows = Array.iterate(1L, n)(p => p * 131L % P).reverse
-    when(size(sigs) < n, array().cast("array<bigint>")).otherwise(
-      array_distinct(
-        transform(sequence(lit(1), size(sigs) - (n - 1)), i =>
-          pmod((0 until n).map(j => element_at(sigs, i + j) * lit(pows(j)))
-            .reduce(_ + _), lit(P)))))
-  }
-
   /** Exact 13-gram decontamination — the GPT-3/Pile-style eval-overlap
     * check: a training document is contaminated if it shares ANY single
     * 13-gram with the benchmark set. The complement of `decontaminate`
@@ -445,8 +406,8 @@ object DedupOps {
                          benchPred: Column = pmod(col("doc_id"), lit(50)) === 0): DataFrame = {
     val idx = Intermediates.persist(
       docs
-        .withColumn("_sigs", transform(tokens(col("text")), tokenSig(_)))
-        .withColumn("_ng", ngramCodes(col("_sigs"), n))
+        .withColumn("_sigs", sigs(col("text")))
+        .withColumn("_ng", array_distinct(gramCodes(col("_sigs"), n)))
         .select(col("doc_id"), explode_outer(col("_ng")).as("ngram"))
         .filter(col("ngram").isNotNull))
     val bench = idx.filter(benchPred).select("ngram").distinct()
@@ -631,8 +592,8 @@ object DedupOps {
   def cdcChunks(docs: DataFrame, modulus: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val idx = docs
-      .withColumn("_sigs", transform(tokens(col("text")), tokenSig(_)))
-      .withColumn("_k", kgramCodesFrom(col("_sigs")))
+      .withColumn("_sigs", sigs(col("text")))
+      .withColumn("_k", gramCodes(col("_sigs"), 3))
       .select(col("doc_id"), col("_k"),
         posexplode_outer(col("_sigs")).as(Seq("_p0", "sig")))
       .filter(col("sig").isNotNull)

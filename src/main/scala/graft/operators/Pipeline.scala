@@ -518,9 +518,7 @@ object Pipeline {
   def records(spark: SparkSession, dir: String, rep: Int = 1,
               families: Set[String] = RecordFamilies,
               store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
-    configure(spark)
-    val t = healthFilter(store.table(spark, dir, rep),
-      Transcripts.healthStrings(spark))
+    val t = transcriptsClean(spark, dir, rep, store)
     val offsets = Transcripts.utcOffsets(spark)
     val ex = explodedAll(t, offsets, families - Stop)
     if (families(Attacks)) applyLifecycle(ex, lifeAggOf(lifeFacts(t, offsets)))
@@ -762,9 +760,7 @@ object Pipeline {
     */
   def attackRollup(spark: SparkSession, dir: String, rep: Int = 1,
                    store: graft.sources.TranscriptTable = graft.sources.TranscriptStore): DataFrame = {
-    configure(spark)
-    val t = healthFilter(store.table(spark, dir, rep),
-      Transcripts.healthStrings(spark))
+    val t = transcriptsClean(spark, dir, rep, store)
     val ex = explodedAll(t, Transcripts.utcOffsets(spark), Set(Attacks, Stats))
     val isAtk = col("record_type") === Attacks
     val w = Window.partitionBy("attack_id")

@@ -91,12 +91,9 @@ object Router {
     * every family's records plus the internal `_stop` rows.
     */
   private[graft] def exploded(spark: SparkSession, dir: String, rep: Int,
-                              store: graft.sources.TranscriptTable): DataFrame = {
-    Pipeline.configure(spark)
-    val t = Pipeline.healthFilter(store.table(spark, dir, rep),
-      Transcripts.healthStrings(spark))
-    Pipeline.explodedAll(t, Transcripts.utcOffsets(spark))
-  }
+                              store: graft.sources.TranscriptTable): DataFrame =
+    Pipeline.explodedAll(Pipeline.transcriptsClean(spark, dir, rep, store),
+      Transcripts.utcOffsets(spark))
 
   /** Step 2, one partition: publish `outRoot/record_type=p` from the staged
     * read-back. Attacks get the lifecycle rewrite, by tool/attack_severity;

@@ -24,19 +24,48 @@ object TextOps {
     */
   def tokenSig(tok: Column): Column = ascii(tok) * lit(131L) + length(tok)
 
-  val FpMod = 1000000007L
+  /** The token-signature array of a document. */
+  def sigs(text: Column): Column = transform(tokens(text), tokenSig(_))
+
+  /** The prime modulus of every polynomial code and hash over signatures. */
+  val P = 1000000007L
   val FpMul = 1000003L
+
+  /** One element per sliding window of `n` consecutive elements of `arr`:
+    * `f` maps the window's elements, in order, to the output element of
+    * type `elemType`. An array shorter than `n` gives an empty array:
+    * unguarded, `sequence()` would count down and read windows off its ends.
+    */
+  def windows(arr: Column, n: Int, elemType: String)(f: Seq[Column] => Column): Column =
+    when(size(arr) < n, array().cast(s"array<$elemType>"))
+      .otherwise(transform(sequence(lit(1), size(arr) - (n - 1)), i =>
+        f((0 until n).map(j => element_at(arr, i + j)))))
+
+  /** Polynomial code of one window of signatures: sum of w_j * 131^(n-1-j)
+    * mod P, the powers precomputed mod P (the optimizer drops the last
+    * term's `* 1`). Each signature is at most 0x10FFFF * 131 + token length
+    * (`ascii` returns any code point), under 2^28 for tokens shorter than
+    * 10^8 chars, and each power is < P < 2^30, so a term is < 2^58 and up to
+    * 32 terms sum exactly in int64 on both engines before the single pmod.
+    */
+  def gramCode(w: Seq[Column]): Column = {
+    val pows = Array.iterate(1L, w.size)(p => p * 131L % P).reverse
+    pmod(w.zip(pows).map { case (x, p) => x * lit(p) }.reduce(_ + _), lit(P))
+  }
+
+  /** Positional n-gram codes of a signature array (see [[gramCode]]). */
+  def gramCodes(arr: Column, n: Int): Column = windows(arr, n, "bigint")(gramCode)
 
   /** Rolling polynomial fingerprint over token signatures, left-fold with
     * per-step modulus (document fingerprinting for near-dup triage).
     * Fold starts from the first element to mirror DuckDB's list_reduce.
     */
   def fingerprint(text: Column): Column = {
-    val sigs = transform(tokens(text), tokenSig(_))
+    val s = sigs(text)
     aggregate(
-      slice(sigs, lit(2), size(sigs)),
-      element_at(sigs, 1),
-      (acc, x) => pmod(acc * FpMul + x, lit(FpMod)))
+      slice(s, lit(2), size(s)),
+      element_at(s, 1),
+      (acc, x) => pmod(acc * FpMul + x, lit(P)))
   }
 
   /** BPE-ish pre-tokenization regex (the GPT-2-style split shape, ASCII
@@ -155,7 +184,7 @@ object TextOps {
     val bLit = array(lit(7L), lit(101L), lit(3571L), lit(91193L))
     def bucket(sig: Column, j: Column) =
       pmod(pmod(sig * element_at(aLit, j + 1) + element_at(bLit, j + 1),
-        lit(FpMod)), lit(width.toLong))
+        lit(P)), lit(width.toLong))
     val toks = docs.select(explode(tokens(col("text"))).as("token"))
     // counter grid: depth x width longs, partial-aggregated map-side — the
     // reduce state is d*w rows no matter the corpus
@@ -197,10 +226,8 @@ object TextOps {
       .groupBy("tok").agg(count("*").as("c"))
     val bigrams = withToks
       .withColumn("_bg",
-        when(size(col("_toks")) < 2, array().cast("array<struct<t1:string,t2:string>>"))
-          .otherwise(transform(sequence(lit(1), size(col("_toks")) - 1), i =>
-            struct(element_at(col("_toks"), i).as("t1"),
-              element_at(col("_toks"), i + 1).as("t2")))))
+        windows(col("_toks"), 2, "struct<t1:string,t2:string>")(w =>
+          struct(w(0).as("t1"), w(1).as("t2"))))
       .select(explode_outer(col("_bg")).as("bg"))
       .filter(col("bg").isNotNull)
       .select(col("bg.t1"), col("bg.t2"))
@@ -225,9 +252,8 @@ object TextOps {
     */
   def dup2gramRatio(text: Column): Column = {
     val toks = tokens(text)
-    val grams = transform(sequence(lit(1), size(toks) - 1), i =>
-      concat(element_at(toks, i), lit(" "), element_at(toks, i + 1)))
-    // guard BEFORE building grams: sequence() descends when size < 2
+    val grams = windows(toks, 2, "string")(w => concat(w(0), lit(" "), w(1)))
+    // a one-token document has no 2-gram and no ratio
     when(size(toks) < 2, lit(0.0)).otherwise(
       lit(1.0) - size(array_distinct(grams)).cast("double")
         / (size(toks) - 1).cast("double"))
@@ -423,19 +449,10 @@ object TextOps {
     // one pass over text: the signature array feeds three consumers
     // (n_tokens + both gram censuses), so it rides the release ledger
     // instead of re-tokenizing per consumer
-    val sigs = Intermediates.persist(
+    val sigDocs = Intermediates.persist(
       docs.select(col("doc_id"), size(tokens(col("text"))).cast("long")
-        .as("n_tokens"), transform(tokens(col("text")), tokenSig(_)).as("sigs")))
-    val biCodes = when(size(col("sigs")) < 2, array().cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(1), size(col("sigs")) - 1), i =>
-        pmod(element_at(col("sigs"), i) * lit(131L)
-          + element_at(col("sigs"), i + 1), lit(FpMod))))
-    val triCodes = when(size(col("sigs")) < 3, array().cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(1), size(col("sigs")) - 2), i =>
-        pmod(element_at(col("sigs"), i) * lit(131L * 131L)
-          + element_at(col("sigs"), i + 1) * lit(131L)
-          + element_at(col("sigs"), i + 2), lit(FpMod))))
-    def perDoc(codes: Column, pre: String) = sigs
+        .as("n_tokens"), sigs(col("text")).as("sigs")))
+    def perDoc(codes: Column, pre: String) = sigDocs
       .select(col("doc_id"), explode_outer(codes).as("g"))
       .filter(col("g").isNotNull)
       .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
@@ -446,9 +463,9 @@ object TextOps {
     def frac(n: Column, d: Column) =
       when(d.isNull || d === 0L, lit(0.0))
         .otherwise(n.cast("double") / d.cast("double"))
-    sigs.select("doc_id", "n_tokens")
-      .join(perDoc(biCodes, "b"), Seq("doc_id"), "left")
-      .join(perDoc(triCodes, "t"), Seq("doc_id"), "left")
+    sigDocs.select("doc_id", "n_tokens")
+      .join(perDoc(gramCodes(col("sigs"), 2), "b"), Seq("doc_id"), "left")
+      .join(perDoc(gramCodes(col("sigs"), 3), "t"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         frac(col("b_dup"), col("b_total")).as("dup2_frac"),
         frac(col("t_dup"), col("t_total")).as("dup3_frac"),
@@ -487,25 +504,20 @@ object TextOps {
     * of the 100 scored docs back off at least once).
     */
   def stupidBackoff(docs: DataFrame, holdoutMod: Int = 5): DataFrame = {
-    val sigs = docs.select(col("doc_id"),
-      transform(tokens(col("text")), tokenSig(_)).as("sigs"))
+    val sigDocs = docs.select(col("doc_id"), sigs(col("text")).as("sigs"))
     val hold = pmod(col("doc_id"), lit(holdoutMod.toLong)) === 0L
     // the train shard feeds THREE count tables (uni/bi/tri): tokenize it
     // once and keep the signature arrays on the release ledger instead of
     // re-scanning text per table (the two-consumers Catalyst lesson)
-    val train = Intermediates.persist(sigs.filter(!hold))
+    val train = Intermediates.persist(sigDocs.filter(!hold))
 
     // positional full-trigram contexts for a shard: (doc_id, pos, w2, w1, w0)
     // with pos >= 3; outer explode + isNotNull for the usual
     // InferFiltersFromGenerate reason (see DedupOps.shingleIndex)
     def triples(df: DataFrame) = df
       .select(col("doc_id"), posexplode_outer(
-        when(size(col("sigs")) < 3,
-          array().cast("array<struct<w2:bigint,w1:bigint,w0:bigint>>"))
-          .otherwise(transform(sequence(lit(3), size(col("sigs"))), i =>
-            struct(element_at(col("sigs"), i - 2).as("w2"),
-              element_at(col("sigs"), i - 1).as("w1"),
-              element_at(col("sigs"), i).as("w0"))))).as(Seq("_p0", "t")))
+        windows(col("sigs"), 3, "struct<w2:bigint,w1:bigint,w0:bigint>")(w =>
+          struct(w(0).as("w2"), w(1).as("w1"), w(2).as("w0")))).as(Seq("_p0", "t")))
       .filter(col("t").isNotNull)
       .select(col("doc_id"), (col("_p0") + 3).cast("long").as("pos"),
         col("t.w2"), col("t.w1"), col("t.w0"))
@@ -515,17 +527,14 @@ object TextOps {
     val uni = trainToks.groupBy("w").agg(count(lit(1)).as("c1"))
     val stats = trainToks.agg(count(lit(1)).as("n_train"))
     val bi = train
-      .select(explode_outer(when(size(col("sigs")) < 2,
-        array().cast("array<struct<w1:bigint,w0:bigint>>"))
-        .otherwise(transform(sequence(lit(2), size(col("sigs"))), i =>
-          struct(element_at(col("sigs"), i - 1).as("w1"),
-            element_at(col("sigs"), i).as("w0"))))).as("b"))
+      .select(explode_outer(windows(col("sigs"), 2, "struct<w1:bigint,w0:bigint>")(w =>
+        struct(w(0).as("w1"), w(1).as("w0")))).as("b"))
       .filter(col("b").isNotNull)
       .groupBy(col("b.w1").as("w1"), col("b.w0").as("w0"))
       .agg(count(lit(1)).as("c2"))
     val tri = triples(train).groupBy("w2", "w1", "w0").agg(count(lit(1)).as("c3"))
 
-    triples(sigs.filter(hold))
+    triples(sigDocs.filter(hold))
       .join(tri, Seq("w2", "w1", "w0"), "left")
       .join(bi.select(col("w1").as("w2"), col("w0").as("w1"),
         col("c2").as("c2ctx")), Seq("w2", "w1"), "left")
@@ -702,24 +711,19 @@ object TextOps {
     * fan-out (contrast the capped self-join generators, q51/q56/q57).
     */
   def dsirWeights(docs: DataFrame, buckets: Int = 1024): DataFrame = {
-    val sigs = docs.select(col("doc_id"),
-      transform(tokens(col("text")), tokenSig(_)).as("sigs"))
+    val sigDocs = docs.select(col("doc_id"), sigs(col("text")).as("sigs"))
     val isTarget = pmod(col("doc_id"), lit(50L)) === 0L
     // positional hashed-bigram features: (doc_id, pos, bucket)
     def feats(df: DataFrame) = df
-      .select(col("doc_id"), posexplode_outer(
-        when(size(col("sigs")) < 2, array().cast("array<bigint>"))
-          .otherwise(transform(sequence(lit(1), size(col("sigs")) - 1), i =>
-            pmod(pmod(element_at(col("sigs"), i) * lit(131L)
-              + element_at(col("sigs"), i + 1), lit(FpMod)),
-              lit(buckets.toLong))))).as(Seq("_p0", "b")))
+      .select(col("doc_id"), posexplode_outer(windows(col("sigs"), 2, "bigint")(w =>
+        pmod(gramCode(w), lit(buckets.toLong)))).as(Seq("_p0", "b")))
       .filter(col("b").isNotNull)
       .select(col("doc_id"), (col("_p0") + 1).cast("long").as("pos"), col("b"))
-    val tgt = feats(sigs.filter(isTarget)).groupBy("b")
+    val tgt = feats(sigDocs.filter(isTarget)).groupBy("b")
       .agg(count(lit(1)).as("t_cnt"))
     // the raw feature stream feeds both the count vector and the probe:
     // one text pass, on the release ledger
-    val rawFeats = Intermediates.persist(feats(sigs.filter(!isTarget)))
+    val rawFeats = Intermediates.persist(feats(sigDocs.filter(!isTarget)))
     val raw = rawFeats.groupBy("b").agg(count(lit(1)).as("r_cnt"))
     rawFeats
       .join(broadcast(tgt), Seq("b"), "left")
@@ -746,7 +750,7 @@ object TextOps {
       // transform into the scan as an inferred size()>0 DataFilter,
       // doubling the per-row compute (see DedupOps.shingleIndex)
       .select(col("doc_id"),
-        explode_outer(transform(tokens(col("text")), tokenSig(_))).as("sig"))
+        explode_outer(sigs(col("text"))).as("sig"))
       .filter(col("sig").isNotNull)
       .select(col("doc_id"), explode(sequence(lit(0), lit(bits - 1))).as("j"),
         (col("sig") * lit(2654435761L)).as("h"))
